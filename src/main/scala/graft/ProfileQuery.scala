@@ -10,6 +10,12 @@ import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd, SparkList
   */
 object ProfileQuery {
   def main(args: Array[String]): Unit = {
+    // reject unknown names before starting Spark, naming the valid ones
+    val registry = SparkEntry.queries
+    val unknown = args.filterNot(registry.contains)
+    require(unknown.isEmpty,
+      s"unknown query name(s): ${unknown.mkString(", ")}; valid names: " +
+        registry.keys.toSeq.sorted.mkString(", "))
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
     val spark = SessionTuning.tuned(SparkSession.builder())
@@ -25,7 +31,9 @@ object ProfileQuery {
     val jobStart = new java.util.concurrent.ConcurrentHashMap[Int, (Long, String)]()
     case class Acc(var n: Int = 0, var ms: Long = 0L)
     val byDesc = new java.util.concurrent.ConcurrentHashMap[String, Acc]()
-    class StAcc { var n = 0; var tasks = 0L; var ms = 0L; var wall = 0L }
+    // `untimed` counts completed stages that lack a submission or
+    // completion time: their wall is unknown, not zero
+    class StAcc { var n = 0; var tasks = 0L; var ms = 0L; var wall = 0L; var untimed = 0 }
     val stageAgg = new java.util.concurrent.ConcurrentHashMap[String, StAcc]()
     @volatile var jobs = 0
     @volatile var jobMs = 0L
@@ -56,8 +64,10 @@ object ProfileQuery {
           acc.n += 1
           acc.tasks += e.stageInfo.numTasks
           acc.ms += e.stageInfo.taskMetrics.executorRunTime
-          acc.wall += e.stageInfo.completionTime.getOrElse(0L) -
-            e.stageInfo.submissionTime.getOrElse(0L)
+          (e.stageInfo.submissionTime, e.stageInfo.completionTime) match {
+            case (Some(t0), Some(t1)) => acc.wall += t1 - t0
+            case _ => acc.untimed += 1
+          }
           acc
         })
       }
@@ -67,7 +77,7 @@ object ProfileQuery {
     spark.catalog.clearCache()
     val reps = sys.env.getOrElse("SPARK_GRAFT_PROFILE_REPS", "1").toInt
     args.foreach { name =>
-      val fn = SparkEntry.queries(name)
+      val fn = registry(name)
       (1 to reps).foreach { rep =>
         jobStart.clear(); byDesc.clear(); stageAgg.clear(); jobs = 0; jobMs = 0; stages = 0; taskMs = 0
         spark.sparkContext.addSparkListener(listener)
@@ -75,7 +85,7 @@ object ProfileQuery {
         val ok = try { fn(spark, sfDir).count(); true } catch {
           case e: Throwable => println(s"FAILED $name: $e"); false }
         val wall = (System.nanoTime() - t0) / 1e9
-        Thread.sleep(300) // let listener events drain
+        org.apache.spark.sql.GraftSqlBridge.awaitListenerBus(spark)
         spark.sparkContext.removeSparkListener(listener)
         spark.catalog.clearCache()
         println(f"== $name rep$rep ok=$ok wall=$wall%.2fs jobs=$jobs jobTime=${jobMs / 1000.0}%.2fs " +
@@ -84,10 +94,13 @@ object ProfileQuery {
         byDesc.asScala.toSeq.sortBy(-_._2.ms).take(12).foreach { case (d, a) =>
           println(f"   ${a.ms / 1000.0}%7.2fs n=${a.n}%-4d ${d.take(100)}")
         }
-        println("  -- top stages by stage wall (stageWall / taskTime / #stages / #tasks):")
+        println("  -- top stages by stage wall (stageWall / taskTime / #stages / #tasks / #untimed):")
         stageAgg.asScala.toSeq.sortBy(-_._2.wall).take(15).foreach { case (nm, a) =>
-          println(f"   ${a.wall / 1000.0}%7.2fs ${a.ms / 1000.0}%7.2fs n=${a.n}%-4d t=${a.tasks}%-6d $nm")
+          println(f"   ${a.wall / 1000.0}%7.2fs ${a.ms / 1000.0}%7.2fs n=${a.n}%-4d t=${a.tasks}%-6d u=${a.untimed}%-3d $nm")
         }
+        val untimed = stageAgg.asScala.values.map(_.untimed).sum
+        if (untimed > 0)
+          println(s"  -- $untimed stage(s) lacked a timestamp; stage walls above exclude them")
       }
     }
     spark.stop()

@@ -1172,10 +1172,9 @@ final class StreamingStatementRunner(spark: SparkSession,
     * enrichments at their arrival-time dim state).
     *
     * Execution: every topic-backed ref becomes a signed delta SIDE
-    * (upsert dims through [[graft.streaming.ChangelogNormalize]] —
-    * each revision is retract-prior + add-new; append facts sign +1);
-    * the sides' encoded deltas UNION into one driving stream, and per
-    * micro-batch the exact telescoped delta rule applies:
+    * (append facts sign +1; retract dims carry their `__op` sign); the
+    * sides' encoded records UNION into one stateless driving stream,
+    * and per micro-batch the exact telescoped delta rule applies:
     *
     *   Δ(S₀⋈…⋈Sₖ) = Σᵢ PRE₀ ⋈ … ⋈ PREᵢ₋₁ ⋈ Δᵢ ⋈ POSTᵢ₊₁ ⋈ … ⋈ POSTₖ
     *
@@ -1187,6 +1186,23 @@ final class StreamingStatementRunner(spark: SparkSession,
     * many `+I` records, net<0 that many `-D` — the retract changelog
     * downstream consumers (retract-fold aggregates, FIFO first/last)
     * already understand.
+    *
+    * Upsert (PRIMARY KEY) dims ride the union as RAW revisions and
+    * normalize per batch against the side's own JoinState snapshot:
+    * the latest record per key adds (+1), the key's pre-snapshot row
+    * retracts (−1), so a no-op revision or a tombstone for an absent
+    * key emits nothing. The snapshot already holds each key's current
+    * row, so the dim keeps ONE state and the query no Spark state-store
+    * operator (only the aggregate routes, which keep no row snapshot,
+    * use [[graft.streaming.ChangelogNormalize]]). The normalized delta is
+    * computed once per batch and reused by the terms, the post fold
+    * and the snapshot write; a crash-replayed batch re-reads the same
+    * pre-snapshot generation and so rebuilds the same delta. A
+    * checkpoint written while upsert dims still went through the
+    * state-store normalizer does NOT resume: Spark rejects the plan's
+    * removed stateful operators at its first micro-batch
+    * (`STREAMING_STATEFUL_OPERATOR_NOT_MATCH_IN_STATE_METADATA`) —
+    * restart such a pipeline on a fresh checkpoint/topic root.
     *
     * State ([[graft.streaming.JoinState]]): insert-only sides keep an
     * append-only per-batch parquet log (O(Δ) writes); changelog sides
@@ -1233,7 +1249,7 @@ final class StreamingStatementRunner(spark: SparkSession,
                                shape: RegularShape): StreamingQuery = {
     import graft.streaming.JoinState
     import org.apache.spark.sql.GraftSqlBridge
-    import org.apache.spark.sql.types.{LongType, TimestampType}
+    import org.apache.spark.sql.types.{LongType, StructField, TimestampType}
     require(meta.changelogMode == ChangelogMode.Retract,
       s"INSERT INTO ${target.qualified}: the regular join emits a retract " +
         "changelog — the target must declare changelog.mode = 'retract'")
@@ -1254,7 +1270,8 @@ final class StreamingStatementRunner(spark: SparkSession,
       * the steady binding for refs [[restoreRefView]] cannot re-derive
       * (external MemoryStream views). */
     case class Side(ref: String, src: String, viewSchema: StructType,
-                    signed: DataFrame, appendOnly: Boolean, restore: DataFrame)
+                    signed: DataFrame, appendOnly: Boolean, restore: DataFrame,
+                    upsertKey: Seq[String] = Nil)
     // synthetic occurrence views of STATIC refs (a self-join site of a
     // batch table): bound in the main session only for statement-time
     // validation, then dropped with the side views and re-bound per
@@ -1278,13 +1295,21 @@ final class StreamingStatementRunner(spark: SparkSession,
         val isUpsert = m.changelogMode == ChangelogMode.Upsert && m.primaryKey.nonEmpty
         val viewSchema = StructType(sunkSchema(m, declared).fields
           .filter(f => declared.fieldNames.contains(f.name)))
-        val signed = signedChangelogStream(src, m).select(
-          (viewSchema.fieldNames.map(c => col(s"`$c`")) :+
-            col(RetractAggRewrite.SignCol)).toIndexedSeq: _*)
         synchronized { promotedDrivers += catalog.qualify(src) }
-        Some(Side(r, src, viewSchema, signed,
-          appendOnly = !isUpsert && m.changelogMode != ChangelogMode.Retract,
-          restore = signed))
+        if (isUpsert) {
+          // raw revisions: normalized per batch against the side's own
+          // JoinState snapshot, so the stream itself keeps no state
+          val revisions = upsertRevisionStream(src, m)
+          Some(Side(r, src, viewSchema, revisions, appendOnly = false,
+            restore = revisions, upsertKey = m.primaryKey))
+        } else {
+          val signed = signedChangelogStream(src, m).select(
+            (viewSchema.fieldNames.map(c => col(s"`$c`")) :+
+              col(RetractAggRewrite.SignCol)).toIndexedSeq: _*)
+          Some(Side(r, src, viewSchema, signed,
+            appendOnly = m.changelogMode != ChangelogMode.Retract,
+            restore = signed))
+        }
       } else if (spark.catalog.tableExists(src) && spark.table(src).isStreaming) {
         val v = spark.table(src) // external stream view (e.g. MemoryStream)
         Some(Side(r, src, v.schema, v.withColumn(RetractAggRewrite.SignCol, lit(1)),
@@ -1311,16 +1336,47 @@ final class StreamingStatementRunner(spark: SparkSession,
     def encSchema(s: StructType): StructType = StructType(s.fields.map { f =>
       f.dataType match { case TimestampType => f.copy(dataType = LongType); case _ => f }
     })
-    def encodeSide(side: Side, idx: Int): DataFrame = {
-      val cols = side.viewSchema.fields.map { f =>
+    def encodeCols(fields: Seq[StructField]): Seq[org.apache.spark.sql.Column] =
+      fields.map { f =>
         f.dataType match {
           case TimestampType => unix_micros(col(s"`${f.name}`")).as(f.name)
           case _ => col(s"`${f.name}`")
         }
       }
-      side.signed.select(lit(idx).as("__side"),
-        to_json(struct(cols.toIndexedSeq: _*)).as("__payload"),
-        col(RetractAggRewrite.SignCol).cast("int").as("__sign"))
+    def keySchemaOf(side: Side): StructType =
+      StructType(side.viewSchema.fields.filter(f => side.upsertKey.contains(f.name)))
+    // every side carries (__key, __ord): an upsert side's encoded
+    // primary key and record offset (its payload is null for a
+    // tombstone); null for signed sides, whose `__sign` is final
+    def encodeSide(side: Side, idx: Int): DataFrame = {
+      val payload = to_json(struct(encodeCols(side.viewSchema.fields.toIndexedSeq): _*))
+      if (side.upsertKey.nonEmpty)
+        side.signed.select(lit(idx).as("__side"),
+          when(col("__tomb"), lit(null).cast("string")).otherwise(payload).as("__payload"),
+          lit(1).as("__sign"),
+          to_json(struct(encodeCols(keySchemaOf(side).fields.toIndexedSeq): _*)).as("__key"),
+          col("__ord"))
+      else
+        side.signed.select(lit(idx).as("__side"), payload.as("__payload"),
+          col(RetractAggRewrite.SignCol).cast("int").as("__sign"),
+          lit(null).cast("string").as("__key"), lit(null).cast(LongType).as("__ord"))
+    }
+    /** An upsert side's batch revisions as its signed delta against the
+      * pre-snapshot: per key the LATEST record (by offset) adds (+1)
+      * and the key's pre-state row retracts (−1). A no-op revision, or
+      * a tombstone for an absent key, emits nothing. */
+    def normalizeUpsert(rows: DataFrame, preFolded: DataFrame, side: Side): DataFrame = {
+      val latest = rows.groupBy("__key")
+        .agg(max(struct(col("__ord"), col("__payload"))).getField("__payload").as("__new"))
+      val prior = preFolded.where(col("__cnt") > 0L).select(
+        to_json(from_json(col("__payload"), encSchema(keySchemaOf(side)))).as("__key"),
+        col("__payload").as("__old"))
+      latest.join(prior, Seq("__key"), "left")
+        .where(!(col("__old") <=> col("__new")))
+        .select(explode(array(
+          struct(col("__old").as("__payload"), lit(-1).as("__sign")),
+          struct(col("__new").as("__payload"), lit(1).as("__sign")))).as("__d"))
+        .select("__d.*").where(col("__payload").isNotNull)
     }
     def decodeCols(side: Side): Seq[org.apache.spark.sql.Column] =
       side.viewSchema.fields.toIndexedSeq.map { f =>
@@ -1793,12 +1849,14 @@ final class StreamingStatementRunner(spark: SparkSession,
             stmtSession.table(src).createOrReplaceTempView(r)
           }
           val batch = GraftSqlBridge.toSession(stmtSession, batch0).persist()
+          // upsert sides' normalized deltas, computed once per batch
+          val normalized = scala.collection.mutable.Map.empty[Int, DataFrame]
           try {
-            val touched = batch.groupBy("__side").count().collect()
-              .map(r => r.getInt(0)).toSet
+            // one shuffle-free pass: fills the cache, returns side ids
+            val touched = StreamingStatementRunner.sideIds(batch)
             if (touched.nonEmpty) {
-              val deltaRows: Map[Int, DataFrame] = touched.map(i =>
-                i -> batch.where(col("__side") === i)).toMap
+              val deltaRows = scala.collection.mutable.Map.empty[Int, DataFrame] ++
+                touched.map(i => i -> batch.where(col("__side") === i))
               // per-side PRE/POST frames + pending state writes
               val pre = new Array[DataFrame](sides.size)
               val post = new Array[DataFrame](sides.size)
@@ -1833,6 +1891,12 @@ final class StreamingStatementRunner(spark: SparkSession,
                 } else {
                   val (preExpl, preFolded, readGen) = JoinState.readSnapshot(stmtSession, dir, batchId)
                   pre(i) = decode(preExpl, s)
+                  // an upsert side's raw revisions become its signed
+                  // delta here; occurrences of one table share it
+                  if (s.upsertKey.nonEmpty) deltaRows.get(i).foreach { rows =>
+                    deltaRows(i) = normalized.getOrElseUpdate(owner,
+                      normalizeUpsert(rows, preFolded, s).persist())
+                  }
                   post(i) = deltaRows.get(i) match {
                     case Some(d) =>
                       val folded = JoinState.foldSnapshot(preFolded, d)
@@ -1935,7 +1999,14 @@ final class StreamingStatementRunner(spark: SparkSession,
               }
               graft.streaming.FaultInjection.point("join-pre-commit")
             }
-          } finally batch.unpersist()
+          } finally {
+            // every term shadows all sides before it resolves, so the
+            // views need not outlive the batch; left bound, they pin
+            // its plans (and each scan's Hadoop conf) until the next one
+            sides.foreach(s => stmtSession.catalog.dropTempView(s.ref))
+            normalized.values.foreach(_.unpersist())
+            batch.unpersist()
+          }
         }
         ()
       }.start()
@@ -2009,12 +2080,32 @@ final class StreamingStatementRunner(spark: SparkSession,
           s"$$.${RetractAggRewrite.KeepCol}") === "false",
         lit(null).cast("binary")).otherwise(col("value")))
 
+  /** An upsert table's topic as RAW revision records for the regular
+    * join, which normalizes them per micro-batch against its own
+    * JoinState snapshot: the declared columns decoded from key + value,
+    * `__tomb` (a tombstone, a `__keep=false` record included) and
+    * `__ord` (the record offset, latest wins per key). A stateless
+    * projection of the file scan. */
+  private def upsertRevisionStream(bare: String, meta: TableMeta): DataFrame = {
+    val declared = meta.schema.getOrElse(throw new IllegalArgumentException(
+      s"table $bare: no declared schema to decode its changelog"))
+    val keySchema = StructType(declared.fields.filter(f => meta.primaryKey.contains(f.name)))
+    val valueSchema = StructType(declared.fields.filterNot(f => meta.primaryKey.contains(f.name)))
+    withKeepAsTombstone(Topics.readStreamRecords(spark, bind(bare).topic, conf))
+      .select(from_json(col("key").cast("string"), keySchema).as("__k"),
+        from_json(col("value").cast("string"), valueSchema).as("__v"),
+        col("value").isNull.as("__tomb"), col("offset").as("__ord"))
+      .select(col("__k.*"), col("__v.*"), col("__tomb"), col("__ord"))
+  }
+
   /** A changelog driver's topic as a SIGNED revision stream (`__sign`
-    * ∈ {+1, −1}) — the input [[startRetractAgg]] folds. Upsert drivers
-    * go through [[graft.streaming.ChangelogNormalize]] (per-key state
-    * expands each revision into retract-prior + add-new; tombstones
-    * retract alone); retract drivers already carry the sign as their
-    * `__op` tag. */
+    * ∈ {+1, −1}) — the input [[startRetractAgg]] and the merge
+    * aggregates fold. Upsert drivers go through
+    * [[graft.streaming.ChangelogNormalize]] (per-key state expands each
+    * revision into retract-prior + add-new; tombstones retract alone);
+    * retract drivers already carry the sign as their `__op` tag. The
+    * regular join reads upsert dims through [[upsertRevisionStream]]
+    * instead: its JoinState snapshot already holds each key's row. */
   private def signedChangelogStream(bare: String, meta: TableMeta,
                                     needProvenance: Boolean = false): DataFrame = {
     val isUpsert = meta.changelogMode == ChangelogMode.Upsert && meta.primaryKey.nonEmpty
@@ -2767,6 +2858,21 @@ final class StreamingStatementRunner(spark: SparkSession,
         om.get(n).getLong(0)
     }.sum
   }.sum
+}
+
+object StreamingStatementRunner {
+
+  /** The distinct `__side` ids of a persisted regular-join batch, in ONE
+    * job with no shuffle: the scan fills every partition's cache, and
+    * each task returns only the ids it saw. */
+  private def sideIds(batch: DataFrame): Set[Int] =
+    batch.select("__side").queryExecution.toRdd
+      .mapPartitions { rows =>
+        val seen = scala.collection.mutable.Set.empty[Int]
+        rows.foreach(r => seen += r.getInt(0))
+        seen.iterator
+      }
+      .collect().toSet
 }
 
 /** Shape of a select's aggregation surface, detected PRE-analysis:

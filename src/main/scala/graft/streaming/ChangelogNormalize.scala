@@ -36,14 +36,14 @@ final case class SignedRec(k: String, v: String, sign: Int, tsUs: Long, ord: Lon
   * exchange, checkpoint-recovered across restarts. The per-group sort
   * is over ONE key's rows within ONE micro-batch — bounded by the
   * key's per-trigger revision count, never the corpus.
+  *
+  * Consumers: the retraction-folding and merge aggregates, which keep
+  * no row state of their own. The regular join does NOT use this
+  * operator: it normalizes upsert dims per batch against its
+  * `JoinState` snapshot, which already holds each key's current row.
   */
 object ChangelogNormalize {
 
-  /** Normalize raw upsert-topic records (the `Topics.recordSchema`
-    * shape, TOMBSTONES INCLUDED) into signed revision rows. Within a
-    * micro-batch a key's revisions apply in OFFSET order — the topic's
-    * total order per key — so cross-revision retractions pair up
-    * deterministically regardless of shuffle arrival order. */
   /** One decoded retract-topic row headed into provenance matching:
     * `content` = the row's data columns as canonical JSON (the -U
     * alphabet names rows BY VALUE), `op` its changelog tag, `offset`
@@ -94,7 +94,13 @@ object ChangelogNormalize {
       }
   }
 
-  /** CHECKPOINT-FORMAT NOTE (restart contract): round 15 widened this
+  /** Normalize raw upsert-topic records (the `Topics.recordSchema`
+    * shape, TOMBSTONES INCLUDED) into signed revision rows. Within a
+    * micro-batch a key's revisions apply in OFFSET order — the topic's
+    * total order per key — so cross-revision retractions pair up
+    * deterministically regardless of shuffle arrival order.
+    *
+    * CHECKPOINT-FORMAT NOTE (restart contract): round 15 widened this
     * operator's per-key state from `String` (current value) to
     * `(String, Long)` (value, offset of its add) to carry the
     * provenance first/last fold over. A runner restarted on a

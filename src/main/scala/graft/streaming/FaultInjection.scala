@@ -23,17 +23,20 @@ object FaultInjection {
     extends RuntimeException(s"injected crash at '$at'")
 
   @volatile private var remaining: Int = -1 // -1 = disarmed
+  @volatile private var only: Option[String] = None
 
-  /** The `k`-th subsequent [[point]] call throws (k >= 1). */
-  def arm(k: Int): Unit = {
+  /** The `k`-th subsequent [[point]] call throws (k >= 1); with `at`,
+    * only calls of that named point count. */
+  def arm(k: Int, at: Option[String] = None): Unit = {
     require(k >= 1, s"arm($k): k must be >= 1")
+    only = at
     remaining = k
   }
 
   def disarm(): Unit = remaining = -1
 
   def point(name: String): Unit = {
-    if (remaining >= 0) {
+    if (remaining >= 0 && only.forall(_ == name)) {
       // single-writer discipline (one join statement's batch thread +
       // the arming test thread between drains): a plain decrement on
       // the volatile is race-free in every supported schedule

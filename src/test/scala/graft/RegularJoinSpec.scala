@@ -1442,4 +1442,160 @@ class RegularJoinSpec extends SparkSpec {
       "a PRIMARY-KEY (upsert) target keeps the documented snapshot semantics")
     r.stopAll()
   }
+
+  // ── S6 INNER shape (orders JOIN two upsert dims into a retract
+  //    target): upsert sides normalize against the join's own snapshot,
+  //    so the query keeps no Spark state-store operator ──
+
+  /** A runner for `o JOIN cust JOIN prod` into `<tag>_enr`, drained
+    * once over two customers, one product and two orders. */
+  private def s6(tag: String): (StreamingStatementRunner, TopicConf) = {
+    val conf = newConf(tag)
+    val r = new StreamingStatementRunner(spark, topicConf = Some(conf))
+    r.registerTopicSource(s"${tag}_cust_feed", custOpSchema)
+    r.registerTopicSource(s"${tag}_prod_feed", StructType(prodSchema.fields :+
+      StructField("__op", StringType)))
+    r.registerTopicSource(s"${tag}_ord_feed", ordSchema)
+    r.runScript(s"""
+      CREATE TABLE ${tag}_cust (cid STRING, name STRING, __op STRING,
+        PRIMARY KEY (cid) NOT ENFORCED) DISTRIBUTED INTO 1 BUCKETS;
+      INSERT INTO ${tag}_cust SELECT cid, name, __op FROM ${tag}_cust_feed;
+      CREATE TABLE ${tag}_prod (pid STRING, brand STRING, price DOUBLE,
+        __op STRING, PRIMARY KEY (pid) NOT ENFORCED) DISTRIBUTED INTO 1 BUCKETS;
+      INSERT INTO ${tag}_prod SELECT pid, brand, price, __op FROM ${tag}_prod_feed;
+      CREATE TABLE ${tag}_enr (order_id BIGINT, cust_name STRING,
+        brand STRING, amount DOUBLE, __op STRING) WITH ('changelog.mode' = 'retract');
+      INSERT INTO ${tag}_enr (order_id, cust_name, brand, amount)
+      SELECT o.order_id, c.name, p.brand, o.amount FROM ${tag}_ord_feed o
+      JOIN ${tag}_cust c ON o.cid = c.cid
+      JOIN ${tag}_prod p ON o.pid = p.pid""")
+    Topics.appendJson(Seq(RjCustOp("c1", "Ann", "+I"), RjCustOp("c2", "Bob", "+I")).toDF(),
+      s"${tag}_cust_feed", conf, Nil, 1)
+    Topics.appendJson(Seq(("p1", "Nike", 50.0, "+I")).toDF("pid", "brand", "price", "__op"),
+      s"${tag}_prod_feed", conf, Nil, 1)
+    Topics.appendJson(Seq(RjOrd(1, "c1", "p1", 10.0), RjOrd(2, "c2", "p1", 20.0)).toDF(),
+      s"${tag}_ord_feed", conf, Nil, 1)
+    r.processAllAvailable()
+    (r, conf)
+  }
+
+  /** Append customer records in ONE file in the given (offset) order,
+    * drain, and return how many records the drain sank. */
+  private def reviseCust(r: StreamingStatementRunner, conf: TopicConf, tag: String,
+                         rows: RjCustOp*): Long = {
+    val before = spark.table(s"${tag}_enr").count()
+    Topics.appendJson(rows.toDF().coalesce(1), s"${tag}_cust_feed", conf, Nil, 2)
+    r.processAllAvailable()
+    spark.table(s"${tag}_enr").count() - before
+  }
+
+  /** The folded net equals the batch join over the FINAL dims, and the
+    * join query keeps no state-store operator. */
+  private def assertS6Law(r: StreamingStatementRunner, tag: String): Unit = {
+    val orders = Seq(RjOrd(1, "c1", "p1", 10.0), RjOrd(2, "c2", "p1", 20.0)).toDF()
+    val expected = orders
+      .join(spark.table(s"${tag}_cust"), "cid")
+      .join(spark.table(s"${tag}_prod"), "pid")
+      .select(col("order_id"), col("name"), col("brand"), col("amount"))
+      .collect().map(x => x.getLong(0) -> x.toSeq.drop(1)).toMap
+    assert(net(s"${tag}_enr", "order_id", "cust_name", "brand", "amount") === expected)
+    val join = r.activeQueries.filter(_.name.contains(s"${tag}_enr"))
+    assert(join.size === 1 && join.head.lastProgress != null)
+    assert(join.head.lastProgress.stateOperators.isEmpty,
+      "upsert dims normalize against the join snapshot: no state-store operator")
+  }
+
+  test("S6 upsert dim: several revisions of one key in one micro-batch — the latest offset wins") {
+    val (r, conf) = s6("rjn1")
+    val sunk = reviseCust(r, conf, "rjn1", RjCustOp("c1", "A1", "+U"),
+      RjCustOp("c1", "A2", "+U"), RjCustOp("c1", "A3", "+U"))
+    assert(net("rjn1_enr", "order_id", "cust_name", "brand", "amount")(1L) ===
+      Seq("A3", "Nike", 10.0))
+    assert(sunk === 2L, "one retraction of Ann's row and one add of A3's — intermediate revisions net away")
+    assertS6Law(r, "rjn1")
+    r.stopAll()
+  }
+
+  test("S6 upsert dim: a revision followed by a tombstone in one micro-batch retracts the key's rows") {
+    val (r, conf) = s6("rjn2")
+    val sunk = reviseCust(r, conf, "rjn2", RjCustOp("c1", "Zed", "+U"),
+      RjCustOp("c1", "Zed", "-D"))
+    assert(!net("rjn2_enr", "order_id", "cust_name", "brand", "amount").contains(1L))
+    assert(sunk === 1L, "only the retraction of Ann's joined row")
+    assertS6Law(r, "rjn2")
+    r.stopAll()
+  }
+
+  test("S6 upsert dim: a no-op revision sinks no records") {
+    val (r, conf) = s6("rjn3")
+    assert(reviseCust(r, conf, "rjn3", RjCustOp("c1", "Ann", "+U")) === 0L)
+    assertS6Law(r, "rjn3")
+    r.stopAll()
+  }
+
+  test("S6 upsert dim: a tombstone for a key never seen sinks no records") {
+    val (r, conf) = s6("rjn4")
+    assert(reviseCust(r, conf, "rjn4", RjCustOp("c9", "x", "-D")) === 0L)
+    assertS6Law(r, "rjn4")
+    r.stopAll()
+  }
+
+  test("S6 upsert dim fed by a merge-aggregate: a __keep=false record retracts like a tombstone") {
+    val conf = newConf("rjn5")
+    val r = new StreamingStatementRunner(spark, topicConf = Some(conf))
+    r.registerTopicSource("rjn5_rev_feed", StructType(Seq(
+      StructField("rid", LongType), StructField("cid", StringType),
+      StructField("pts", DoubleType), StructField("op", StringType))))
+    r.registerTopicSource("rjn5_cust_feed", custOpSchema)
+    r.registerTopicSource("rjn5_ord_feed", ordSchema)
+    // rjn5_tier is a merge-aggregate target (max forces the value-set
+    // route): a group failing HAVING is written with __keep=false
+    r.runScript("""
+      CREATE TABLE rjn5_rev (rid BIGINT, cid STRING, pts DOUBLE, __op STRING,
+        PRIMARY KEY (rid) NOT ENFORCED) DISTRIBUTED INTO 1 BUCKETS;
+      INSERT INTO rjn5_rev
+      SELECT rid, cid, pts, CASE WHEN op = 'DEL' THEN '-D' ELSE '+U' END FROM rjn5_rev_feed;
+      CREATE TABLE rjn5_tier (cid STRING, n BIGINT, mx DOUBLE,
+        PRIMARY KEY (cid) NOT ENFORCED) DISTRIBUTED INTO 1 BUCKETS;
+      INSERT INTO rjn5_tier
+      SELECT cid, count(*) AS n, max(pts) AS mx FROM rjn5_rev
+      GROUP BY cid HAVING count(*) % 2 = 1;
+      CREATE TABLE rjn5_cust (cid STRING, name STRING, __op STRING,
+        PRIMARY KEY (cid) NOT ENFORCED) DISTRIBUTED INTO 1 BUCKETS;
+      INSERT INTO rjn5_cust SELECT cid, name, __op FROM rjn5_cust_feed;
+      CREATE TABLE rjn5_enr (order_id BIGINT, cust_name STRING, n BIGINT,
+        mx DOUBLE, __op STRING) WITH ('changelog.mode' = 'retract');
+      INSERT INTO rjn5_enr (order_id, cust_name, n, mx)
+      SELECT o.order_id, c.name, t.n, t.mx FROM rjn5_ord_feed o
+      JOIN rjn5_cust c ON o.cid = c.cid
+      JOIN rjn5_tier t ON o.cid = t.cid""")
+    def feedRev(epoch: Int, rows: (Long, String, Double, String)*): Unit = {
+      Topics.appendJson(rows.toSeq.toDF("rid", "cid", "pts", "op"),
+        "rjn5_rev_feed", conf, Nil, epoch)
+      r.processAllAvailable()
+    }
+    def state() = net("rjn5_enr", "order_id", "cust_name", "n", "mx")
+    val orders = Seq(RjOrd(1, "c1", "p1", 10.0), RjOrd(2, "c2", "p1", 20.0))
+    Topics.appendJson(Seq(RjCustOp("c1", "Ann", "+I"), RjCustOp("c2", "Bob", "+I")).toDF(),
+      "rjn5_cust_feed", conf, Nil, 1)
+    Topics.appendJson(orders.toDF(), "rjn5_ord_feed", conf, Nil, 1)
+    feedRev(1, (1L, "c1", 5.0, "+"), (2L, "c2", 7.0, "+"))
+    assert(state() === Map(1L -> Seq("Ann", 1L, 5.0), 2L -> Seq("Bob", 1L, 7.0)))
+    // c1's second revision → n = 2 fails HAVING: the tier writes c1
+    // with __keep=false, which the join must read as a tombstone
+    feedRev(2, (3L, "c1", 9.0, "+"))
+    assert(state() === Map(2L -> Seq("Bob", 1L, 7.0)),
+      "a __keep=false dim record must retract the key's joined rows")
+    // a third revision → n = 3 passes again: the row comes back
+    feedRev(3, (4L, "c1", 2.0, "+"))
+    assert(state() === Map(1L -> Seq("Ann", 3L, 9.0), 2L -> Seq("Bob", 1L, 7.0)))
+    val expected = orders.toDF()
+      .join(spark.table("rjn5_cust"), "cid").join(spark.table("rjn5_tier"), "cid")
+      .select(col("order_id"), col("name"), col("n"), col("mx"))
+      .collect().map(x => x.getLong(0) -> x.toSeq.drop(1)).toMap
+    assert(state() === expected)
+    val join = r.activeQueries.filter(_.name.contains("rjn5_enr"))
+    assert(join.size === 1 && join.head.lastProgress.stateOperators.isEmpty)
+    r.stopAll()
+  }
 }

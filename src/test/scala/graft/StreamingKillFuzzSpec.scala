@@ -40,6 +40,18 @@ class StreamingKillFuzzSpec extends SparkSpec {
     soakChain("kfzc", 7717)
   }
 
+  // INNER S6 shape: orders JOIN two upsert dims into a retract target,
+  // the customer dim revised every epoch (several revisions of a key in
+  // one append, tombstones, deletes of absent keys). The crash lands
+  // between the dim snapshot publish and the batch commit: the replay
+  // must re-read the pre-publish snapshot and rebuild the SAME
+  // normalized delta, or a revision retracts twice
+  (0 until 3).foreach { idx =>
+    test(s"kill fuzz S6 seed $idx: INNER join over per-epoch upsert revisions resumes exactly after a crash between snapshot publish and commit") {
+      soakS6(s"kfs$idx", 9100 + idx * 31)
+    }
+  }
+
   private def isInjected(e: Throwable): Boolean = {
     var t: Throwable = e
     var depth = 0
@@ -54,8 +66,9 @@ class StreamingKillFuzzSpec extends SparkSpec {
     * stop the dead runner, build a fresh one via `mk`, and finish the
     * drain disarmed. Returns (runner, crashed). */
   private def drainWithKill(r0: StreamingStatementRunner, armK: Int,
-                            mk: () => StreamingStatementRunner): (StreamingStatementRunner, Boolean) = {
-    if (armK > 0) FaultInjection.arm(armK)
+                            mk: () => StreamingStatementRunner,
+                            at: Option[String] = None): (StreamingStatementRunner, Boolean) = {
+    if (armK > 0) FaultInjection.arm(armK, at)
     try { r0.processAllAvailable(); FaultInjection.disarm(); (r0, false) }
     catch {
       case e: Throwable if isInjected(e) =>
@@ -249,6 +262,90 @@ class StreamingKillFuzzSpec extends SparkSpec {
       fc.join(b, c("t") === b("t"), "right")
         .select(f("order_id"), f("uid"), c("t"), b("label")),
       Seq("order_id", "uid", "t", "label"))
+  }
+
+  private def soakS6(tag: String, seed: Int): Unit = {
+    val rnd = new scala.util.Random(seed)
+    val conf = TopicConf(
+      java.nio.file.Files.createTempDirectory(s"graft-$tag").toString)
+    def mk(): StreamingStatementRunner = {
+      val r = new StreamingStatementRunner(spark, topicConf = Some(conf))
+      r.registerTopicSource(s"${tag}_cust_feed", StructType(Seq(
+        StructField("uid", LongType), StructField("name", StringType),
+        StructField("__op", StringType))))
+      r.registerTopicSource(s"${tag}_prod_feed", StructType(Seq(
+        StructField("pid", IntegerType), StructField("brand", StringType),
+        StructField("__op", StringType))))
+      r.registerTopicSource(s"${tag}_ord_feed", StructType(Seq(
+        StructField("order_id", IntegerType), StructField("uid", LongType),
+        StructField("pid", IntegerType))))
+      r.runScript(s"""
+        CREATE TABLE ${tag}_cust (uid BIGINT, name STRING, __op STRING,
+          PRIMARY KEY (uid) NOT ENFORCED) DISTRIBUTED INTO 1 BUCKETS;
+        INSERT INTO ${tag}_cust SELECT uid, name, __op FROM ${tag}_cust_feed;
+        CREATE TABLE ${tag}_prod (pid INT, brand STRING, __op STRING,
+          PRIMARY KEY (pid) NOT ENFORCED) DISTRIBUTED INTO 1 BUCKETS;
+        INSERT INTO ${tag}_prod SELECT pid, brand, __op FROM ${tag}_prod_feed;
+        CREATE TABLE ${tag}_enr (order_id INT, name STRING, brand STRING,
+          __op STRING) WITH ('changelog.mode' = 'retract');
+        INSERT INTO ${tag}_enr (order_id, name, brand)
+        SELECT o.order_id, c.name, p.brand FROM ${tag}_ord_feed o
+        JOIN ${tag}_cust c ON o.uid = c.uid
+        JOIN ${tag}_prod p ON o.pid = p.pid""")
+      r
+    }
+    var r = mk()
+
+    val custState = scala.collection.mutable.Map.empty[Long, String]
+    val prodState = scala.collection.mutable.Map.empty[Int, String]
+    val facts = scala.collection.mutable.ArrayBuffer.empty[(Int, Long, Int)]
+    var nextOrder = 1
+    var crashes = 0
+    val points = Vector("snapshot-published", "join-post-write", "join-pre-commit")
+    (1 to 7).foreach { epoch =>
+      val orders = (0 until (1 + rnd.nextInt(3))).map { _ =>
+        val f = (nextOrder, 1L + rnd.nextInt(4), 1 + rnd.nextInt(2)); nextOrder += 1; f
+      }
+      facts ++= orders
+      Topics.appendJson(orders.toDF("order_id", "uid", "pid"),
+        s"${tag}_ord_feed", conf, Nil, epoch)
+      // one append in offset order (coalesce(1)): a key's revisions
+      // land in ONE micro-batch and the last one wins
+      val custRows = rnd.shuffle((1L to 5L).toList).take(1 + rnd.nextInt(2)).flatMap { u =>
+        (0 until (1 + rnd.nextInt(3))).map { _ =>
+          if (rnd.nextInt(4) == 0) { custState.remove(u); (u, "x", "-D") }
+          else {
+            val n = s"n${rnd.nextInt(3)}"; custState(u) = n; (u, n, "+U")
+          }
+        }
+      }
+      Topics.appendJson(custRows.toDF("uid", "name", "__op").coalesce(1),
+        s"${tag}_cust_feed", conf, Nil, epoch)
+      if (epoch == 1 || rnd.nextBoolean()) {
+        val prodRows = (1 to 2).map { p =>
+          val b = s"b$epoch-${rnd.nextInt(2)}"; prodState(p) = b; (p, b, "+U")
+        }
+        Topics.appendJson(prodRows.toDF("pid", "brand", "__op"),
+          s"${tag}_prod_feed", conf, Nil, epoch)
+      }
+      // the first epoch fills the snapshots; later ones crash at a
+      // seeded point past the snapshot publish
+      val armK = if (epoch > 1 && rnd.nextInt(4) != 0) 1 else 0
+      val (r2, crashed) = drainWithKill(r, armK, mk _,
+        Some(points(rnd.nextInt(points.size))))
+      r = r2
+      if (crashed) crashes += 1
+    }
+    assert(crashes >= 2,
+      s"[$tag] fuzz degraded: only $crashes injected crashes fired")
+    r.stopAll()
+
+    assertNetEqualsBatch(tag, s"${tag}_enr",
+      facts.toSeq.toDF("order_id", "uid", "pid")
+        .join(custState.toSeq.toDF("uid", "name"), "uid")
+        .join(prodState.toSeq.toDF("pid", "brand"), "pid")
+        .select("order_id", "name", "brand"),
+      Seq("order_id", "name", "brand"))
   }
 
   /** Multiset compare of the folded retract net vs the batch oracle. */
