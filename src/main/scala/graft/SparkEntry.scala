@@ -30,82 +30,194 @@ object SparkEntry {
   /** Exact order-independent sum of a double column via decimal. */
   private def dsum(c: Column): Column = sum(c.cast("decimal(18,4)")).cast("double")
 
-  /** Shared S1-upsert replay scaffolding for q202/q224: events ride a
-    * JSON topic feed in 4 event-time epochs (each epoch pre-folded to
-    * its max-(ts, event_id) row per key, so arrival order is
-    * deterministic and the final state equals the batch latest-per-key
-    * oracle — q05's SQL) through CREATE TABLE with PRIMARY KEY + a
-    * long-running INSERT. Micros ride as BIGINT: to_json's timestamp
-    * format is millisecond-truncating, which would silently shift the
-    * latest-by ordering off the oracle's. `restartAfter = Some(n)`
-    * kills the runner after n epochs and resumes a NEW one on the same
-    * topics + checkpoints (q224's restart gate); the restart must be
-    * invisible in the output. */
-  private def streamUpsertRunner(s: SparkSession, dir: String, suffix: String,
-                                 restartAfter: Option[Int],
-                                 chained: Boolean = false): DataFrame = {
+  /** One runner gate as a value: a statement script
+    * replayed through [[exec.StreamingStatementRunner]] over topic feeds
+    * in event-time epochs, then folded to the rows the oracle gates.
+    * A gate declares only what differs between gates:
+    *  - `topics`: its topic sources, each with its value schema (DDL);
+    *  - `script`: the statements;
+    *  - `clock` + `epochs`: the frame whose `ts_us` range is cut into
+    *    `epochs` equal-width slices ([[Epochs]]);
+    *  - `feeds`: each epoch's feeds in arrival order, as topic → frame
+    *    pairs (the outer function sees the bounds once, so a feed
+    *    derived across all epochs is built once);
+    *  - `fold`: what the gate returns once drained;
+    *  - `afterDrain`: a check run after every drain, given the runner
+    *    and a drain label `e<i>-<topic>`;
+    *  - `restartAfter`: kill the runner after that many epochs and
+    *    resume a NEW one on the same topics + checkpoints (q224).
+    * [[runGate]] owns everything else. */
+  private[graft] final case class RunnerGate(
+      topics: Seq[(String, String)],
+      script: String,
+      clock: DataFrame,
+      epochs: Int,
+      feeds: Epochs => Int => Seq[(String, DataFrame)],
+      fold: GateFold,
+      afterDrain: (exec.StreamingStatementRunner, String) => Unit = (_, _) => (),
+      restartAfter: Option[Int] = None)
+
+  /** The clock's `ts_us` range cut into equal-width epochs — integer
+    * bounds every gate's oracle re-derives the same way. */
+  private[graft] final case class Epochs(lo: Long, width: Long) {
+    def slice(df: DataFrame, i: Int): DataFrame =
+      df.where(col("ts_us") >= lo + i * width && col("ts_us") < lo + (i + 1) * width)
+  }
+
+  /** What a drained gate returns: a column projection of its target
+    * table, or the net multiset of a retract target (+1 per add, −1
+    * per `-`-tagged record, rows whose net is 1). Neither form joins,
+    * so a runner gate's returned plan is join-free by construction. */
+  private[graft] sealed trait GateFold { def apply(s: SparkSession): DataFrame }
+  private[graft] final case class Project(table: String, cols: Column*) extends GateFold {
+    def apply(s: SparkSession): DataFrame = s.table(table).select(cols: _*)
+  }
+  private[graft] final case class RetractNet(table: String, cols: String*) extends GateFold {
+    def apply(s: SparkSession): DataFrame = s.table(table)
+      .groupBy(cols.map(col): _*)
+      .agg(sum(when(col("__op").startsWith("-"), -1L).otherwise(1L)).as("__n"))
+      .where(col("__n") === 1L)
+      .select(cols.map(col): _*)
+  }
+
+  /** The one harness every runner gate goes through. It owns the temp
+    * topic root, the narrowed state width while the script starts its
+    * queries ([[graft.streaming.StreamReplay.withNarrowState]]), runner
+    * construction, epoch slicing, feed numbering (the run's k-th feed
+    * is written as topic epoch k, so with f feeds per epoch, epoch i's
+    * feeds are f·i+1..f·i+f), a drain after every feed, and the
+    * runners' lifetime: `stopAll()` runs even when
+    * a feed or an after-drain check throws, so a failed gate leaves no
+    * INSERT polling its topics through the rest of a Verify/Bench
+    * session. */
+  private[graft] def runGate(s: SparkSession, name: String, g: RunnerGate): DataFrame = {
     import graft.sources.{TopicConf, Topics}
-    import org.apache.spark.sql.types._
-    val feed = s"events_feed_$suffix"
-    val target = s"user_latest_$suffix"
-    val chain = s"user_changelog_$suffix"
-    val ev = t(s, dir, "events").select(col("user_id"), col("event_id"),
-      col("event_type"), col("value"), unix_micros(col("ts")).as("ts_us"))
-    val conf = TopicConf(
-      java.nio.file.Files.createTempDirectory(s"graft-$suffix").toString)
-    def newRunner(): exec.StreamingStatementRunner = {
-      val r = new exec.StreamingStatementRunner(s, topicConf = Some(conf))
-      r.registerTopicSource(feed, StructType(Seq(
-        StructField("user_id", LongType), StructField("event_id", LongType),
-        StructField("event_type", StringType), StructField("value", DoubleType),
-        StructField("ts_us", LongType))))
-      // `chained`: a SECOND statement consumes the FIRST one's table —
-      // no streaming source in its FROM, so the runner PROMOTES
-      // user_latest to its changelog stream (every per-epoch upsert
-      // revision flows as one record into the append table)
-      val chainDdl = if (!chained) "" else s""";
+    val conf = TopicConf(gateTopicDir(name))
+    var r: exec.StreamingStatementRunner = null
+    def start(): Unit = {
+      r = new exec.StreamingStatementRunner(s, topicConf = Some(conf))
+      graft.streaming.StreamReplay.withNarrowState(s) {
+        g.topics.foreach { case (topic, ddl) =>
+          r.registerTopicSource(topic, org.apache.spark.sql.types.StructType.fromDDL(ddl))
+        }
+        r.runScript(g.script)
+      }
+    }
+    try {
+      start()
+      val bounds = g.clock.agg(min("ts_us"), max("ts_us")).collect().head
+      val (lo, hi) = (bounds.getLong(0), bounds.getLong(1))
+      val feeds = g.feeds(Epochs(lo, math.max(1L, (hi - lo) / g.epochs + 1)))
+      var seq = 0L
+      (0 until g.epochs).foreach { i =>
+        if (g.restartAfter.contains(i)) { r.stopAll(); start() } // the "crash"
+        feeds(i).foreach { case (topic, df) =>
+          seq += 1
+          Topics.appendJson(df, topic, conf, Nil, seq)
+          r.processAllAvailable()
+          g.afterDrain(r, s"e$i-$topic")
+        }
+      }
+    } finally if (r != null) r.stopAll()
+    g.fold(s)
+  }
+
+  /** A gate's topic root. The returned frame reads these files lazily,
+    * so the dir outlives the call and is deleted at JVM exit. */
+  private def gateTopicDir(name: String): String = {
+    import java.nio.file.{Files, Path}
+    val root = Files.createTempDirectory(s"graft-$name")
+    sys.addShutdownHook {
+      try {
+        val walk = Files.walk(root)
+        try walk.sorted(java.util.Comparator.reverseOrder[Path]())
+          .forEach(p => Files.deleteIfExists(p))
+        finally walk.close()
+      } catch { case _: java.io.IOException | _: java.io.UncheckedIOException => }
+    }
+    root.toString
+  }
+
+  /** The events fixture with micros time as `ts_us`. Micros ride as
+    * BIGINT: to_json's timestamp format is millisecond-truncating,
+    * which would silently shift latest-by orderings off the oracle's.
+    * `quarter` keeps user_id % 4 = 0: most gates exercise cross-batch
+    * state, not JSON-encode throughput, and the full-corpus encode
+    * quadrupled a gate's cost for zero extra coverage. */
+  private def events(s: SparkSession, dir: String, quarter: Boolean = true): DataFrame = {
+    val ev = t(s, dir, "events")
+    (if (quarter) ev.where(pmod(col("user_id"), lit(4)) === 0) else ev)
+      .withColumn("ts_us", unix_micros(col("ts")))
+  }
+
+  /** Each user's latest row among `df`'s by (ts_us, event_id), projected
+    * to `cols`. Folding an upsert feed per epoch this way gives at most
+    * one revision per key per epoch, so arrival order is deterministic
+    * and the revision chain telescopes to the batch latest-per-key
+    * row. */
+  private def latestPerUser(df: DataFrame, cols: String*): DataFrame =
+    df.groupBy("user_id")
+      .agg(max_by(struct(cols.map(col): _*), struct(col("ts_us"), col("event_id"))).as("__l"))
+      .select(col("user_id") +: cols.map(c => col(s"__l.$c")): _*)
+
+  /** One upsert feed: each epoch's [[latestPerUser]] rows of `ev`. */
+  private def upsertFeed(topic: String, ev: DataFrame, cols: String*)
+      : Epochs => Int => Seq[(String, DataFrame)] =
+    e => i => Seq(topic -> latestPerUser(e.slice(ev, i), cols: _*))
+
+  /** The S1 feed schema and its folded columns. */
+  private val EventDdl = "user_id BIGINT, event_id BIGINT, event_type STRING, value DOUBLE, ts_us BIGINT"
+  private val EventCols = Seq("event_id", "event_type", "value", "ts_us")
+
+  /** The three-input regular-join feeds of q245/q247/q250/q251, each
+    * epoch in this order: the epoch's facts, then per-user dim
+    * revisions (users % 8 = 0 only), then per-type band labels
+    * ('click' never gets one). Facts arrive BEFORE their dims, so they
+    * pad (or join stale dims) and the dim revisions then retract and
+    * upgrade them. */
+  private def bandJoinFeeds(ev: DataFrame, q: String, label: Int => Column)
+      : Epochs => Int => Seq[(String, DataFrame)] = e => i => {
+    val slice = e.slice(ev, i)
+    Seq(
+      s"orders_feed_$q" -> slice.select("event_id", "user_id", "value"),
+      s"dim_feed_$q" -> latestPerUser(slice.where(pmod(col("user_id"), lit(8)) === 0),
+        "event_type"),
+      s"band_feed_$q" -> slice.where(col("event_type") =!= "click")
+        .select("event_type").distinct().withColumn("label", label(i)))
+  }
+
+  /** q202's S1 upsert pipeline, shared by q202/q224/q225: events ride
+    * a JSON topic feed in 4 event-time epochs (each epoch pre-folded
+    * to its latest row per key) through CREATE TABLE with PRIMARY KEY
+    * + a long-running INSERT; the final state equals the batch
+    * latest-per-key oracle (q05's SQL). `chained`: a SECOND statement
+    * consumes the FIRST one's table — no streaming source in its FROM,
+    * so the runner PROMOTES user_latest to its changelog stream (every
+    * per-epoch upsert revision flows as one record into the append
+    * table). */
+  private def s1Upsert(s: SparkSession, dir: String, q: String,
+                       restartAfter: Option[Int] = None,
+                       chained: Boolean = false): RunnerGate = {
+    val (feed, target, chain) = (s"events_feed_$q", s"user_latest_$q", s"user_changelog_$q")
+    val ev = events(s, dir, quarter = false)
+    val chainDdl = if (!chained) "" else s""";
         CREATE TABLE $chain (
           user_id BIGINT, last_event_id BIGINT, last_event_type STRING,
           last_value DOUBLE, ts_us BIGINT);
         INSERT INTO $chain
         SELECT user_id, last_event_id, last_event_type, last_value, ts_us
         FROM $target"""
-      r.runScript(s"""
+    RunnerGate(Seq(feed -> EventDdl), s"""
         CREATE TABLE $target (
           user_id BIGINT, last_event_id BIGINT, last_event_type STRING,
           last_value DOUBLE, ts_us BIGINT,
           PRIMARY KEY (user_id) NOT ENFORCED) DISTRIBUTED INTO 1 BUCKETS;
         INSERT INTO $target
-        SELECT user_id, event_id, event_type, value, ts_us FROM $feed$chainDdl""")
-      r
-    }
-    val bounds = ev.agg(min("ts_us"), max("ts_us")).collect().head
-    val (lo, hi) = (bounds.getLong(0), bounds.getLong(1))
-    val epochs = 4
-    val width = math.max(1L, (hi - lo) / epochs + 1)
-    def feedEpoch(r: exec.StreamingStatementRunner, i: Int): Unit = {
-      val slice = ev
-        .where(col("ts_us") >= lo + i * width && col("ts_us") < lo + (i + 1) * width)
-        .groupBy("user_id")
-        .agg(max_by(struct(col("event_id"), col("event_type"), col("value"),
-          col("ts_us")), struct(col("ts_us"), col("event_id"))).as("__l"))
-        .select(col("user_id"), col("__l.event_id"), col("__l.event_type"),
-          col("__l.value"), col("__l.ts_us"))
-      Topics.appendJson(slice, feed, conf, Nil, i + 1)
-      r.processAllAvailable()
-    }
-    val split = restartAfter.getOrElse(epochs)
-    val r1 = newRunner()
-    (0 until math.min(split, epochs)).foreach(feedEpoch(r1, _))
-    r1.stopAll()
-    if (split < epochs) {
-      val r2 = newRunner() // the "crash": remaining epochs post-restart
-      (split until epochs).foreach(feedEpoch(r2, _))
-      r2.stopAll()
-    }
-    s.table(if (chained) chain else target)
-      .select(col("user_id"), col("last_event_id"),
-        col("last_event_type"), col("last_value"), col("ts_us"))
+        SELECT user_id, event_id, event_type, value, ts_us FROM $feed$chainDdl""",
+      ev, epochs = 4, upsertFeed(feed, ev, EventCols: _*),
+      Project(if (chained) chain else target, col("user_id"), col("last_event_id"),
+        col("last_event_type"), col("last_value"), col("ts_us")),
+      restartAfter = restartAfter)
   }
 
   /** Shared persisted-LSH pair source for every pair-CONSUMING
@@ -171,7 +283,8 @@ object SparkEntry {
   def entry(spark: SparkSession): DataFrame =
     queries("q03_enrich_join")(spark, "/root/testdata/sf0.001")
 
-  def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
+  def queries: Map[String, (SparkSession, String) => DataFrame] =
+    Map[String, (SparkSession, String) => DataFrame](
 
     // ── aggregation (SURVEY §2.3 group-by agg; lab-aggregations) ──
     // Money math is done in DECIMAL end-to-end: the base columns are
@@ -1825,17 +1938,6 @@ object SparkEntry {
       }.distinct()
     }),
 
-    // ── STREAMING UPSERT through the STATEMENT RUNNER, DRIVER-GATED
-    //    (round 12): the reference's S1 shape end-to-end — JSON topic
-    //    feed, registered source, CREATE TABLE with PRIMARY KEY,
-    //    long-running INSERT — with events replayed in 4 event-time
-    //    epochs. Each epoch carries at most one row per key (its
-    //    max-(ts, event_id) row), so arrival order is deterministic and
-    //    the final materialized state equals the batch latest-per-key
-    //    oracle (q05's SQL) ──
-    "q202_stream_upsert_runner" -> ((s, dir) =>
-      streamUpsertRunner(s, dir, "q202", restartAfter = None)),
-
     // ── STREAMING TUMBLE AGGREGATION replay, DRIVER-GATED (round 12):
     //    q07's windowed aggregate as a real watermarked stream — 5
     //    event-time-ordered micro-batches, zero-delay watermark, append
@@ -2048,58 +2150,6 @@ object SparkEntry {
             unix_micros(col("__we")).as("window_end_us"),
             col("n_events"), col("sum_value"))
       }.where(col("window_start_us") <= hi)
-    }),
-
-    // ── SOURCE-SIDE TOMBSTONE path through the STATEMENT RUNNER,
-    //    DRIVER-GATED (round 12): the compacted-topic DELETE contract
-    //    end-to-end — an INSERT whose select tags 'error' events
-    //    `__op = '-D'` writes null-value tombstones to the PK table's
-    //    topic (Topics.appendJson keyed encode), and the materialized
-    //    view folds latest-by-offset FIRST, tombstone-filter AFTER, so
-    //    a user whose LAST event is an error disappears (and a later
-    //    non-error event resurrects the key). Epochs are event-time
-    //    slices reduced to one row per key (q202's determinism trick),
-    //    so arrival order = (ts, event_id) order and the final state
-    //    equals the batch last-event-wins oracle ──
-    "q210_stream_tombstone_runner" -> ((s, dir) => {
-      import graft.sources.{TopicConf, Topics}
-      import org.apache.spark.sql.types._
-      val ev = t(s, dir, "events").select(col("user_id"), col("event_id"),
-        col("event_type"), col("value"), unix_micros(col("ts")).as("ts_us"))
-      val conf = TopicConf(
-        java.nio.file.Files.createTempDirectory("graft-q210").toString)
-      val r = new exec.StreamingStatementRunner(s, topicConf = Some(conf))
-      r.registerTopicSource("events_feed_q210", StructType(Seq(
-        StructField("user_id", LongType), StructField("event_id", LongType),
-        StructField("event_type", StringType), StructField("value", DoubleType),
-        StructField("ts_us", LongType))))
-      r.runScript("""
-        CREATE TABLE user_live_q210 (
-          user_id BIGINT, last_event_id BIGINT, last_value DOUBLE, ts_us BIGINT,
-          __op STRING,
-          PRIMARY KEY (user_id) NOT ENFORCED) DISTRIBUTED INTO 1 BUCKETS;
-        INSERT INTO user_live_q210
-        SELECT user_id, event_id, value, ts_us,
-          CASE WHEN event_type = 'error' THEN '-D' ELSE '+U' END
-        FROM events_feed_q210""")
-      val bounds = ev.agg(min("ts_us"), max("ts_us")).collect().head
-      val (lo, hi) = (bounds.getLong(0), bounds.getLong(1))
-      val epochs = 4
-      val width = math.max(1L, (hi - lo) / epochs + 1)
-      (0 until epochs).foreach { i =>
-        val slice = ev
-          .where(col("ts_us") >= lo + i * width && col("ts_us") < lo + (i + 1) * width)
-          .groupBy("user_id")
-          .agg(max_by(struct(col("event_id"), col("event_type"), col("value"),
-            col("ts_us")), struct(col("ts_us"), col("event_id"))).as("__l"))
-          .select(col("user_id"), col("__l.event_id"), col("__l.event_type"),
-            col("__l.value"), col("__l.ts_us"))
-        Topics.appendJson(slice, "events_feed_q210", conf, Nil, i + 1)
-        r.processAllAvailable()
-      }
-      r.stopAll()
-      s.table("user_live_q210").select(col("user_id"), col("last_event_id"),
-        col("last_value"), col("ts_us"))
     }),
 
     // ── STREAMING FIRST-PER-KEY DEDUP replay, DRIVER-GATED (round 12):
@@ -2470,1854 +2520,6 @@ object SparkEntry {
       }.where(col("window_start_us") <= hi)
     }),
 
-    // ── CHECKPOINTED RESTART of the long-running INSERT path, DRIVER-
-    //    GATED (round 13, VERDICT r12 item 1): q202's S1 pipeline with
-    //    the runner KILLED after epoch 2 and a NEW runner resumed on
-    //    the same topics + checkpoints (same script re-run, the
-    //    reference's re-applied-statement contract). The checkpoint
-    //    keeps the restarted source from re-reading epochs 1–2 and the
-    //    epoch-idempotent sink keeps any replayed batch from
-    //    double-appending, so the final materialized state equals the
-    //    uninterrupted batch oracle (q202's SQL) ──
-    "q224_stream_restart_runner" -> ((s, dir) =>
-      streamUpsertRunner(s, dir, "q224", restartAfter = Some(2))),
-
-    // ── TABLE-TO-TABLE CONTINUOUS INSERT, DRIVER-GATED (round 13):
-    //    statement B's FROM references only statement A's table, so the
-    //    runner PROMOTES A to its changelog stream — B receives every
-    //    per-epoch upsert revision exactly once. With the feed split
-    //    into 4 event-time quartile epochs (each pre-folded to its
-    //    max-(ts, event_id) row per key), B's content IS the per-
-    //    (epoch, user) folded row set, which the oracle reproduces by
-    //    re-deriving the integer epoch boundaries ──
-    "q225_stream_chained_insert" -> ((s, dir) =>
-      streamUpsertRunner(s, dir, "q225", restartAfter = None, chained = true)),
-
-    // ── AGGREGATE over a promoted APPEND driver, DRIVER-GATED: an
-    //    append table is a true insert stream, so the continuous
-    //    GROUP BY runs as NATIVE streaming aggregation (no retraction
-    //    machinery — contrast q227/q228, whose changelog drivers fold
-    //    signed revisions), revising per-key counts in update mode and
-    //    landing on the batch aggregate.
-    //    Raw events flow unfolded through 4 epochs so the count
-    //    genuinely accumulates cross-batch state ──
-    "q226_stream_promoted_agg" -> ((s, dir) => {
-      import graft.sources.{TopicConf, Topics}
-      import org.apache.spark.sql.types._
-      // a quarter of the users: the gate exercises cross-batch agg
-      // state, not JSON-encode throughput — the full-corpus encode
-      // quadrupled the gate's cost for zero extra coverage
-      val ev = t(s, dir, "events").where(pmod(col("user_id"), lit(4)) === 0)
-        .select(col("user_id"), col("event_id"), unix_micros(col("ts")).as("ts_us"))
-      val conf = TopicConf(
-        java.nio.file.Files.createTempDirectory("graft-q226").toString)
-      // narrow the agg's state width for the fixture replay, exactly
-      // as StreamReplay.startNarrowState does: at this size the
-      // session's 32 partitions are per-trigger state-commit latency,
-      // not parallelism. start() clones the conf, so restoring after
-      // runScript is safe for the running queries.
-      val spKey = "spark.sql.shuffle.partitions"
-      val spPrev = s.conf.get(spKey)
-      s.conf.set(spKey, graft.streaming.StreamReplay.statePartitions.toString)
-      val r = new exec.StreamingStatementRunner(s, topicConf = Some(conf))
-      try {
-        r.registerTopicSource("events_raw_q226", StructType(Seq(
-          StructField("user_id", LongType), StructField("event_id", LongType),
-          StructField("ts_us", LongType))))
-        r.runScript("""
-          CREATE TABLE events_log_q226 (user_id BIGINT, event_id BIGINT, ts_us BIGINT);
-          INSERT INTO events_log_q226 SELECT user_id, event_id, ts_us FROM events_raw_q226;
-          CREATE TABLE user_counts_q226 (user_id BIGINT, n_events BIGINT,
-            PRIMARY KEY (user_id) NOT ENFORCED) DISTRIBUTED INTO 1 BUCKETS;
-          INSERT INTO user_counts_q226
-          SELECT user_id, count(*) AS n_events FROM events_log_q226 GROUP BY user_id""")
-      } finally s.conf.set(spKey, spPrev)
-      val bounds = ev.agg(min("ts_us"), max("ts_us")).collect().head
-      val (lo, hi) = (bounds.getLong(0), bounds.getLong(1))
-      val epochs = 4
-      val width = math.max(1L, (hi - lo) / epochs + 1)
-      (0 until epochs).foreach { i =>
-        Topics.appendJson(
-          ev.where(col("ts_us") >= lo + i * width && col("ts_us") < lo + (i + 1) * width),
-          "events_raw_q226", conf, Nil, i + 1)
-        r.processAllAvailable()
-      }
-      r.stopAll()
-      s.table("user_counts_q226").select(col("user_id"), col("n_events"))
-    }),
-
-    // ── RETRACTION-AWARE AGGREGATE over an UPSERT changelog driver,
-    //    DRIVER-GATED (round 14, VERDICT r13 item 1 — the Flink
-    //    semantic the reference's aggregation lab runs first:
-    //    GROUP BY over shoe_customers_keyed,
-    //    terraform/lab-aggregations/main.tf:396,431): the S1 pipeline
-    //    revises user_latest per epoch; the chained aggregate folds
-    //    each revision as retract-prior + add-new (ChangelogNormalize
-    //    → RetractAggRewrite), so a user whose latest event_type
-    //    changes MOVES between groups. Final state = the aggregate
-    //    over batch latest-per-key — a revision-counting aggregate
-    //    would disagree on every re-keyed user ──
-    "q227_stream_retract_agg_upsert" -> ((s, dir) => {
-      import graft.sources.{TopicConf, Topics}
-      import org.apache.spark.sql.types._
-      val ev = t(s, dir, "events").select(col("user_id"), col("event_id"),
-        col("event_type"), col("value"), unix_micros(col("ts")).as("ts_us"))
-      val conf = TopicConf(
-        java.nio.file.Files.createTempDirectory("graft-q227").toString)
-      // narrow stateful-shuffle width for the fixture replay (q226's
-      // rationale: 32 partitions are per-trigger state-commit latency
-      // at this size; start() clones the conf so restoring is safe)
-      val spKey = "spark.sql.shuffle.partitions"
-      val spPrev = s.conf.get(spKey)
-      s.conf.set(spKey, graft.streaming.StreamReplay.statePartitions.toString)
-      val r = new exec.StreamingStatementRunner(s, topicConf = Some(conf))
-      try {
-        r.registerTopicSource("events_feed_q227", StructType(Seq(
-          StructField("user_id", LongType), StructField("event_id", LongType),
-          StructField("event_type", StringType), StructField("value", DoubleType),
-          StructField("ts_us", LongType))))
-        r.runScript("""
-          CREATE TABLE user_latest_q227 (
-            user_id BIGINT, last_event_id BIGINT, last_event_type STRING,
-            last_value DOUBLE, ts_us BIGINT,
-            PRIMARY KEY (user_id) NOT ENFORCED) DISTRIBUTED INTO 1 BUCKETS;
-          INSERT INTO user_latest_q227
-          SELECT user_id, event_id, event_type, value, ts_us FROM events_feed_q227;
-          CREATE TABLE type_stats_q227 (event_type STRING, n_users BIGINT,
-            sum_value DOUBLE,
-            PRIMARY KEY (event_type) NOT ENFORCED) DISTRIBUTED INTO 1 BUCKETS;
-          INSERT INTO type_stats_q227
-          SELECT last_event_type, count(*) AS n_users,
-                 CAST(sum(CAST(last_value AS DECIMAL(18,4))) AS DOUBLE) AS sum_value
-          FROM user_latest_q227 GROUP BY last_event_type""")
-      } finally s.conf.set(spKey, spPrev)
-      val bounds = ev.agg(min("ts_us"), max("ts_us")).collect().head
-      val (lo, hi) = (bounds.getLong(0), bounds.getLong(1))
-      val epochs = 4
-      val width = math.max(1L, (hi - lo) / epochs + 1)
-      (0 until epochs).foreach { i =>
-        // per-epoch fold to max-(ts, event_id) per user (q202's
-        // discipline): ≤1 revision per user per epoch, deterministic
-        // arrival, and the revision chain telescopes to overall latest
-        val slice = ev
-          .where(col("ts_us") >= lo + i * width && col("ts_us") < lo + (i + 1) * width)
-          .groupBy("user_id")
-          .agg(max_by(struct(col("event_id"), col("event_type"), col("value"),
-            col("ts_us")), struct(col("ts_us"), col("event_id"))).as("__l"))
-          .select(col("user_id"), col("__l.event_id"), col("__l.event_type"),
-            col("__l.value"), col("__l.ts_us"))
-        Topics.appendJson(slice, "events_feed_q227", conf, Nil, i + 1)
-        r.processAllAvailable()
-      }
-      r.stopAll()
-      s.table("type_stats_q227").select(col("event_type"), col("n_users"),
-        col("sum_value"))
-    }),
-
-    // ── RETRACT-MODE topic consumed by a chained aggregate, DRIVER-
-    //    GATED (round 14, VERDICT r13 item 3 — S5's
-    //    changelog.mode=retract, lab-aggregations/main.tf:530): the
-    //    per-user revision chain rides the topic as EXPLICIT -U/+U
-    //    pairs; the chained statement folds the __op tag as the sign
-    //    channel (no normalize state needed). Final aggregate state =
-    //    the batch aggregate over each user's last revision ──
-    "q228_stream_retract_consume" -> ((s, dir) => {
-      import graft.sources.{TopicConf, Topics}
-      import org.apache.spark.sql.types._
-      // quarter of the users: the gate exercises the -U/+U fold, not
-      // JSON-encode throughput (q226's rationale)
-      val ev = t(s, dir, "events").where(pmod(col("user_id"), lit(4)) === 0)
-        .select(col("user_id"), col("event_id"), col("event_type"),
-          col("value"), unix_micros(col("ts")).as("ts_us"))
-      val conf = TopicConf(
-        java.nio.file.Files.createTempDirectory("graft-q228").toString)
-      val spKey = "spark.sql.shuffle.partitions"
-      val spPrev = s.conf.get(spKey)
-      s.conf.set(spKey, graft.streaming.StreamReplay.statePartitions.toString)
-      val r = new exec.StreamingStatementRunner(s, topicConf = Some(conf))
-      try {
-        r.registerTopicSource("rev_feed_q228", StructType(Seq(
-          StructField("user_id", LongType), StructField("event_id", LongType),
-          StructField("event_type", StringType), StructField("value", DoubleType),
-          StructField("ts_us", LongType), StructField("__op", StringType))))
-        r.runScript("""
-          CREATE TABLE rev_log_q228 (user_id BIGINT, event_id BIGINT,
-            event_type STRING, value DOUBLE, ts_us BIGINT, __op STRING)
-            WITH ('changelog.mode' = 'retract');
-          INSERT INTO rev_log_q228
-          SELECT user_id, event_id, event_type, value, ts_us, __op FROM rev_feed_q228;
-          CREATE TABLE type_stats_q228 (event_type STRING, n_rows BIGINT,
-            sum_value DOUBLE,
-            PRIMARY KEY (event_type) NOT ENFORCED) DISTRIBUTED INTO 1 BUCKETS;
-          INSERT INTO type_stats_q228
-          SELECT event_type, count(*) AS n_rows,
-                 CAST(sum(CAST(value AS DECIMAL(18,4))) AS DOUBLE) AS sum_value
-          FROM rev_log_q228 GROUP BY event_type""")
-      } finally s.conf.set(spKey, spPrev)
-      val bounds = ev.agg(min("ts_us"), max("ts_us")).collect().head
-      val (lo, hi) = (bounds.getLong(0), bounds.getLong(1))
-      val epochs = 4
-      val width = math.max(1L, (hi - lo) / epochs + 1)
-      // per-(epoch, user) fold, then the EXPLICIT retract chain: the
-      // first revision of a user is +I; each later one emits -U with
-      // the PRIOR epoch-fold's full row, then +U with its own
-      // integral div (not `/`, which is double division and can round a
-      // boundary timestamp into the adjacent epoch); operands non-negative
-      val folded = ev
-        .withColumn("ep", expr(s"(ts_us - ${lo}L) div ${width}L"))
-        .groupBy(col("ep"), col("user_id"))
-        .agg(max_by(struct(col("event_id"), col("event_type"), col("value"),
-          col("ts_us")), struct(col("ts_us"), col("event_id"))).as("__l"))
-        .select(col("ep"), col("user_id"), col("__l.event_id"),
-          col("__l.event_type"), col("__l.value"), col("__l.ts_us"))
-      val w = Window.partitionBy(col("user_id")).orderBy(col("ep"))
-      val chained = folded
-        .withColumn("p_event_id", lag(col("event_id"), 1).over(w))
-        .withColumn("p_event_type", lag(col("event_type"), 1).over(w))
-        .withColumn("p_value", lag(col("value"), 1).over(w))
-        .withColumn("p_ts_us", lag(col("ts_us"), 1).over(w))
-        .localCheckpoint() // 4 epoch filters below re-scan this frame
-      def records(i: Int) = {
-        val cur = chained.where(col("ep") === i)
-        val adds = cur.select(col("user_id"), col("event_id"), col("event_type"),
-          col("value"), col("ts_us"),
-          when(col("p_event_id").isNull, lit("+I")).otherwise(lit("+U")).as("__op"))
-        val retracts = cur.where(col("p_event_id").isNotNull)
-          .select(col("user_id"), col("p_event_id").as("event_id"),
-            col("p_event_type").as("event_type"), col("p_value").as("value"),
-            col("p_ts_us").as("ts_us"), lit("-U").as("__op"))
-        adds.unionByName(retracts)
-      }
-      (0 until epochs).foreach { i =>
-        Topics.appendJson(records(i), "rev_feed_q228", conf, Nil, i + 1)
-        r.processAllAvailable()
-      }
-      r.stopAll()
-      s.table("type_stats_q228").select(col("event_type"), col("n_rows"),
-        col("sum_value"))
-    }),
-
-    // ── MERGE-ON-WRITE AGGREGATE over a SNAPSHOT JOIN, DRIVER-GATED
-    //    (round 14): `stream JOIN dim GROUP BY` — the shape that used
-    //    to reject ("batch-local partial aggregates") — now folds
-    //    continuously: each epoch's signed deltas cross the snapshot
-    //    join and merge onto the target topic's prior state (offset-
-    //    filtered to earlier epochs, replay-idempotent). Final state
-    //    must equal the batch join + aggregate ──
-    "q229_stream_merge_join_agg" -> ((s, dir) => {
-      import graft.sources.{TopicConf, Topics}
-      import org.apache.spark.sql.types._
-      // quarter of the users (q226's rationale: the gate exercises the
-      // merge fold, not JSON-encode throughput)
-      val ev = t(s, dir, "events").where(pmod(col("user_id"), lit(4)) === 0)
-        .select(col("user_id"), col("event_id"), unix_micros(col("ts")).as("ts_us"),
-          col("value"))
-      t(s, dir, "customer").select(col("c_custkey"), col("c_mktsegment"))
-        .createOrReplaceTempView("cust_dim_q229")
-      val conf = TopicConf(
-        java.nio.file.Files.createTempDirectory("graft-q229").toString)
-      val spKey = "spark.sql.shuffle.partitions"
-      val spPrev = s.conf.get(spKey)
-      s.conf.set(spKey, graft.streaming.StreamReplay.statePartitions.toString)
-      val r = new exec.StreamingStatementRunner(s, topicConf = Some(conf))
-      try {
-        r.registerTopicSource("events_raw_q229", StructType(Seq(
-          StructField("user_id", LongType), StructField("event_id", LongType),
-          StructField("ts_us", LongType), StructField("value", DoubleType))))
-        r.runScript("""
-          CREATE TABLE seg_stats_q229 (segment STRING, n_events BIGINT,
-            sum_value DOUBLE,
-            PRIMARY KEY (segment) NOT ENFORCED) DISTRIBUTED INTO 1 BUCKETS;
-          INSERT INTO seg_stats_q229
-          SELECT c.c_mktsegment, count(*) AS n_events,
-                 CAST(sum(CAST(e.value AS DECIMAL(18,4))) AS DOUBLE) AS sum_value
-          FROM events_raw_q229 e JOIN cust_dim_q229 c ON e.user_id = c.c_custkey
-          GROUP BY c.c_mktsegment""")
-      } finally s.conf.set(spKey, spPrev)
-      val bounds = ev.agg(min("ts_us"), max("ts_us")).collect().head
-      val (lo, hi) = (bounds.getLong(0), bounds.getLong(1))
-      val epochs = 4
-      val width = math.max(1L, (hi - lo) / epochs + 1)
-      (0 until epochs).foreach { i =>
-        Topics.appendJson(
-          ev.where(col("ts_us") >= lo + i * width && col("ts_us") < lo + (i + 1) * width),
-          "events_raw_q229", conf, Nil, i + 1)
-        r.processAllAvailable()
-      }
-      r.stopAll()
-      s.table("seg_stats_q229").select(col("segment"), col("n_events"),
-        col("sum_value"))
-    }),
-
-    // ── MERGE AGGREGATE over a PROMOTED UPSERT DRIVER + dim join,
-    //    DRIVER-GATED (round 14): the hardest changelog shape — each
-    //    per-epoch revision of user_latest RETRACTS its prior
-    //    contribution from the joined group and adds the new one, so a
-    //    user whose latest value changes revises their segment's sum
-    //    in place. Final state must equal batch latest-per-key ⋈ dim ⋈
-    //    aggregate ──
-    "q230_stream_merge_upsert_join_agg" -> ((s, dir) => {
-      import graft.sources.{TopicConf, Topics}
-      import org.apache.spark.sql.types._
-      val ev = t(s, dir, "events").where(pmod(col("user_id"), lit(4)) === 0)
-        .select(col("user_id"), col("event_id"), col("value"),
-          unix_micros(col("ts")).as("ts_us"))
-      t(s, dir, "customer").select(col("c_custkey"), col("c_mktsegment"))
-        .createOrReplaceTempView("cust_dim_q230")
-      val conf = TopicConf(
-        java.nio.file.Files.createTempDirectory("graft-q230").toString)
-      val spKey = "spark.sql.shuffle.partitions"
-      val spPrev = s.conf.get(spKey)
-      s.conf.set(spKey, graft.streaming.StreamReplay.statePartitions.toString)
-      val r = new exec.StreamingStatementRunner(s, topicConf = Some(conf))
-      try {
-        r.registerTopicSource("events_feed_q230", StructType(Seq(
-          StructField("user_id", LongType), StructField("event_id", LongType),
-          StructField("value", DoubleType), StructField("ts_us", LongType))))
-        r.runScript("""
-          CREATE TABLE user_latest_q230 (
-            user_id BIGINT, last_event_id BIGINT, last_value DOUBLE, ts_us BIGINT,
-            PRIMARY KEY (user_id) NOT ENFORCED) DISTRIBUTED INTO 1 BUCKETS;
-          INSERT INTO user_latest_q230
-          SELECT user_id, event_id, value, ts_us FROM events_feed_q230;
-          CREATE TABLE seg_latest_q230 (segment STRING, n_users BIGINT,
-            sum_last DOUBLE,
-            PRIMARY KEY (segment) NOT ENFORCED) DISTRIBUTED INTO 1 BUCKETS;
-          INSERT INTO seg_latest_q230
-          SELECT c.c_mktsegment, count(*) AS n_users,
-                 CAST(sum(CAST(u.last_value AS DECIMAL(18,4))) AS DOUBLE) AS sum_last
-          FROM user_latest_q230 u JOIN cust_dim_q230 c ON u.user_id = c.c_custkey
-          GROUP BY c.c_mktsegment""")
-      } finally s.conf.set(spKey, spPrev)
-      val bounds = ev.agg(min("ts_us"), max("ts_us")).collect().head
-      val (lo, hi) = (bounds.getLong(0), bounds.getLong(1))
-      val epochs = 4
-      val width = math.max(1L, (hi - lo) / epochs + 1)
-      (0 until epochs).foreach { i =>
-        // per-epoch fold (q202's discipline): ≤1 revision per user per
-        // epoch, so revisions chain deterministically to overall latest
-        val slice = ev
-          .where(col("ts_us") >= lo + i * width && col("ts_us") < lo + (i + 1) * width)
-          .groupBy("user_id")
-          .agg(max_by(struct(col("event_id"), col("value"), col("ts_us")),
-            struct(col("ts_us"), col("event_id"))).as("__l"))
-          .select(col("user_id"), col("__l.event_id"), col("__l.value"),
-            col("__l.ts_us"))
-        Topics.appendJson(slice, "events_feed_q230", conf, Nil, i + 1)
-        r.processAllAvailable()
-      }
-      r.stopAll()
-      s.table("seg_latest_q230").select(col("segment"), col("n_users"),
-        col("sum_last"))
-    }),
-
-    // ── RETRACTABLE MIN/MAX + EXACT DISTINCT over an upsert changelog
-    //    driver, DRIVER-GATED (round 14): the per-(group, value)
-    //    multiset helpers — each revision retracts its old value from
-    //    the multiset; retracting the current extreme forces a
-    //    recompute from the remaining values, and a duplicated
-    //    distinct value survives until its last holder leaves. Final
-    //    state must equal the batch latest-per-key aggregate ──
-    "q231_stream_retract_minmax_distinct" -> ((s, dir) => {
-      import graft.sources.{TopicConf, Topics}
-      import org.apache.spark.sql.types._
-      val ev = t(s, dir, "events").where(pmod(col("user_id"), lit(4)) === 0)
-        .select(col("user_id"), col("event_id"), col("event_type"),
-          col("value"), unix_micros(col("ts")).as("ts_us"))
-      val conf = TopicConf(
-        java.nio.file.Files.createTempDirectory("graft-q231").toString)
-      val spKey = "spark.sql.shuffle.partitions"
-      val spPrev = s.conf.get(spKey)
-      s.conf.set(spKey, graft.streaming.StreamReplay.statePartitions.toString)
-      val r = new exec.StreamingStatementRunner(s, topicConf = Some(conf))
-      try {
-        r.registerTopicSource("events_feed_q231", StructType(Seq(
-          StructField("user_id", LongType), StructField("event_id", LongType),
-          StructField("event_type", StringType), StructField("value", DoubleType),
-          StructField("ts_us", LongType))))
-        r.runScript("""
-          CREATE TABLE user_latest_q231 (
-            user_id BIGINT, last_event_id BIGINT, last_event_type STRING,
-            last_value DOUBLE, ts_us BIGINT,
-            PRIMARY KEY (user_id) NOT ENFORCED) DISTRIBUTED INTO 1 BUCKETS;
-          INSERT INTO user_latest_q231
-          SELECT user_id, event_id, event_type, value, ts_us FROM events_feed_q231;
-          CREATE TABLE type_extremes_q231 (event_type STRING, n_users BIGINT,
-            min_value DOUBLE, max_value DOUBLE, n_buckets BIGINT,
-            PRIMARY KEY (event_type) NOT ENFORCED) DISTRIBUTED INTO 1 BUCKETS;
-          INSERT INTO type_extremes_q231
-          SELECT last_event_type, count(*) AS n_users,
-                 min(last_value) AS min_value, max(last_value) AS max_value,
-                 count(DISTINCT user_id % 16) AS n_buckets
-          FROM user_latest_q231 GROUP BY last_event_type""")
-      } finally s.conf.set(spKey, spPrev)
-      val bounds = ev.agg(min("ts_us"), max("ts_us")).collect().head
-      val (lo, hi) = (bounds.getLong(0), bounds.getLong(1))
-      val epochs = 4
-      val width = math.max(1L, (hi - lo) / epochs + 1)
-      (0 until epochs).foreach { i =>
-        val slice = ev
-          .where(col("ts_us") >= lo + i * width && col("ts_us") < lo + (i + 1) * width)
-          .groupBy("user_id")
-          .agg(max_by(struct(col("event_id"), col("event_type"), col("value"),
-            col("ts_us")), struct(col("ts_us"), col("event_id"))).as("__l"))
-          .select(col("user_id"), col("__l.event_id"), col("__l.event_type"),
-            col("__l.value"), col("__l.ts_us"))
-        Topics.appendJson(slice, "events_feed_q231", conf, Nil, i + 1)
-        r.processAllAvailable()
-      }
-      r.stopAll()
-      s.table("type_extremes_q231").select(col("event_type"), col("n_users"),
-        col("min_value"), col("max_value"), col("n_buckets"))
-    }),
-
-    // ── HAVING over a retract-folded continuous aggregate, DRIVER-
-    //    GATED (round 14): the predicate re-evaluates as revisions
-    //    fold, and a group whose predicate stops holding is DELETED
-    //    downstream. `count(*) % 2 = 0` flips as per-type counts grow
-    //    across the 4 epochs, so groups genuinely enter AND leave the
-    //    table mid-stream; the final state equals the batch
-    //    latest-per-key aggregate under the same HAVING ──
-    "q232_stream_retract_agg_having" -> ((s, dir) => {
-      import graft.sources.{TopicConf, Topics}
-      import org.apache.spark.sql.types._
-      val ev = t(s, dir, "events").select(col("user_id"), col("event_id"),
-        col("event_type"), col("value"), unix_micros(col("ts")).as("ts_us"))
-      val conf = TopicConf(
-        java.nio.file.Files.createTempDirectory("graft-q232").toString)
-      val spKey = "spark.sql.shuffle.partitions"
-      val spPrev = s.conf.get(spKey)
-      s.conf.set(spKey, graft.streaming.StreamReplay.statePartitions.toString)
-      val r = new exec.StreamingStatementRunner(s, topicConf = Some(conf))
-      try {
-        r.registerTopicSource("events_feed_q232", StructType(Seq(
-          StructField("user_id", LongType), StructField("event_id", LongType),
-          StructField("event_type", StringType), StructField("value", DoubleType),
-          StructField("ts_us", LongType))))
-        r.runScript("""
-          CREATE TABLE user_latest_q232 (
-            user_id BIGINT, last_event_id BIGINT, last_event_type STRING,
-            last_value DOUBLE, ts_us BIGINT,
-            PRIMARY KEY (user_id) NOT ENFORCED) DISTRIBUTED INTO 1 BUCKETS;
-          INSERT INTO user_latest_q232
-          SELECT user_id, event_id, event_type, value, ts_us FROM events_feed_q232;
-          CREATE TABLE even_types_q232 (event_type STRING, n_users BIGINT,
-            sum_value DOUBLE,
-            PRIMARY KEY (event_type) NOT ENFORCED) DISTRIBUTED INTO 1 BUCKETS;
-          INSERT INTO even_types_q232
-          SELECT last_event_type, count(*) AS n_users,
-                 CAST(sum(CAST(last_value AS DECIMAL(18,4))) AS DOUBLE) AS sum_value
-          FROM user_latest_q232 GROUP BY last_event_type
-          HAVING count(*) % 2 = 0""")
-      } finally s.conf.set(spKey, spPrev)
-      val bounds = ev.agg(min("ts_us"), max("ts_us")).collect().head
-      val (lo, hi) = (bounds.getLong(0), bounds.getLong(1))
-      val epochs = 4
-      val width = math.max(1L, (hi - lo) / epochs + 1)
-      (0 until epochs).foreach { i =>
-        val slice = ev
-          .where(col("ts_us") >= lo + i * width && col("ts_us") < lo + (i + 1) * width)
-          .groupBy("user_id")
-          .agg(max_by(struct(col("event_id"), col("event_type"), col("value"),
-            col("ts_us")), struct(col("ts_us"), col("event_id"))).as("__l"))
-          .select(col("user_id"), col("__l.event_id"), col("__l.event_type"),
-            col("__l.value"), col("__l.ts_us"))
-        Topics.appendJson(slice, "events_feed_q232", conf, Nil, i + 1)
-        r.processAllAvailable()
-      }
-      r.stopAll()
-      s.table("even_types_q232").select(col("event_type"), col("n_users"),
-        col("sum_value"))
-    }),
-
-    // ── MULTI-LEVEL CONTINUOUS AGGREGATE, DRIVER-GATED (round 15,
-    //    VERDICT r14 item 2 — the lab-aggregations chain one level
-    //    deeper): statement A MERGE-aggregates (retractable max + a
-    //    HAVING whose verdict flips across epochs) into an upsert
-    //    table whose topic records carry hidden raws/__net/__keep;
-    //    statement B retract-folds over A's CHANGELOG — extra value
-    //    fields must stay invisible and a __keep=false state record
-    //    must retract the group downstream exactly as the batch view
-    //    hides it. Final state = the batch two-level aggregate ──
-    "q233_stream_multilevel_agg" -> ((s, dir) => {
-      import graft.sources.{TopicConf, Topics}
-      import org.apache.spark.sql.types._
-      val ev = t(s, dir, "events").where(pmod(col("user_id"), lit(4)) === 0)
-        .select(col("user_id"), col("event_id"), col("event_type"),
-          col("value"), unix_micros(col("ts")).as("ts_us"))
-      val conf = TopicConf(
-        java.nio.file.Files.createTempDirectory("graft-q233").toString)
-      val spKey = "spark.sql.shuffle.partitions"
-      val spPrev = s.conf.get(spKey)
-      s.conf.set(spKey, graft.streaming.StreamReplay.statePartitions.toString)
-      val r = new exec.StreamingStatementRunner(s, topicConf = Some(conf))
-      try {
-        r.registerTopicSource("events_feed_q233", StructType(Seq(
-          StructField("user_id", LongType), StructField("event_id", LongType),
-          StructField("event_type", StringType), StructField("value", DoubleType),
-          StructField("ts_us", LongType))))
-        r.runScript("""
-          CREATE TABLE user_latest_q233 (
-            user_id BIGINT, last_event_id BIGINT, last_event_type STRING,
-            last_value DOUBLE, ts_us BIGINT,
-            PRIMARY KEY (user_id) NOT ENFORCED) DISTRIBUTED INTO 1 BUCKETS;
-          INSERT INTO user_latest_q233
-          SELECT user_id, event_id, event_type, value, ts_us FROM events_feed_q233;
-          CREATE TABLE type_stats_q233 (event_type STRING, n_users BIGINT,
-            max_value DOUBLE,
-            PRIMARY KEY (event_type) NOT ENFORCED) DISTRIBUTED INTO 1 BUCKETS;
-          INSERT INTO type_stats_q233
-          SELECT last_event_type, count(*) AS n_users, max(last_value) AS max_value
-          FROM user_latest_q233 GROUP BY last_event_type
-          HAVING count(*) % 2 = 0;
-          CREATE TABLE parity_stats_q233 (bucket BIGINT, n_types BIGINT,
-            sum_max DOUBLE,
-            PRIMARY KEY (bucket) NOT ENFORCED) DISTRIBUTED INTO 1 BUCKETS;
-          INSERT INTO parity_stats_q233
-          SELECT CAST(n_users % 3 AS BIGINT) AS bucket, count(*) AS n_types,
-                 CAST(sum(CAST(max_value AS DECIMAL(18,4))) AS DOUBLE) AS sum_max
-          FROM type_stats_q233 GROUP BY CAST(n_users % 3 AS BIGINT)""")
-      } finally s.conf.set(spKey, spPrev)
-      val bounds = ev.agg(min("ts_us"), max("ts_us")).collect().head
-      val (lo, hi) = (bounds.getLong(0), bounds.getLong(1))
-      val epochs = 4
-      val width = math.max(1L, (hi - lo) / epochs + 1)
-      (0 until epochs).foreach { i =>
-        val slice = ev
-          .where(col("ts_us") >= lo + i * width && col("ts_us") < lo + (i + 1) * width)
-          .groupBy("user_id")
-          .agg(max_by(struct(col("event_id"), col("event_type"), col("value"),
-            col("ts_us")), struct(col("ts_us"), col("event_id"))).as("__l"))
-          .select(col("user_id"), col("__l.event_id"), col("__l.event_type"),
-            col("__l.value"), col("__l.ts_us"))
-        Topics.appendJson(slice, "events_feed_q233", conf, Nil, i + 1)
-        r.processAllAvailable()
-      }
-      r.stopAll()
-      s.table("parity_stats_q233").select(col("bucket"), col("n_types"),
-        col("sum_max"))
-    }),
-
-    // ── ARGMAX/ARGMIN + MULTI-COLUMN DISTINCT over an upsert changelog
-    //    driver, DRIVER-GATED (round 15, VERDICT r14 item 3 — the last
-    //    "Flink runs this, we refuse" shapes): max_by/min_by fold as
-    //    (order, value) multisets, so a revision that moves the argmax
-    //    HOLDER out of a group recomputes from the remaining pairs;
-    //    count(DISTINCT a, b) keeps a struct-keyed multiset. user_id
-    //    as the order key makes the argmax deterministic (unique per
-    //    group by construction). Final state = the batch
-    //    latest-per-key aggregate ──
-    "q234_stream_argmax_distinct" -> ((s, dir) => {
-      import graft.sources.{TopicConf, Topics}
-      import org.apache.spark.sql.types._
-      val ev = t(s, dir, "events").where(pmod(col("user_id"), lit(4)) === 0)
-        .select(col("user_id"), col("event_id"), col("event_type"),
-          col("value"), unix_micros(col("ts")).as("ts_us"))
-      val conf = TopicConf(
-        java.nio.file.Files.createTempDirectory("graft-q234").toString)
-      val spKey = "spark.sql.shuffle.partitions"
-      val spPrev = s.conf.get(spKey)
-      s.conf.set(spKey, graft.streaming.StreamReplay.statePartitions.toString)
-      val r = new exec.StreamingStatementRunner(s, topicConf = Some(conf))
-      try {
-        r.registerTopicSource("events_feed_q234", StructType(Seq(
-          StructField("user_id", LongType), StructField("event_id", LongType),
-          StructField("event_type", StringType), StructField("value", DoubleType),
-          StructField("ts_us", LongType))))
-        r.runScript("""
-          CREATE TABLE user_latest_q234 (
-            user_id BIGINT, last_event_id BIGINT, last_event_type STRING,
-            last_value DOUBLE, ts_us BIGINT,
-            PRIMARY KEY (user_id) NOT ENFORCED) DISTRIBUTED INTO 1 BUCKETS;
-          INSERT INTO user_latest_q234
-          SELECT user_id, event_id, event_type, value, ts_us FROM events_feed_q234;
-          CREATE TABLE type_tops_q234 (event_type STRING, n_users BIGINT,
-            top_value DOUBLE, bot_value DOUBLE, n_pairs BIGINT,
-            PRIMARY KEY (event_type) NOT ENFORCED) DISTRIBUTED INTO 1 BUCKETS;
-          INSERT INTO type_tops_q234
-          SELECT last_event_type, count(*) AS n_users,
-                 max_by(last_value, user_id) AS top_value,
-                 min_by(last_value, user_id) AS bot_value,
-                 count(DISTINCT user_id % 8, user_id % 3) AS n_pairs
-          FROM user_latest_q234 GROUP BY last_event_type""")
-      } finally s.conf.set(spKey, spPrev)
-      val bounds = ev.agg(min("ts_us"), max("ts_us")).collect().head
-      val (lo, hi) = (bounds.getLong(0), bounds.getLong(1))
-      val epochs = 4
-      val width = math.max(1L, (hi - lo) / epochs + 1)
-      (0 until epochs).foreach { i =>
-        val slice = ev
-          .where(col("ts_us") >= lo + i * width && col("ts_us") < lo + (i + 1) * width)
-          .groupBy("user_id")
-          .agg(max_by(struct(col("event_id"), col("event_type"), col("value"),
-            col("ts_us")), struct(col("ts_us"), col("event_id"))).as("__l"))
-          .select(col("user_id"), col("__l.event_id"), col("__l.event_type"),
-            col("__l.value"), col("__l.ts_us"))
-        Topics.appendJson(slice, "events_feed_q234", conf, Nil, i + 1)
-        r.processAllAvailable()
-      }
-      r.stopAll()
-      s.table("type_tops_q234").select(col("event_type"), col("n_users"),
-        col("top_value"), col("bot_value"), col("n_pairs"))
-    }),
-
-    // ── VARIANCE FAMILY + BOOL_AND/BOOL_OR + RETRACTABLE LISTAGG over
-    //    an upsert changelog driver, DRIVER-GATED (round 15): variance
-    //    folds by EXACT DECIMAL MOMENTS (n, Σ±x, Σ±x²) with the pinned
-    //    double closed form mirrored verbatim in the oracle (the
-    //    CLAUDE.md iterative-float rule); bool_and/bool_or fold as
-    //    boolean order statistics through the value multiset; listagg
-    //    recomputes the sorted distinct set per touched group. One
-    //    statement exercises raws + two multisets together ──
-    "q235_stream_variance_bool_listagg" -> ((s, dir) => {
-      import graft.sources.{TopicConf, Topics}
-      import org.apache.spark.sql.types._
-      val ev = t(s, dir, "events").where(pmod(col("user_id"), lit(4)) === 0)
-        .select(col("user_id"), col("event_id"), col("event_type"),
-          col("value"), unix_micros(col("ts")).as("ts_us"))
-      val conf = TopicConf(
-        java.nio.file.Files.createTempDirectory("graft-q235").toString)
-      val spKey = "spark.sql.shuffle.partitions"
-      val spPrev = s.conf.get(spKey)
-      s.conf.set(spKey, graft.streaming.StreamReplay.statePartitions.toString)
-      val r = new exec.StreamingStatementRunner(s, topicConf = Some(conf))
-      try {
-        r.registerTopicSource("events_feed_q235", StructType(Seq(
-          StructField("user_id", LongType), StructField("event_id", LongType),
-          StructField("event_type", StringType), StructField("value", DoubleType),
-          StructField("ts_us", LongType))))
-        r.runScript("""
-          CREATE TABLE user_latest_q235 (
-            user_id BIGINT, last_event_id BIGINT, last_event_type STRING,
-            last_value DOUBLE, ts_us BIGINT,
-            PRIMARY KEY (user_id) NOT ENFORCED) DISTRIBUTED INTO 1 BUCKETS;
-          INSERT INTO user_latest_q235
-          SELECT user_id, event_id, event_type, value, ts_us FROM events_feed_q235;
-          CREATE TABLE type_spread_q235 (event_type STRING, n_users BIGINT,
-            var_s DOUBLE, std_p DOUBLE, cov_vu DOUBLE, corr_vu DOUBLE,
-            n_big BIGINT, all_small BOOLEAN, any_big BOOLEAN,
-            buckets STRING,
-            PRIMARY KEY (event_type) NOT ENFORCED) DISTRIBUTED INTO 1 BUCKETS;
-          INSERT INTO type_spread_q235
-          SELECT last_event_type, count(*) AS n_users,
-                 round(var_samp(CAST(last_value AS DECIMAL(18,4))), 6) AS var_s,
-                 round(stddev_pop(CAST(last_value AS DECIMAL(18,4))), 6) AS std_p,
-                 round(covar_samp(CAST(last_value AS DECIMAL(18,4)),
-                                  CAST(user_id AS DECIMAL(18,0))), 6) AS cov_vu,
-                 round(corr(CAST(last_value AS DECIMAL(18,4)),
-                            CAST(user_id AS DECIMAL(18,0))), 6) AS corr_vu,
-                 count_if(last_value > 100.0) AS n_big,
-                 bool_and(last_value < 300.0) AS all_small,
-                 bool_or(last_value > 300.0) AS any_big,
-                 listagg(DISTINCT CAST(user_id % 5 AS STRING), ',')
-                   WITHIN GROUP (ORDER BY CAST(user_id % 5 AS STRING)) AS buckets
-          FROM user_latest_q235 GROUP BY last_event_type""")
-      } finally s.conf.set(spKey, spPrev)
-      val bounds = ev.agg(min("ts_us"), max("ts_us")).collect().head
-      val (lo, hi) = (bounds.getLong(0), bounds.getLong(1))
-      val epochs = 4
-      val width = math.max(1L, (hi - lo) / epochs + 1)
-      (0 until epochs).foreach { i =>
-        val slice = ev
-          .where(col("ts_us") >= lo + i * width && col("ts_us") < lo + (i + 1) * width)
-          .groupBy("user_id")
-          .agg(max_by(struct(col("event_id"), col("event_type"), col("value"),
-            col("ts_us")), struct(col("ts_us"), col("event_id"))).as("__l"))
-          .select(col("user_id"), col("__l.event_id"), col("__l.event_type"),
-            col("__l.value"), col("__l.ts_us"))
-        Topics.appendJson(slice, "events_feed_q235", conf, Nil, i + 1)
-        r.processAllAvailable()
-      }
-      r.stopAll()
-      s.table("type_spread_q235").select(col("event_type"), col("n_users"),
-        col("var_s"), col("std_p"), col("cov_vu"), col("corr_vu"),
-        col("n_big"), col("all_small"), col("any_big"), col("buckets"))
-    }),
-
-    // ── FLINK REGULAR JOIN into a RETRACT target, DRIVER-GATED
-    //    (round 16, VERDICT r15 item 1 — the reference's S6:
-    //    shoe_orders_enriched is changelog.mode='retract',
-    //    lab-aggregations/main.tf:530, BECAUSE the regular join :563
-    //    retracts + re-emits previously-joined rows when a dimension
-    //    revises): facts stream in per epoch; the per-user dim revises
-    //    across epochs; past enrichments must NOT freeze — the folded
-    //    net state equals the batch join of ALL facts against FINAL
-    //    dim state (for every fact, not just post-revision ones) ──
-    "q236_stream_regular_join" -> ((s, dir) => {
-      import graft.sources.{TopicConf, Topics}
-      import org.apache.spark.sql.types._
-      val ev = t(s, dir, "events").where(pmod(col("user_id"), lit(4)) === 0)
-        .select(col("user_id"), col("event_id"), col("event_type"),
-          col("value"), unix_micros(col("ts")).as("ts_us"))
-      val conf = TopicConf(
-        java.nio.file.Files.createTempDirectory("graft-q236").toString)
-      val spKey = "spark.sql.shuffle.partitions"
-      val spPrev = s.conf.get(spKey)
-      s.conf.set(spKey, graft.streaming.StreamReplay.statePartitions.toString)
-      val r = new exec.StreamingStatementRunner(s, topicConf = Some(conf))
-      try {
-        r.registerTopicSource("dim_feed_q236", StructType(Seq(
-          StructField("user_id", LongType), StructField("event_type", StringType))))
-        r.registerTopicSource("orders_feed_q236", StructType(Seq(
-          StructField("event_id", LongType), StructField("user_id", LongType),
-          StructField("value", DoubleType))))
-        r.runScript("""
-          CREATE TABLE user_dim_q236 (user_id BIGINT, last_event_type STRING,
-            PRIMARY KEY (user_id) NOT ENFORCED) DISTRIBUTED INTO 1 BUCKETS;
-          INSERT INTO user_dim_q236 SELECT user_id, event_type FROM dim_feed_q236;
-          CREATE TABLE enriched_q236 (event_id BIGINT, user_id BIGINT,
-            last_event_type STRING, value DOUBLE, __op STRING)
-            WITH ('changelog.mode' = 'retract');
-          INSERT INTO enriched_q236 (event_id, user_id, last_event_type, value)
-          SELECT o.event_id, o.user_id, c.last_event_type, o.value
-          FROM orders_feed_q236 o JOIN user_dim_q236 c ON o.user_id = c.user_id""")
-      } finally s.conf.set(spKey, spPrev)
-      val bounds = ev.agg(min("ts_us"), max("ts_us")).collect().head
-      val (lo, hi) = (bounds.getLong(0), bounds.getLong(1))
-      val epochs = 4
-      val width = math.max(1L, (hi - lo) / epochs + 1)
-      (0 until epochs).foreach { i =>
-        val slice = ev
-          .where(col("ts_us") >= lo + i * width && col("ts_us") < lo + (i + 1) * width)
-        // dim slice FIRST (per-user latest within the epoch — revising
-        // users force re-emission of their already-joined facts), then
-        // the epoch's facts join the revised state
-        val dim = slice.groupBy("user_id")
-          .agg(max_by(col("event_type"), struct(col("ts_us"), col("event_id")))
-            .as("event_type"))
-        Topics.appendJson(dim, "dim_feed_q236", conf, Nil, 2 * i + 1)
-        r.processAllAvailable()
-        Topics.appendJson(slice.select("event_id", "user_id", "value"),
-          "orders_feed_q236", conf, Nil, 2 * i + 2)
-        r.processAllAvailable()
-      }
-      r.stopAll()
-      // fold the retract changelog: the net multiset is the final state
-      s.table("enriched_q236")
-        .groupBy("event_id", "user_id", "last_event_type", "value")
-        .agg(sum(when(col("__op").startsWith("-"), -1L).otherwise(1L)).as("__n"))
-        .where(col("__n") === 1L)
-        .select(col("event_id"), col("user_id"), col("last_event_type"), col("value"))
-    }),
-
-    // ── RETRACTABLE COLLECT over an upsert changelog driver, DRIVER-
-    //    GATED (round 16, VERDICT r15 item 3 — the rejection list
-    //    shrinks to exact percentile only): collect_set emits the
-    //    multiset's live DISTINCT values, collect_list every live
-    //    copy, both value-sorted (Flink's retractable COLLECT keeps
-    //    the same per-(group, value) count state). Arrays ride to the
-    //    oracle as joined strings — the driver hash has no LIST-type
-    //    parity contract (the q57 HUGEINT lesson: never gate on a
-    //    novel output type class); ValueSetAggSpec asserts the true
-    //    array emission ──
-    "q237_stream_collect_agg" -> ((s, dir) => {
-      import graft.sources.{TopicConf, Topics}
-      import org.apache.spark.sql.types._
-      val ev = t(s, dir, "events").where(pmod(col("user_id"), lit(4)) === 0)
-        .select(col("user_id"), col("event_id"), col("event_type"),
-          col("value"), unix_micros(col("ts")).as("ts_us"))
-      val conf = TopicConf(
-        java.nio.file.Files.createTempDirectory("graft-q237").toString)
-      val spKey = "spark.sql.shuffle.partitions"
-      val spPrev = s.conf.get(spKey)
-      s.conf.set(spKey, graft.streaming.StreamReplay.statePartitions.toString)
-      val r = new exec.StreamingStatementRunner(s, topicConf = Some(conf))
-      try {
-        r.registerTopicSource("events_feed_q237", StructType(Seq(
-          StructField("user_id", LongType), StructField("event_type", StringType),
-          StructField("value", DoubleType))))
-        r.runScript("""
-          CREATE TABLE user_latest_q237 (
-            user_id BIGINT, last_event_type STRING, last_value DOUBLE,
-            PRIMARY KEY (user_id) NOT ENFORCED) DISTRIBUTED INTO 1 BUCKETS;
-          INSERT INTO user_latest_q237
-          SELECT user_id, event_type, value FROM events_feed_q237;
-          CREATE TABLE bucket_collect_q237 (bucket BIGINT, n_users BIGINT,
-            types STRING, septets STRING,
-            PRIMARY KEY (bucket) NOT ENFORCED) DISTRIBUTED INTO 1 BUCKETS;
-          INSERT INTO bucket_collect_q237
-          SELECT CAST(user_id % 41 AS BIGINT) AS bucket, count(*) AS n_users,
-                 array_join(collect_set(last_event_type), ',') AS types,
-                 array_join(collect_list(CAST(user_id % 7 AS STRING)), ',') AS septets
-          FROM user_latest_q237 GROUP BY CAST(user_id % 41 AS BIGINT)""")
-      } finally s.conf.set(spKey, spPrev)
-      val bounds = ev.agg(min("ts_us"), max("ts_us")).collect().head
-      val (lo, hi) = (bounds.getLong(0), bounds.getLong(1))
-      val epochs = 4
-      val width = math.max(1L, (hi - lo) / epochs + 1)
-      (0 until epochs).foreach { i =>
-        val slice = ev
-          .where(col("ts_us") >= lo + i * width && col("ts_us") < lo + (i + 1) * width)
-          .groupBy("user_id")
-          .agg(max_by(struct(col("event_type"), col("value")),
-            struct(col("ts_us"), col("event_id"))).as("__l"))
-          .select(col("user_id"), col("__l.event_type"), col("__l.value"))
-        Topics.appendJson(slice, "events_feed_q237", conf, Nil, i + 1)
-        r.processAllAvailable()
-      }
-      r.stopAll()
-      s.table("bucket_collect_q237").select(col("bucket"), col("n_users"),
-        col("types"), col("septets"))
-    }),
-
-    // ── THREE-LEVEL CONTINUOUS AGGREGATE CHAIN, DRIVER-GATED (round
-    //    16, VERDICT r15 item 5 — q233 one level deeper, promoting the
-    //    round-15 composition spec): merge-agg (retractable max) →
-    //    retract-fold → retract-fold. Every revision at the bottom can
-    //    ripple THREE changelog hops; integer-only aggregates above
-    //    level 2 (a re-derived double must never re-enter DECIMAL —
-    //    the CLAUDE.md money rule) ──
-    "q238_stream_three_level_agg" -> ((s, dir) => {
-      import graft.sources.{TopicConf, Topics}
-      import org.apache.spark.sql.types._
-      val ev = t(s, dir, "events").where(pmod(col("user_id"), lit(4)) === 0)
-        .select(col("user_id"), col("event_id"), col("event_type"),
-          col("value"), unix_micros(col("ts")).as("ts_us"))
-      val conf = TopicConf(
-        java.nio.file.Files.createTempDirectory("graft-q238").toString)
-      val spKey = "spark.sql.shuffle.partitions"
-      val spPrev = s.conf.get(spKey)
-      s.conf.set(spKey, graft.streaming.StreamReplay.statePartitions.toString)
-      val r = new exec.StreamingStatementRunner(s, topicConf = Some(conf))
-      try {
-        r.registerTopicSource("events_feed_q238", StructType(Seq(
-          StructField("user_id", LongType), StructField("event_type", StringType),
-          StructField("value", DoubleType))))
-        r.runScript("""
-          CREATE TABLE user_latest_q238 (
-            user_id BIGINT, last_event_type STRING, last_value DOUBLE,
-            PRIMARY KEY (user_id) NOT ENFORCED) DISTRIBUTED INTO 1 BUCKETS;
-          INSERT INTO user_latest_q238
-          SELECT user_id, event_type, value FROM events_feed_q238;
-          CREATE TABLE type_stats_q238 (event_type STRING, n_users BIGINT,
-            max_value DOUBLE,
-            PRIMARY KEY (event_type) NOT ENFORCED) DISTRIBUTED INTO 1 BUCKETS;
-          INSERT INTO type_stats_q238
-          SELECT last_event_type, count(*) AS n_users, max(last_value) AS max_value
-          FROM user_latest_q238 GROUP BY last_event_type;
-          CREATE TABLE parity_q238 (bucket BIGINT, n_types BIGINT, sum_users BIGINT,
-            PRIMARY KEY (bucket) NOT ENFORCED) DISTRIBUTED INTO 1 BUCKETS;
-          INSERT INTO parity_q238
-          SELECT CAST(n_users % 3 AS BIGINT) AS bucket, count(*) AS n_types,
-                 CAST(sum(n_users) AS BIGINT) AS sum_users
-          FROM type_stats_q238 GROUP BY CAST(n_users % 3 AS BIGINT);
-          CREATE TABLE grand_q238 (par BIGINT, n_buckets BIGINT, total BIGINT,
-            PRIMARY KEY (par) NOT ENFORCED) DISTRIBUTED INTO 1 BUCKETS;
-          INSERT INTO grand_q238
-          SELECT CAST(n_types % 2 AS BIGINT) AS par, count(*) AS n_buckets,
-                 CAST(sum(sum_users) AS BIGINT) AS total
-          FROM parity_q238 GROUP BY CAST(n_types % 2 AS BIGINT)""")
-      } finally s.conf.set(spKey, spPrev)
-      val bounds = ev.agg(min("ts_us"), max("ts_us")).collect().head
-      val (lo, hi) = (bounds.getLong(0), bounds.getLong(1))
-      val epochs = 4
-      val width = math.max(1L, (hi - lo) / epochs + 1)
-      (0 until epochs).foreach { i =>
-        val slice = ev
-          .where(col("ts_us") >= lo + i * width && col("ts_us") < lo + (i + 1) * width)
-          .groupBy("user_id")
-          .agg(max_by(struct(col("event_type"), col("value")),
-            struct(col("ts_us"), col("event_id"))).as("__l"))
-          .select(col("user_id"), col("__l.event_type"), col("__l.value"))
-        Topics.appendJson(slice, "events_feed_q238", conf, Nil, i + 1)
-        r.processAllAvailable()
-      }
-      r.stopAll()
-      s.table("grand_q238").select(col("par"), col("n_buckets"), col("total"))
-    }),
-
-    // ── TUMBLE TVF THROUGH THE MULTISET MERGE PATH, DRIVER-GATED
-    //    (round 16, VERDICT r15 item 5 — promoting the round-15
-    //    composition spec): the TVF rewrite's star subquery carries
-    //    the upsert driver's sign AND the windowed group keys into the
-    //    merge path, where max folds as a (window, value) multiset —
-    //    revising a user's latest event time MOVES its value between
-    //    windows and both windows' max recompute retraction-aware ──
-    "q239_stream_tumble_multiset" -> ((s, dir) => {
-      import graft.sources.{TopicConf, Topics}
-      import org.apache.spark.sql.types._
-      val ev = t(s, dir, "events").where(pmod(col("user_id"), lit(4)) === 0)
-        .select(col("user_id"), col("event_id"), col("event_type"),
-          col("value"), col("ts"), unix_micros(col("ts")).as("ts_us"))
-      val conf = TopicConf(
-        java.nio.file.Files.createTempDirectory("graft-q239").toString)
-      val spKey = "spark.sql.shuffle.partitions"
-      val spPrev = s.conf.get(spKey)
-      s.conf.set(spKey, graft.streaming.StreamReplay.statePartitions.toString)
-      val r = new exec.StreamingStatementRunner(s, topicConf = Some(conf))
-      try {
-        r.registerTopicSource("events_feed_q239", StructType(Seq(
-          StructField("user_id", LongType), StructField("ts", TimestampType),
-          StructField("value", DoubleType))))
-        r.runScript("""
-          CREATE TABLE user_latest_q239 (
-            user_id BIGINT, ts TIMESTAMP, last_value DOUBLE,
-            PRIMARY KEY (user_id) NOT ENFORCED) DISTRIBUTED INTO 1 BUCKETS;
-          INSERT INTO user_latest_q239
-          SELECT user_id, ts, value FROM events_feed_q239;
-          CREATE TABLE hourly_q239 (window_start TIMESTAMP, n_users BIGINT,
-            max_value DOUBLE,
-            PRIMARY KEY (window_start) NOT ENFORCED) DISTRIBUTED INTO 1 BUCKETS;
-          INSERT INTO hourly_q239
-          SELECT window_start, count(*) AS n_users, max(last_value) AS max_value
-          FROM TABLE(TUMBLE(TABLE user_latest_q239, DESCRIPTOR(ts), INTERVAL '1' HOUR))
-          GROUP BY window_start""")
-      } finally s.conf.set(spKey, spPrev)
-      val bounds = ev.agg(min("ts_us"), max("ts_us")).collect().head
-      val (lo, hi) = (bounds.getLong(0), bounds.getLong(1))
-      val epochs = 4
-      val width = math.max(1L, (hi - lo) / epochs + 1)
-      (0 until epochs).foreach { i =>
-        val slice = ev
-          .where(col("ts_us") >= lo + i * width && col("ts_us") < lo + (i + 1) * width)
-          .groupBy("user_id")
-          .agg(max_by(struct(col("ts"), col("value")),
-            struct(col("ts_us"), col("event_id"))).as("__l"))
-          .select(col("user_id"), col("__l.ts"), col("__l.value"))
-        Topics.appendJson(slice, "events_feed_q239", conf, Nil, i + 1)
-        r.processAllAvailable()
-      }
-      r.stopAll()
-      s.table("hourly_q239").select(unix_micros(col("window_start"))
-        .as("window_start_us"), col("n_users"), col("max_value"))
-    }),
-
-    // ── LEFT OUTER REGULAR JOIN into a RETRACT target, DRIVER-GATED
-    //    (round 16): only a quarter of the fact users ever get a dim
-    //    row, and facts arrive BEFORE their epoch's dim slice — so
-    //    null-padded rows are emitted, then RETRACTED when the match
-    //    lands (Flink's outer-join state view), and matched rows
-    //    re-enrich on every later revision. Folded net state = the
-    //    batch LEFT JOIN of ALL facts against FINAL dim state ──
-    "q240_stream_left_outer_join" -> ((s, dir) => {
-      import graft.sources.{TopicConf, Topics}
-      import org.apache.spark.sql.types._
-      val ev = t(s, dir, "events").where(pmod(col("user_id"), lit(4)) === 0)
-        .select(col("user_id"), col("event_id"), col("event_type"),
-          col("value"), unix_micros(col("ts")).as("ts_us"))
-      val conf = TopicConf(
-        java.nio.file.Files.createTempDirectory("graft-q240").toString)
-      val spKey = "spark.sql.shuffle.partitions"
-      val spPrev = s.conf.get(spKey)
-      s.conf.set(spKey, graft.streaming.StreamReplay.statePartitions.toString)
-      val r = new exec.StreamingStatementRunner(s, topicConf = Some(conf))
-      try {
-        r.registerTopicSource("dim_feed_q240", StructType(Seq(
-          StructField("user_id", LongType), StructField("event_type", StringType))))
-        r.registerTopicSource("orders_feed_q240", StructType(Seq(
-          StructField("event_id", LongType), StructField("user_id", LongType),
-          StructField("value", DoubleType))))
-        r.runScript("""
-          CREATE TABLE user_dim_q240 (user_id BIGINT, last_event_type STRING,
-            PRIMARY KEY (user_id) NOT ENFORCED) DISTRIBUTED INTO 1 BUCKETS;
-          INSERT INTO user_dim_q240 SELECT user_id, event_type FROM dim_feed_q240;
-          CREATE TABLE enriched_q240 (event_id BIGINT, user_id BIGINT,
-            last_event_type STRING, value DOUBLE, __op STRING)
-            WITH ('changelog.mode' = 'retract');
-          INSERT INTO enriched_q240 (event_id, user_id, last_event_type, value)
-          SELECT o.event_id, o.user_id, c.last_event_type, o.value
-          FROM orders_feed_q240 o LEFT JOIN user_dim_q240 c ON o.user_id = c.user_id""")
-      } finally s.conf.set(spKey, spPrev)
-      val bounds = ev.agg(min("ts_us"), max("ts_us")).collect().head
-      val (lo, hi) = (bounds.getLong(0), bounds.getLong(1))
-      val epochs = 4
-      val width = math.max(1L, (hi - lo) / epochs + 1)
-      (0 until epochs).foreach { i =>
-        val slice = ev
-          .where(col("ts_us") >= lo + i * width && col("ts_us") < lo + (i + 1) * width)
-        // facts FIRST: new facts of dim-covered users pad until their
-        // epoch's dim slice lands — the pad-retract transition is
-        // exercised every epoch, not just at the start
-        Topics.appendJson(slice.select("event_id", "user_id", "value"),
-          "orders_feed_q240", conf, Nil, 2 * i + 1)
-        r.processAllAvailable()
-        val dim = slice.where(pmod(col("user_id"), lit(8)) === 0)
-          .groupBy("user_id")
-          .agg(max_by(col("event_type"), struct(col("ts_us"), col("event_id")))
-            .as("event_type"))
-        Topics.appendJson(dim, "dim_feed_q240", conf, Nil, 2 * i + 2)
-        r.processAllAvailable()
-      }
-      r.stopAll()
-      s.table("enriched_q240")
-        .groupBy("event_id", "user_id", "last_event_type", "value")
-        .agg(sum(when(col("__op").startsWith("-"), -1L).otherwise(1L)).as("__n"))
-        .where(col("__n") === 1L)
-        .select(col("event_id"), col("user_id"), col("last_event_type"), col("value"))
-    }),
-
-    // ── FULL OUTER REGULAR JOIN, DRIVER-GATED (round 16): BOTH sides
-    //    pad — facts of never-dimmed users null-pad on the left, dim
-    //    rows of factless users (user_id % 8 = 1 never passes the
-    //    fact filter) null-pad on the right, and each pad retracts
-    //    the moment the other side produces a match. Folded net state
-    //    = the batch FULL JOIN over final inputs ──
-    "q241_stream_full_outer_join" -> ((s, dir) => {
-      import graft.sources.{TopicConf, Topics}
-      import org.apache.spark.sql.types._
-      val evAll = t(s, dir, "events")
-      val facts = evAll.where(pmod(col("user_id"), lit(4)) === 0)
-        .select(col("event_id"), col("user_id"), col("value"),
-          unix_micros(col("ts")).as("ts_us"))
-      val dimsSrc = evAll.where(pmod(col("user_id"), lit(8)).isin(0L, 1L))
-        .select(col("user_id"), col("event_id"), col("event_type"),
-          unix_micros(col("ts")).as("ts_us"))
-      val conf = TopicConf(
-        java.nio.file.Files.createTempDirectory("graft-q241").toString)
-      val spKey = "spark.sql.shuffle.partitions"
-      val spPrev = s.conf.get(spKey)
-      s.conf.set(spKey, graft.streaming.StreamReplay.statePartitions.toString)
-      val r = new exec.StreamingStatementRunner(s, topicConf = Some(conf))
-      try {
-        r.registerTopicSource("dim_feed_q241", StructType(Seq(
-          StructField("user_id", LongType), StructField("event_type", StringType))))
-        r.registerTopicSource("orders_feed_q241", StructType(Seq(
-          StructField("event_id", LongType), StructField("user_id", LongType),
-          StructField("value", DoubleType))))
-        r.runScript("""
-          CREATE TABLE user_dim_q241 (user_id BIGINT, last_event_type STRING,
-            PRIMARY KEY (user_id) NOT ENFORCED) DISTRIBUTED INTO 1 BUCKETS;
-          INSERT INTO user_dim_q241 SELECT user_id, event_type FROM dim_feed_q241;
-          CREATE TABLE enriched_q241 (event_id BIGINT, fact_user BIGINT,
-            dim_user BIGINT, last_event_type STRING, value DOUBLE, __op STRING)
-            WITH ('changelog.mode' = 'retract');
-          INSERT INTO enriched_q241 (event_id, fact_user, dim_user, last_event_type, value)
-          SELECT o.event_id, o.user_id, c.user_id, c.last_event_type, o.value
-          FROM orders_feed_q241 o FULL JOIN user_dim_q241 c ON o.user_id = c.user_id""")
-      } finally s.conf.set(spKey, spPrev)
-      // epoch bounds over ALL events: the dim side spans users the
-      // fact filter excludes, and a dim row outside the facts' ts
-      // range must still reach its slice
-      val bounds = evAll.agg(min(unix_micros(col("ts"))),
-        max(unix_micros(col("ts")))).collect().head
-      val (lo, hi) = (bounds.getLong(0), bounds.getLong(1))
-      val epochs = 4
-      val width = math.max(1L, (hi - lo) / epochs + 1)
-      (0 until epochs).foreach { i =>
-        Topics.appendJson(facts
-          .where(col("ts_us") >= lo + i * width && col("ts_us") < lo + (i + 1) * width)
-          .select("event_id", "user_id", "value"),
-          "orders_feed_q241", conf, Nil, 2 * i + 1)
-        r.processAllAvailable()
-        val dim = dimsSrc
-          .where(col("ts_us") >= lo + i * width && col("ts_us") < lo + (i + 1) * width)
-          .groupBy("user_id")
-          .agg(max_by(col("event_type"), struct(col("ts_us"), col("event_id")))
-            .as("event_type"))
-        Topics.appendJson(dim, "dim_feed_q241", conf, Nil, 2 * i + 2)
-        r.processAllAvailable()
-      }
-      r.stopAll()
-      s.table("enriched_q241")
-        .groupBy("event_id", "fact_user", "dim_user", "last_event_type", "value")
-        .agg(sum(when(col("__op").startsWith("-"), -1L).otherwise(1L)).as("__n"))
-        .where(col("__n") === 1L)
-        .select(col("event_id"), col("fact_user"), col("dim_user"),
-          col("last_event_type"), col("value"))
-    }),
-
-    // ── REGULAR JOIN → CONTINUOUS AGGREGATE chain, DRIVER-GATED
-    //    (round 16): the join's -D/+I records drive a downstream
-    //    retract-folded GROUP BY — every dim revision MOVES the
-    //    re-enriched rows' contributions between groups, and a group
-    //    whose rows all retract is deleted. The full lab-aggregations
-    //    pipeline shape with the true regular join in the middle ──
-    "q242_stream_join_agg_chain" -> ((s, dir) => {
-      import graft.sources.{TopicConf, Topics}
-      import org.apache.spark.sql.types._
-      val ev = t(s, dir, "events").where(pmod(col("user_id"), lit(4)) === 0)
-        .select(col("user_id"), col("event_id"), col("event_type"),
-          col("value"), unix_micros(col("ts")).as("ts_us"))
-      val conf = TopicConf(
-        java.nio.file.Files.createTempDirectory("graft-q242").toString)
-      val spKey = "spark.sql.shuffle.partitions"
-      val spPrev = s.conf.get(spKey)
-      s.conf.set(spKey, graft.streaming.StreamReplay.statePartitions.toString)
-      val r = new exec.StreamingStatementRunner(s, topicConf = Some(conf))
-      try {
-        r.registerTopicSource("dim_feed_q242", StructType(Seq(
-          StructField("user_id", LongType), StructField("event_type", StringType))))
-        r.registerTopicSource("orders_feed_q242", StructType(Seq(
-          StructField("event_id", LongType), StructField("user_id", LongType),
-          StructField("value", DoubleType))))
-        r.runScript("""
-          CREATE TABLE user_dim_q242 (user_id BIGINT, last_event_type STRING,
-            PRIMARY KEY (user_id) NOT ENFORCED) DISTRIBUTED INTO 1 BUCKETS;
-          INSERT INTO user_dim_q242 SELECT user_id, event_type FROM dim_feed_q242;
-          CREATE TABLE enriched_q242 (event_id BIGINT, user_id BIGINT,
-            last_event_type STRING, value DOUBLE)
-            WITH ('changelog.mode' = 'retract');
-          INSERT INTO enriched_q242
-          SELECT o.event_id, o.user_id, c.last_event_type, o.value
-          FROM orders_feed_q242 o JOIN user_dim_q242 c ON o.user_id = c.user_id;
-          CREATE TABLE type_stats_q242 (last_event_type STRING, n_rows BIGINT,
-            sum_value DOUBLE,
-            PRIMARY KEY (last_event_type) NOT ENFORCED) DISTRIBUTED INTO 1 BUCKETS;
-          INSERT INTO type_stats_q242
-          SELECT last_event_type, count(*) AS n_rows,
-                 CAST(sum(CAST(value AS DECIMAL(18,4))) AS DOUBLE) AS sum_value
-          FROM enriched_q242 GROUP BY last_event_type""")
-      } finally s.conf.set(spKey, spPrev)
-      val bounds = ev.agg(min("ts_us"), max("ts_us")).collect().head
-      val (lo, hi) = (bounds.getLong(0), bounds.getLong(1))
-      val epochs = 4
-      val width = math.max(1L, (hi - lo) / epochs + 1)
-      (0 until epochs).foreach { i =>
-        val slice = ev
-          .where(col("ts_us") >= lo + i * width && col("ts_us") < lo + (i + 1) * width)
-        val dim = slice.groupBy("user_id")
-          .agg(max_by(col("event_type"), struct(col("ts_us"), col("event_id")))
-            .as("event_type"))
-        Topics.appendJson(dim, "dim_feed_q242", conf, Nil, 2 * i + 1)
-        r.processAllAvailable()
-        Topics.appendJson(slice.select("event_id", "user_id", "value"),
-          "orders_feed_q242", conf, Nil, 2 * i + 2)
-        r.processAllAvailable()
-      }
-      r.stopAll()
-      s.table("type_stats_q242").select(col("last_event_type"), col("n_rows"),
-        col("sum_value"))
-    }),
-
-    // ── STREAMING DECONTAMINATION against a REVISABLE blocklist,
-    //    DRIVER-GATED (round 16): `WHERE NOT EXISTS (blocklist)` into
-    //    a retract target — blocking a user RETRACTS its already-kept
-    //    rows, unblocking RE-ADMITS them (the brute pre/post diff over
-    //    fact state), fresh rows evaluate at current blocklist state.
-    //    The LLM-pipeline shape: a takedown/GDPR list that changes
-    //    while the corpus streams. Final net state = the batch NOT
-    //    EXISTS against the FINAL blocklist ──
-    "q243_stream_blocklist_decontam" -> ((s, dir) => {
-      import graft.sources.{TopicConf, Topics}
-      import org.apache.spark.sql.types._
-      val ev = t(s, dir, "events").where(pmod(col("user_id"), lit(4)) === 0)
-        .select(col("user_id"), col("event_id"), col("value"),
-          unix_micros(col("ts")).as("ts_us"))
-      val conf = TopicConf(
-        java.nio.file.Files.createTempDirectory("graft-q243").toString)
-      val spKey = "spark.sql.shuffle.partitions"
-      val spPrev = s.conf.get(spKey)
-      s.conf.set(spKey, graft.streaming.StreamReplay.statePartitions.toString)
-      val r = new exec.StreamingStatementRunner(s, topicConf = Some(conf))
-      try {
-        r.registerTopicSource("block_feed_q243", StructType(Seq(
-          StructField("user_id", LongType), StructField("__op", StringType))))
-        r.registerTopicSource("orders_feed_q243", StructType(Seq(
-          StructField("event_id", LongType), StructField("user_id", LongType),
-          StructField("value", DoubleType))))
-        r.runScript("""
-          CREATE TABLE blocklist_q243 (user_id BIGINT, __op STRING,
-            PRIMARY KEY (user_id) NOT ENFORCED) DISTRIBUTED INTO 1 BUCKETS;
-          INSERT INTO blocklist_q243 SELECT user_id, __op FROM block_feed_q243;
-          CREATE TABLE kept_q243 (event_id BIGINT, user_id BIGINT, value DOUBLE,
-            __op STRING) WITH ('changelog.mode' = 'retract');
-          INSERT INTO kept_q243 (event_id, user_id, value)
-          SELECT o.event_id, o.user_id, o.value FROM orders_feed_q243 o
-          WHERE NOT EXISTS (SELECT 1 FROM blocklist_q243 b
-                            WHERE b.user_id = o.user_id)""")
-      } finally s.conf.set(spKey, spPrev)
-      val bounds = ev.agg(min("ts_us"), max("ts_us")).collect().head
-      val (lo, hi) = (bounds.getLong(0), bounds.getLong(1))
-      val epochs = 4
-      val width = math.max(1L, (hi - lo) / epochs + 1)
-      val users = ev.select("user_id").distinct()
-      def blockOps(i: Int): DataFrame = i match {
-        // epoch 2 blocks user_id % 16 = 0 (their epoch-1 rows RETRACT);
-        // epoch 3 blocks % 16 = 4; epoch 4 UNBLOCKS % 16 = 0 (their
-        // rows RE-ADMIT) — final blocklist = % 16 = 4 only
-        case 1 => users.where(pmod(col("user_id"), lit(16)) === 0)
-          .withColumn("__op", lit("+I"))
-        case 2 => users.where(pmod(col("user_id"), lit(16)) === 4)
-          .withColumn("__op", lit("+I"))
-        case 3 => users.where(pmod(col("user_id"), lit(16)) === 0)
-          .withColumn("__op", lit("-D"))
-        case _ => users.where(lit(false)).withColumn("__op", lit("+I"))
-      }
-      (0 until epochs).foreach { i =>
-        Topics.appendJson(ev
-          .where(col("ts_us") >= lo + i * width && col("ts_us") < lo + (i + 1) * width)
-          .select("event_id", "user_id", "value"),
-          "orders_feed_q243", conf, Nil, 2 * i + 1)
-        r.processAllAvailable()
-        Topics.appendJson(blockOps(i), "block_feed_q243", conf, Nil, 2 * i + 2)
-        r.processAllAvailable()
-      }
-      r.stopAll()
-      s.table("kept_q243")
-        .groupBy("event_id", "user_id", "value")
-        .agg(sum(when(col("__op").startsWith("-"), -1L).otherwise(1L)).as("__n"))
-        .where(col("__n") === 1L)
-        .select(col("event_id"), col("user_id"), col("value"))
-    }),
-
-    // ── EXACT PERCENTILE over an upsert changelog driver, DRIVER-GATED
-    //    (round 16 — the last multiset-foldable shape; the practical
-    //    rejection list is now empty): percentile/median recompute
-    //    from the per-(group, value) net counts via Spark's weighted
-    //    Percentile. Values are INTEGER-valued doubles and the
-    //    percentages dyadic (0.25/0.5/0.75), so every interpolation
-    //    step is exactly representable — bit-identical to DuckDB's
-    //    quantile_cont regardless of either engine's evaluation order
-    //    (the CLAUDE.md float-tie rule applied by construction) ──
-    "q244_stream_exact_percentile" -> ((s, dir) => {
-      import graft.sources.{TopicConf, Topics}
-      import org.apache.spark.sql.types._
-      val ev = t(s, dir, "events").where(pmod(col("user_id"), lit(4)) === 0)
-        .select(col("user_id"), col("event_id"), col("event_type"),
-          col("value"), unix_micros(col("ts")).as("ts_us"))
-      val conf = TopicConf(
-        java.nio.file.Files.createTempDirectory("graft-q244").toString)
-      val spKey = "spark.sql.shuffle.partitions"
-      val spPrev = s.conf.get(spKey)
-      s.conf.set(spKey, graft.streaming.StreamReplay.statePartitions.toString)
-      val r = new exec.StreamingStatementRunner(s, topicConf = Some(conf))
-      try {
-        r.registerTopicSource("events_feed_q244", StructType(Seq(
-          StructField("user_id", LongType), StructField("event_type", StringType),
-          StructField("value", DoubleType))))
-        r.runScript("""
-          CREATE TABLE user_latest_q244 (
-            user_id BIGINT, last_event_type STRING, last_value DOUBLE,
-            PRIMARY KEY (user_id) NOT ENFORCED) DISTRIBUTED INTO 1 BUCKETS;
-          INSERT INTO user_latest_q244
-          SELECT user_id, event_type, value FROM events_feed_q244;
-          CREATE TABLE type_pcts_q244 (event_type STRING, n_users BIGINT,
-            p25 DOUBLE, p50 DOUBLE, p75 DOUBLE, med DOUBLE,
-            PRIMARY KEY (event_type) NOT ENFORCED) DISTRIBUTED INTO 1 BUCKETS;
-          INSERT INTO type_pcts_q244
-          SELECT last_event_type, count(*) AS n_users,
-                 percentile(CAST(user_id % 97 AS DOUBLE), 0.25) AS p25,
-                 percentile(CAST(user_id % 97 AS DOUBLE), 0.5) AS p50,
-                 percentile(CAST(user_id % 97 AS DOUBLE), 0.75) AS p75,
-                 median(CAST(user_id % 97 AS DOUBLE)) AS med
-          FROM user_latest_q244 GROUP BY last_event_type""")
-      } finally s.conf.set(spKey, spPrev)
-      val bounds = ev.agg(min("ts_us"), max("ts_us")).collect().head
-      val (lo, hi) = (bounds.getLong(0), bounds.getLong(1))
-      val epochs = 4
-      val width = math.max(1L, (hi - lo) / epochs + 1)
-      (0 until epochs).foreach { i =>
-        val slice = ev
-          .where(col("ts_us") >= lo + i * width && col("ts_us") < lo + (i + 1) * width)
-          .groupBy("user_id")
-          .agg(max_by(struct(col("event_type"), col("value")),
-            struct(col("ts_us"), col("event_id"))).as("__l"))
-          .select(col("user_id"), col("__l.event_type"), col("__l.value"))
-        Topics.appendJson(slice, "events_feed_q244", conf, Nil, i + 1)
-        r.processAllAvailable()
-      }
-      r.stopAll()
-      s.table("type_pcts_q244").select(col("event_type"), col("n_users"),
-        col("p25"), col("p50"), col("p75"), col("med"))
-    }),
-
-    // ── EXACT PERCENTILE_DISC over an upsert changelog driver,
-    //    DRIVER-GATED (round 17 — closing the one degenerate rejection
-    //    a user actually types, VERDICT r16 item 3): the discrete
-    //    cume_dist ≥ p pick over the live per-(group, value) multiset,
-    //    ASC and DESC, targeted by EXACT integer micro-arithmetic
-    //    (⌈m·N/10⁶⌉ via intDiv — no float boundary drift). The oracle
-    //    states the SAME pick rule explicitly (row_number = target)
-    //    rather than trusting DuckDB's quantile_disc convention ──
-    "q246_stream_percentile_disc" -> ((s, dir) => {
-      import graft.sources.{TopicConf, Topics}
-      import org.apache.spark.sql.types._
-      val ev = t(s, dir, "events").where(pmod(col("user_id"), lit(4)) === 0)
-        .select(col("user_id"), col("event_id"), col("event_type"),
-          col("value"), unix_micros(col("ts")).as("ts_us"))
-      val conf = TopicConf(
-        java.nio.file.Files.createTempDirectory("graft-q246").toString)
-      val spKey = "spark.sql.shuffle.partitions"
-      val spPrev = s.conf.get(spKey)
-      s.conf.set(spKey, graft.streaming.StreamReplay.statePartitions.toString)
-      val r = new exec.StreamingStatementRunner(s, topicConf = Some(conf))
-      try {
-        r.registerTopicSource("events_feed_q246", StructType(Seq(
-          StructField("user_id", LongType), StructField("event_type", StringType),
-          StructField("value", DoubleType))))
-        r.runScript("""
-          CREATE TABLE user_latest_q246 (
-            user_id BIGINT, last_event_type STRING, last_value DOUBLE,
-            PRIMARY KEY (user_id) NOT ENFORCED) DISTRIBUTED INTO 1 BUCKETS;
-          INSERT INTO user_latest_q246
-          SELECT user_id, event_type, value FROM events_feed_q246;
-          CREATE TABLE type_disc_q246 (event_type STRING, n_users BIGINT,
-            d50 DOUBLE, d25 DOUBLE, d50r DOUBLE,
-            PRIMARY KEY (event_type) NOT ENFORCED) DISTRIBUTED INTO 1 BUCKETS;
-          INSERT INTO type_disc_q246
-          SELECT last_event_type, count(*) AS n_users,
-                 percentile_disc(0.5) WITHIN GROUP (ORDER BY CAST(user_id % 97 AS DOUBLE)) AS d50,
-                 percentile_disc(0.25) WITHIN GROUP (ORDER BY CAST(user_id % 97 AS DOUBLE)) AS d25,
-                 percentile_disc(0.5) WITHIN GROUP (ORDER BY CAST(user_id % 97 AS DOUBLE) DESC) AS d50r
-          FROM user_latest_q246 GROUP BY last_event_type""")
-      } finally s.conf.set(spKey, spPrev)
-      val bounds = ev.agg(min("ts_us"), max("ts_us")).collect().head
-      val (lo, hi) = (bounds.getLong(0), bounds.getLong(1))
-      val epochs = 4
-      val width = math.max(1L, (hi - lo) / epochs + 1)
-      (0 until epochs).foreach { i =>
-        val slice = ev
-          .where(col("ts_us") >= lo + i * width && col("ts_us") < lo + (i + 1) * width)
-          .groupBy("user_id")
-          .agg(max_by(struct(col("event_type"), col("value")),
-            struct(col("ts_us"), col("event_id"))).as("__l"))
-          .select(col("user_id"), col("__l.event_type"), col("__l.value"))
-        Topics.appendJson(slice, "events_feed_q246", conf, Nil, i + 1)
-        r.processAllAvailable()
-      }
-      r.stopAll()
-      s.table("type_disc_q246").select(col("event_type"), col("n_users"),
-        col("d50"), col("d25"), col("d50r"))
-    }),
-
-    // ── CHAINED multi-dim LEFT OUTER regular join, DRIVER-GATED
-    //    (round 17, VERDICT r16 item 1 — the production enrichment
-    //    shape of `lab-aggregations/main.tf:563` written the way users
-    //    write it, so missing dims never drop facts): facts LEFT JOIN
-    //    a per-user dim LEFT JOIN a per-type dim whose join key is the
-    //    FIRST dim's output (the pad-of-pad dependence). Facts stream
-    //    BEFORE their dims each epoch (maximal pad churn); both dims
-    //    revise independently across epochs. The folded net state must
-    //    equal the batch chained LEFT JOIN over FINAL dim state —
-    //    including the three pad classes the restricted dims leave
-    //    behind: user%8=4 facts (both dims null), 'click'-latest users
-    //    (level-2 null), and fully-enriched rows ──
-    "q245_stream_chained_left_join" -> ((s, dir) => {
-      import graft.sources.{TopicConf, Topics}
-      import org.apache.spark.sql.types._
-      val ev = t(s, dir, "events").where(pmod(col("user_id"), lit(4)) === 0)
-        .select(col("user_id"), col("event_id"), col("event_type"),
-          col("value"), unix_micros(col("ts")).as("ts_us"))
-      val conf = TopicConf(
-        java.nio.file.Files.createTempDirectory("graft-q245").toString)
-      val spKey = "spark.sql.shuffle.partitions"
-      val spPrev = s.conf.get(spKey)
-      s.conf.set(spKey, graft.streaming.StreamReplay.statePartitions.toString)
-      val r = new exec.StreamingStatementRunner(s, topicConf = Some(conf))
-      try {
-        r.registerTopicSource("dim_feed_q245", StructType(Seq(
-          StructField("user_id", LongType), StructField("event_type", StringType))))
-        r.registerTopicSource("band_feed_q245", StructType(Seq(
-          StructField("event_type", StringType), StructField("label", StringType))))
-        r.registerTopicSource("orders_feed_q245", StructType(Seq(
-          StructField("event_id", LongType), StructField("user_id", LongType),
-          StructField("value", DoubleType))))
-        r.runScript("""
-          CREATE TABLE user_dim_q245 (user_id BIGINT, last_event_type STRING,
-            PRIMARY KEY (user_id) NOT ENFORCED) DISTRIBUTED INTO 1 BUCKETS;
-          INSERT INTO user_dim_q245 SELECT user_id, event_type FROM dim_feed_q245;
-          CREATE TABLE band_dim_q245 (event_type STRING, label STRING,
-            PRIMARY KEY (event_type) NOT ENFORCED) DISTRIBUTED INTO 1 BUCKETS;
-          INSERT INTO band_dim_q245 SELECT event_type, label FROM band_feed_q245;
-          CREATE TABLE enriched_q245 (event_id BIGINT, user_id BIGINT,
-            last_event_type STRING, band_label STRING, value DOUBLE, __op STRING)
-            WITH ('changelog.mode' = 'retract', 'join.state.ttl' = '7 d',
-                  'join.state.compact.threshold' = '2');
-          INSERT INTO enriched_q245 (event_id, user_id, last_event_type, band_label, value)
-          SELECT o.event_id, o.user_id, c.last_event_type, b.label, o.value
-          FROM orders_feed_q245 o
-          LEFT JOIN user_dim_q245 c ON o.user_id = c.user_id
-          LEFT JOIN band_dim_q245 b ON c.last_event_type = b.event_type""")
-      } finally s.conf.set(spKey, spPrev)
-      // joinState observability as a GUARD (VERDICT r19 item 5): at
-      // every drain the enriched statement's state report must show
-      // compaction keeping up — un-folded batch dirs can exceed the
-      // threshold by at most the batch just written (maybeCompact
-      // folds dirs STRICTLY BELOW the current batch), and the
-      // gen-atomic publish keeps at most two generations live. The
-      // 7-day TTL exercises the TTL'd read/compact path without
-      // expiring anything in-test, so the folded oracle is unchanged.
-      def assertJoinStateBounded(drain: String): Unit = {
-        val ps = r.progressSummary.filter(_.name.contains("enriched_q245"))
-        require(ps.nonEmpty && ps.forall(_.joinState.nonEmpty),
-          s"q245[$drain]: enriched statement reported no joinState")
-        ps.flatMap(_.joinState).foreach { side =>
-          require(side.batchDirs <= 2 + 1,
-            s"q245[$drain] ${side.table}: ${side.batchDirs} un-folded batch " +
-            s"dirs > compact.threshold+1 — compaction not keeping up")
-          require(side.generations <= 2,
-            s"q245[$drain] ${side.table}: ${side.generations} live " +
-            "generations — superseded generations not pruned")
-          // the fact LOG must be non-empty from the first drain on
-          // (facts stream first); dim snapshots are legitimately empty
-          // until their feed's first revision lands
-          if (side.kind == "log")
-            require(side.bytes > 0 && side.rows > 0,
-              s"q245[$drain] ${side.table}: empty fact-log state report " +
-              s"(rows=${side.rows}, bytes=${side.bytes})")
-        }
-      }
-      val bounds = ev.agg(min("ts_us"), max("ts_us")).collect().head
-      val (lo, hi) = (bounds.getLong(0), bounds.getLong(1))
-      val epochs = 4
-      val width = math.max(1L, (hi - lo) / epochs + 1)
-      (0 until epochs).foreach { i =>
-        val slice = ev
-          .where(col("ts_us") >= lo + i * width && col("ts_us") < lo + (i + 1) * width)
-        // facts FIRST: they pad (or join stale dims), then the dim
-        // revisions retract and upgrade them — the bracket engine's
-        // per-level pad flips carry the correction
-        Topics.appendJson(slice.select("event_id", "user_id", "value"),
-          "orders_feed_q245", conf, Nil, 3 * i + 1)
-        r.processAllAvailable()
-        assertJoinStateBounded(s"e$i-facts")
-        val dim = slice.where(pmod(col("user_id"), lit(8)) === 0)
-          .groupBy("user_id")
-          .agg(max_by(col("event_type"), struct(col("ts_us"), col("event_id")))
-            .as("event_type"))
-        Topics.appendJson(dim, "dim_feed_q245", conf, Nil, 3 * i + 2)
-        r.processAllAvailable()
-        assertJoinStateBounded(s"e$i-dim")
-        val band = slice.where(col("event_type") =!= "click")
-          .select("event_type").distinct()
-          .withColumn("label", lit(s"L$i"))
-        Topics.appendJson(band, "band_feed_q245", conf, Nil, 3 * i + 3)
-        r.processAllAvailable()
-        assertJoinStateBounded(s"e$i-band")
-      }
-      r.stopAll()
-      // fold the retract changelog: the net multiset is the final state
-      s.table("enriched_q245")
-        .groupBy("event_id", "user_id", "last_event_type", "band_label", "value")
-        .agg(sum(when(col("__op").startsWith("-"), -1L).otherwise(1L)).as("__n"))
-        .where(col("__n") === 1L)
-        .select(col("event_id"), col("user_id"), col("last_event_type"),
-          col("band_label"), col("value"))
-    }),
-
-    // ── ARRAY-of-percentages EXACT percentile over an upsert
-    //    changelog driver, DRIVER-GATED (round 18, VERDICT r17
-    //    item 4): q244's latest-per-user multiset with the three
-    //    quartile picks emitted as ONE array<double> stat column —
-    //    the same weighted-Percentile recompute, one pass for N
-    //    picks. Dyadic percentages + small-integer values keep the
-    //    interpolation exact in binary on both engines (the q244
-    //    discipline). The GATE projection unpacks the array into three
-    //    scalar DOUBLE columns (q25/q50/q75): the driver's pandas
-    //    compare cannot sort an ARRAY<DOUBLE> output column
-    //    (unhashable numpy.ndarray — round-18 red row), and top-level
-    //    array/map/struct outputs are now hard-rejected by
-    //    dev/check.py for exactly this reason ──
-    "q248_stream_percentile_array" -> ((s, dir) => {
-      import graft.sources.{TopicConf, Topics}
-      import org.apache.spark.sql.types._
-      val ev = t(s, dir, "events").where(pmod(col("user_id"), lit(4)) === 0)
-        .select(col("user_id"), col("event_id"), col("event_type"),
-          col("value"), unix_micros(col("ts")).as("ts_us"))
-      val conf = TopicConf(
-        java.nio.file.Files.createTempDirectory("graft-q248").toString)
-      val spKey = "spark.sql.shuffle.partitions"
-      val spPrev = s.conf.get(spKey)
-      s.conf.set(spKey, graft.streaming.StreamReplay.statePartitions.toString)
-      val r = new exec.StreamingStatementRunner(s, topicConf = Some(conf))
-      try {
-        r.registerTopicSource("events_feed_q248", StructType(Seq(
-          StructField("user_id", LongType), StructField("event_type", StringType),
-          StructField("value", DoubleType))))
-        r.runScript("""
-          CREATE TABLE user_latest_q248 (
-            user_id BIGINT, last_event_type STRING, last_value DOUBLE,
-            PRIMARY KEY (user_id) NOT ENFORCED) DISTRIBUTED INTO 1 BUCKETS;
-          INSERT INTO user_latest_q248
-          SELECT user_id, event_type, value FROM events_feed_q248;
-          CREATE TABLE type_qs_q248 (event_type STRING, n_users BIGINT,
-            qs ARRAY<DOUBLE>, med DOUBLE,
-            PRIMARY KEY (event_type) NOT ENFORCED) DISTRIBUTED INTO 1 BUCKETS;
-          INSERT INTO type_qs_q248
-          SELECT last_event_type, count(*) AS n_users,
-                 percentile(CAST(user_id % 97 AS DOUBLE), array(0.25, 0.5, 0.75)) AS qs,
-                 percentile(CAST(user_id % 97 AS DOUBLE), 0.5) AS med
-          FROM user_latest_q248 GROUP BY last_event_type""")
-      } finally s.conf.set(spKey, spPrev)
-      val bounds = ev.agg(min("ts_us"), max("ts_us")).collect().head
-      val (lo, hi) = (bounds.getLong(0), bounds.getLong(1))
-      val epochs = 3
-      val width = math.max(1L, (hi - lo) / epochs + 1)
-      (0 until epochs).foreach { i =>
-        val slice = ev
-          .where(col("ts_us") >= lo + i * width && col("ts_us") < lo + (i + 1) * width)
-          .groupBy("user_id")
-          .agg(max_by(struct(col("event_type"), col("value")),
-            struct(col("ts_us"), col("event_id"))).as("__l"))
-          .select(col("user_id"), col("__l.event_type"), col("__l.value"))
-        Topics.appendJson(slice, "events_feed_q248", conf, Nil, i + 1)
-        r.processAllAvailable()
-      }
-      r.stopAll()
-      s.table("type_qs_q248").select(col("event_type"), col("n_users"),
-        col("qs").getItem(0).as("q25"), col("qs").getItem(1).as("q50"),
-        col("qs").getItem(2).as("q75"), col("med"))
-    }),
-
-    // ── MULTI-USE CTE SELF-JOIN regular join, DRIVER-GATED (round 18,
-    //    VERDICT r17 item 3): a CTE over the fact feed referenced
-    //    TWICE (same-user event pairs) joined to a revisable user dim.
-    //    Each CTE site routes as its OWN side (per-occurrence
-    //    renaming), so the cross terms — a new fact pairing against
-    //    the OTHER site's logged state — and dim-revision re-emission
-    //    both hold. The folded net state must equal the batch pair
-    //    join over the FINAL dim state ──
-    "q249_stream_cte_selfjoin" -> ((s, dir) => {
-      import graft.sources.{TopicConf, Topics}
-      import org.apache.spark.sql.types._
-      val ev = t(s, dir, "events").where(pmod(col("user_id"), lit(4)) === 0)
-        .select(col("user_id"), col("event_id"), col("event_type"),
-          unix_micros(col("ts")).as("ts_us"))
-      val conf = TopicConf(
-        java.nio.file.Files.createTempDirectory("graft-q249").toString)
-      val spKey = "spark.sql.shuffle.partitions"
-      val spPrev = s.conf.get(spKey)
-      s.conf.set(spKey, graft.streaming.StreamReplay.statePartitions.toString)
-      val r = new exec.StreamingStatementRunner(s, topicConf = Some(conf))
-      try {
-        r.registerTopicSource("facts_feed_q249", StructType(Seq(
-          StructField("event_id", LongType), StructField("user_id", LongType))))
-        r.registerTopicSource("dim_feed_q249", StructType(Seq(
-          StructField("user_id", LongType), StructField("label", StringType))))
-        r.runScript("""
-          CREATE TABLE user_dim_q249 (user_id BIGINT, label STRING,
-            PRIMARY KEY (user_id) NOT ENFORCED) DISTRIBUTED INTO 1 BUCKETS;
-          INSERT INTO user_dim_q249 SELECT user_id, label FROM dim_feed_q249;
-          CREATE TABLE pairs_q249 (eid1 BIGINT, eid2 BIGINT, user_id BIGINT,
-            label STRING, __op STRING) WITH ('changelog.mode' = 'retract');
-          INSERT INTO pairs_q249 (eid1, eid2, user_id, label)
-          WITH e AS (SELECT event_id, user_id FROM facts_feed_q249)
-          SELECT a.event_id, b.event_id, a.user_id, d.label
-          FROM e a
-          JOIN e b ON a.user_id = b.user_id AND a.event_id < b.event_id
-          JOIN user_dim_q249 d ON a.user_id = d.user_id""")
-      } finally s.conf.set(spKey, spPrev)
-      val bounds = ev.agg(min("ts_us"), max("ts_us")).collect().head
-      val (lo, hi) = (bounds.getLong(0), bounds.getLong(1))
-      val epochs = 3
-      val width = math.max(1L, (hi - lo) / epochs + 1)
-      (0 until epochs).foreach { i =>
-        val slice = ev
-          .where(col("ts_us") >= lo + i * width && col("ts_us") < lo + (i + 1) * width)
-        // facts FIRST (pairs form against both sites' logged state),
-        // then the dim revision re-labels every logged pair
-        Topics.appendJson(slice.where(pmod(col("user_id"), lit(8)) === 0)
-          .select("event_id", "user_id"), "facts_feed_q249", conf, Nil, 2 * i + 1)
-        r.processAllAvailable()
-        val dim = slice.where(pmod(col("user_id"), lit(8)) === 0)
-          .select("user_id").distinct()
-          .withColumn("label", lit(s"L$i"))
-        Topics.appendJson(dim, "dim_feed_q249", conf, Nil, 2 * i + 2)
-        r.processAllAvailable()
-      }
-      r.stopAll()
-      s.table("pairs_q249")
-        .groupBy("eid1", "eid2", "user_id", "label")
-        .agg(sum(when(col("__op").startsWith("-"), -1L).otherwise(1L)).as("__n"))
-        .where(col("__n") === 1L)
-        .select(col("eid1"), col("eid2"), col("user_id"), col("label"))
-    }),
-
-    // ── BUSHY (non-left-deep) regular join, DRIVER-GATED (round 18):
-    //    facts LEFT JOIN a COMPOSED LOOKUP — (user_dim INNER band_dim
-    //    keyed on the user dim's output) as the right OPERAND. Both
-    //    subtree dims bracket at the LEFT node (inner-flip through
-    //    the bushy subtree + the facts-preserving pad pre/post); a
-    //    fact pads when its user has no dim row OR its latest type
-    //    has no band (the INNER inside drops half-complete lookups).
-    //    The folded net state must equal the batch bushy join over
-    //    FINAL dim states ──
-    "q251_stream_bushy_join" -> ((s, dir) => {
-      import graft.sources.{TopicConf, Topics}
-      import org.apache.spark.sql.types._
-      val ev = t(s, dir, "events").where(pmod(col("user_id"), lit(4)) === 0)
-        .select(col("user_id"), col("event_id"), col("event_type"),
-          col("value"), unix_micros(col("ts")).as("ts_us"))
-      val conf = TopicConf(
-        java.nio.file.Files.createTempDirectory("graft-q251").toString)
-      val spKey = "spark.sql.shuffle.partitions"
-      val spPrev = s.conf.get(spKey)
-      s.conf.set(spKey, graft.streaming.StreamReplay.statePartitions.toString)
-      val r = new exec.StreamingStatementRunner(s, topicConf = Some(conf))
-      try {
-        r.registerTopicSource("dim_feed_q251", StructType(Seq(
-          StructField("user_id", LongType), StructField("event_type", StringType))))
-        r.registerTopicSource("band_feed_q251", StructType(Seq(
-          StructField("event_type", StringType), StructField("label", StringType))))
-        r.registerTopicSource("orders_feed_q251", StructType(Seq(
-          StructField("event_id", LongType), StructField("user_id", LongType),
-          StructField("value", DoubleType))))
-        r.runScript("""
-          CREATE TABLE user_dim_q251 (user_id BIGINT, last_event_type STRING,
-            PRIMARY KEY (user_id) NOT ENFORCED) DISTRIBUTED INTO 1 BUCKETS;
-          INSERT INTO user_dim_q251 SELECT user_id, event_type FROM dim_feed_q251;
-          CREATE TABLE band_dim_q251 (event_type STRING, label STRING,
-            PRIMARY KEY (event_type) NOT ENFORCED) DISTRIBUTED INTO 1 BUCKETS;
-          INSERT INTO band_dim_q251 SELECT event_type, label FROM band_feed_q251;
-          CREATE TABLE enriched_q251 (event_id BIGINT, user_id BIGINT,
-            last_event_type STRING, band_label STRING, value DOUBLE, __op STRING)
-            WITH ('changelog.mode' = 'retract');
-          INSERT INTO enriched_q251 (event_id, user_id, last_event_type, band_label, value)
-          SELECT o.event_id, o.user_id, c.last_event_type, b.label, o.value
-          FROM orders_feed_q251 o
-          LEFT JOIN (user_dim_q251 c
-                     JOIN band_dim_q251 b ON c.last_event_type = b.event_type)
-            ON o.user_id = c.user_id""")
-      } finally s.conf.set(spKey, spPrev)
-      val bounds = ev.agg(min("ts_us"), max("ts_us")).collect().head
-      val (lo, hi) = (bounds.getLong(0), bounds.getLong(1))
-      val epochs = 3
-      val width = math.max(1L, (hi - lo) / epochs + 1)
-      (0 until epochs).foreach { i =>
-        val slice = ev
-          .where(col("ts_us") >= lo + i * width && col("ts_us") < lo + (i + 1) * width)
-        Topics.appendJson(slice.select("event_id", "user_id", "value"),
-          "orders_feed_q251", conf, Nil, 3 * i + 1)
-        r.processAllAvailable()
-        val dim = slice.where(pmod(col("user_id"), lit(8)) === 0)
-          .groupBy("user_id")
-          .agg(max_by(col("event_type"), struct(col("ts_us"), col("event_id")))
-            .as("event_type"))
-        Topics.appendJson(dim, "dim_feed_q251", conf, Nil, 3 * i + 2)
-        r.processAllAvailable()
-        val band = slice.where(col("event_type") =!= "click")
-          .select("event_type").distinct()
-          .withColumn("label",
-            concat(lit(s"L${i}_"), col("event_type")))
-        Topics.appendJson(band, "band_feed_q251", conf, Nil, 3 * i + 3)
-        r.processAllAvailable()
-      }
-      r.stopAll()
-      s.table("enriched_q251")
-        .groupBy("event_id", "user_id", "last_event_type", "band_label", "value")
-        .agg(sum(when(col("__op").startsWith("-"), -1L).otherwise(1L)).as("__n"))
-        .where(col("__n") === 1L)
-        .select(col("event_id"), col("user_id"), col("last_event_type"),
-          col("band_label"), col("value"))
-    }),
-
-    // ── DOUBLY-NULL-DOMINATED regular join, DRIVER-GATED (round 18 —
-    //    the multi-node bracket): facts LEFT JOIN a per-user dim
-    //    RIGHT JOIN a per-type band keyed on the LEFT dim's output.
-    //    The user dim is null-produced by BOTH nodes (its own LEFT and
-    //    the RIGHT above), so its bracket runs the top-down expansion:
-    //    one delta term through both inner flips + a pre/post pair per
-    //    node's terminal pad. Facts stream BEFORE dims each epoch; the
-    //    folded net state must equal the batch LEFT+RIGHT join over
-    //    FINAL dim states — enriched rows, right pads (band types no
-    //    user's latest type matches, whole left side null), and the
-    //    DROP of facts whose latest type has no band ('click') or
-    //    whose user has no dim row (RIGHT preserves only bands) ──
-    // ── MULTI-COLUMN count(DISTINCT a, b) over an upsert changelog
-    //    driver, DRIVER-GATED (round 19, VERDICT r18 item 5): the
-    //    STRUCT-KEYED per-(group, value-tuple) multiset — previously
-    //    spec-only (ValueSetAggSpec). Each user revision retracts its
-    //    old (user_id % 16, event_id % 8) pair from its group's
-    //    multiset; a pair survives until its LAST holder leaves. The
-    //    final state must equal the batch latest-per-key aggregate.
-    //    The oracle encodes the pair as a*8+b (b < 8, both mods
-    //    non-negative — exact integer bijection), keeping the OUTPUT
-    //    flat while the engine exercises the true multi-column form ──
-    "q252_stream_multicol_distinct" -> ((s, dir) => {
-      import graft.sources.{TopicConf, Topics}
-      import org.apache.spark.sql.types._
-      val ev = t(s, dir, "events").where(pmod(col("user_id"), lit(4)) === 0)
-        .select(col("user_id"), col("event_id"), col("event_type"),
-          unix_micros(col("ts")).as("ts_us"))
-      val conf = TopicConf(
-        java.nio.file.Files.createTempDirectory("graft-q252").toString)
-      val spKey = "spark.sql.shuffle.partitions"
-      val spPrev = s.conf.get(spKey)
-      s.conf.set(spKey, graft.streaming.StreamReplay.statePartitions.toString)
-      val r = new exec.StreamingStatementRunner(s, topicConf = Some(conf))
-      try {
-        r.registerTopicSource("events_feed_q252", StructType(Seq(
-          StructField("user_id", LongType), StructField("event_id", LongType),
-          StructField("event_type", StringType), StructField("ts_us", LongType))))
-        r.runScript("""
-          CREATE TABLE user_latest_q252 (
-            user_id BIGINT, last_event_id BIGINT, last_event_type STRING, ts_us BIGINT,
-            PRIMARY KEY (user_id) NOT ENFORCED) DISTRIBUTED INTO 1 BUCKETS;
-          INSERT INTO user_latest_q252
-          SELECT user_id, event_id, event_type, ts_us FROM events_feed_q252;
-          CREATE TABLE type_pairs_q252 (event_type STRING, n_users BIGINT,
-            n_pairs BIGINT,
-            PRIMARY KEY (event_type) NOT ENFORCED) DISTRIBUTED INTO 1 BUCKETS;
-          INSERT INTO type_pairs_q252
-          SELECT last_event_type, count(*) AS n_users,
-                 count(DISTINCT user_id % 16, last_event_id % 8) AS n_pairs
-          FROM user_latest_q252 GROUP BY last_event_type""")
-      } finally s.conf.set(spKey, spPrev)
-      val bounds = ev.agg(min("ts_us"), max("ts_us")).collect().head
-      val (lo, hi) = (bounds.getLong(0), bounds.getLong(1))
-      val epochs = 4
-      val width = math.max(1L, (hi - lo) / epochs + 1)
-      (0 until epochs).foreach { i =>
-        val slice = ev
-          .where(col("ts_us") >= lo + i * width && col("ts_us") < lo + (i + 1) * width)
-          .groupBy("user_id")
-          .agg(max_by(struct(col("event_id"), col("event_type"), col("ts_us")),
-            struct(col("ts_us"), col("event_id"))).as("__l"))
-          .select(col("user_id"), col("__l.event_id"), col("__l.event_type"),
-            col("__l.ts_us"))
-        Topics.appendJson(slice, "events_feed_q252", conf, Nil, i + 1)
-        r.processAllAvailable()
-      }
-      r.stopAll()
-      s.table("type_pairs_q252").select(col("event_type"), col("n_users"),
-        col("n_pairs"))
-    }),
-
-    "q250_stream_doubly_dominated_join" -> ((s, dir) => {
-      import graft.sources.{TopicConf, Topics}
-      import org.apache.spark.sql.types._
-      val ev = t(s, dir, "events").where(pmod(col("user_id"), lit(4)) === 0)
-        .select(col("user_id"), col("event_id"), col("event_type"),
-          col("value"), unix_micros(col("ts")).as("ts_us"))
-      val conf = TopicConf(
-        java.nio.file.Files.createTempDirectory("graft-q250").toString)
-      val spKey = "spark.sql.shuffle.partitions"
-      val spPrev = s.conf.get(spKey)
-      s.conf.set(spKey, graft.streaming.StreamReplay.statePartitions.toString)
-      val r = new exec.StreamingStatementRunner(s, topicConf = Some(conf))
-      try {
-        r.registerTopicSource("dim_feed_q250", StructType(Seq(
-          StructField("user_id", LongType), StructField("event_type", StringType))))
-        r.registerTopicSource("band_feed_q250", StructType(Seq(
-          StructField("event_type", StringType), StructField("label", StringType))))
-        r.registerTopicSource("orders_feed_q250", StructType(Seq(
-          StructField("event_id", LongType), StructField("user_id", LongType),
-          StructField("value", DoubleType))))
-        r.runScript("""
-          CREATE TABLE user_dim_q250 (user_id BIGINT, last_event_type STRING,
-            PRIMARY KEY (user_id) NOT ENFORCED) DISTRIBUTED INTO 1 BUCKETS;
-          INSERT INTO user_dim_q250 SELECT user_id, event_type FROM dim_feed_q250;
-          CREATE TABLE band_dim_q250 (event_type STRING, label STRING,
-            PRIMARY KEY (event_type) NOT ENFORCED) DISTRIBUTED INTO 1 BUCKETS;
-          INSERT INTO band_dim_q250 SELECT event_type, label FROM band_feed_q250;
-          CREATE TABLE enriched_q250 (event_id BIGINT, user_id BIGINT,
-            last_event_type STRING, band_label STRING, value DOUBLE, __op STRING)
-            WITH ('changelog.mode' = 'retract');
-          INSERT INTO enriched_q250 (event_id, user_id, last_event_type, band_label, value)
-          SELECT o.event_id, o.user_id, c.last_event_type, b.label, o.value
-          FROM orders_feed_q250 o
-          LEFT JOIN user_dim_q250 c ON o.user_id = c.user_id
-          RIGHT JOIN band_dim_q250 b ON c.last_event_type = b.event_type""")
-      } finally s.conf.set(spKey, spPrev)
-      val bounds = ev.agg(min("ts_us"), max("ts_us")).collect().head
-      val (lo, hi) = (bounds.getLong(0), bounds.getLong(1))
-      val epochs = 3
-      val width = math.max(1L, (hi - lo) / epochs + 1)
-      (0 until epochs).foreach { i =>
-        val slice = ev
-          .where(col("ts_us") >= lo + i * width && col("ts_us") < lo + (i + 1) * width)
-        Topics.appendJson(slice.select("event_id", "user_id", "value"),
-          "orders_feed_q250", conf, Nil, 3 * i + 1)
-        r.processAllAvailable()
-        val dim = slice.where(pmod(col("user_id"), lit(8)) === 0)
-          .groupBy("user_id")
-          .agg(max_by(col("event_type"), struct(col("ts_us"), col("event_id")))
-            .as("event_type"))
-        Topics.appendJson(dim, "dim_feed_q250", conf, Nil, 3 * i + 2)
-        r.processAllAvailable()
-        val band = slice.where(col("event_type") =!= "click")
-          .select("event_type").distinct()
-          .withColumn("label",
-            concat(lit(s"L${i}_"), col("event_type")))
-        Topics.appendJson(band, "band_feed_q250", conf, Nil, 3 * i + 3)
-        r.processAllAvailable()
-      }
-      r.stopAll()
-      s.table("enriched_q250")
-        .groupBy("event_id", "user_id", "last_event_type", "band_label", "value")
-        .agg(sum(when(col("__op").startsWith("-"), -1L).otherwise(1L)).as("__n"))
-        .where(col("__n") === 1L)
-        .select(col("event_id"), col("user_id"), col("last_event_type"),
-          col("band_label"), col("value"))
-    }),
-
-    // ── MID-CHAIN FULL OUTER regular join, DRIVER-GATED (round 18,
-    //    VERDICT r17 item 2 — the affect-set bracket generalization):
-    //    facts INNER JOIN a per-user dim FULL JOIN a per-type dim
-    //    keyed on the FIRST dim's output. The FULL node null-dominates
-    //    the whole left subtree (facts + inner dim each bracket at it:
-    //    inner-flip + right-preserving pad pre/post + own LEFT pad
-    //    over Δ) and anti-joins its right child (band: inner-flip +
-    //    left-preserving pad pre/post + own RIGHT pad over Δ). Facts
-    //    stream BEFORE dims each epoch; both dims revise across
-    //    epochs. The folded net state must equal the batch INNER+FULL
-    //    join over FINAL dim states — fully-enriched rows, left pads
-    //    ('click'-latest users: null band), and right pads (band
-    //    types no user's latest type matches: whole left side null) ──
-    "q247_stream_midchain_full_join" -> ((s, dir) => {
-      import graft.sources.{TopicConf, Topics}
-      import org.apache.spark.sql.types._
-      val ev = t(s, dir, "events").where(pmod(col("user_id"), lit(4)) === 0)
-        .select(col("user_id"), col("event_id"), col("event_type"),
-          col("value"), unix_micros(col("ts")).as("ts_us"))
-      val conf = TopicConf(
-        java.nio.file.Files.createTempDirectory("graft-q247").toString)
-      val spKey = "spark.sql.shuffle.partitions"
-      val spPrev = s.conf.get(spKey)
-      s.conf.set(spKey, graft.streaming.StreamReplay.statePartitions.toString)
-      val r = new exec.StreamingStatementRunner(s, topicConf = Some(conf))
-      try {
-        r.registerTopicSource("dim_feed_q247", StructType(Seq(
-          StructField("user_id", LongType), StructField("event_type", StringType))))
-        r.registerTopicSource("band_feed_q247", StructType(Seq(
-          StructField("event_type", StringType), StructField("label", StringType))))
-        r.registerTopicSource("orders_feed_q247", StructType(Seq(
-          StructField("event_id", LongType), StructField("user_id", LongType),
-          StructField("value", DoubleType))))
-        r.runScript("""
-          CREATE TABLE user_dim_q247 (user_id BIGINT, last_event_type STRING,
-            PRIMARY KEY (user_id) NOT ENFORCED) DISTRIBUTED INTO 1 BUCKETS;
-          INSERT INTO user_dim_q247 SELECT user_id, event_type FROM dim_feed_q247;
-          CREATE TABLE band_dim_q247 (event_type STRING, label STRING,
-            PRIMARY KEY (event_type) NOT ENFORCED) DISTRIBUTED INTO 1 BUCKETS;
-          INSERT INTO band_dim_q247 SELECT event_type, label FROM band_feed_q247;
-          CREATE TABLE enriched_q247 (event_id BIGINT, user_id BIGINT,
-            last_event_type STRING, band_label STRING, value DOUBLE, __op STRING)
-            WITH ('changelog.mode' = 'retract');
-          INSERT INTO enriched_q247 (event_id, user_id, last_event_type, band_label, value)
-          SELECT o.event_id, o.user_id, c.last_event_type, b.label, o.value
-          FROM orders_feed_q247 o
-          JOIN user_dim_q247 c ON o.user_id = c.user_id
-          FULL JOIN band_dim_q247 b ON c.last_event_type = b.event_type""")
-      } finally s.conf.set(spKey, spPrev)
-      val bounds = ev.agg(min("ts_us"), max("ts_us")).collect().head
-      val (lo, hi) = (bounds.getLong(0), bounds.getLong(1))
-      val epochs = 3
-      val width = math.max(1L, (hi - lo) / epochs + 1)
-      (0 until epochs).foreach { i =>
-        val slice = ev
-          .where(col("ts_us") >= lo + i * width && col("ts_us") < lo + (i + 1) * width)
-        // facts FIRST: INNER-gated until their dim arrives, then the
-        // dim write flows them through the FULL node (retracting any
-        // right pad their latest type was holding up)
-        Topics.appendJson(slice.select("event_id", "user_id", "value"),
-          "orders_feed_q247", conf, Nil, 3 * i + 1)
-        r.processAllAvailable()
-        val dim = slice.where(pmod(col("user_id"), lit(8)) === 0)
-          .groupBy("user_id")
-          .agg(max_by(col("event_type"), struct(col("ts_us"), col("event_id")))
-            .as("event_type"))
-        Topics.appendJson(dim, "dim_feed_q247", conf, Nil, 3 * i + 2)
-        r.processAllAvailable()
-        // label unique PER TYPE (not just per epoch): identical right-
-        // pad rows would net past 1 and vanish from the ==1 fold below
-        val band = slice.where(col("event_type") =!= "click")
-          .select("event_type").distinct()
-          .withColumn("label",
-            concat(lit(s"L${i}_"), col("event_type")))
-        Topics.appendJson(band, "band_feed_q247", conf, Nil, 3 * i + 3)
-        r.processAllAvailable()
-      }
-      r.stopAll()
-      // fold the retract changelog: the net multiset is the final state
-      s.table("enriched_q247")
-        .groupBy("event_id", "user_id", "last_event_type", "band_label", "value")
-        .agg(sum(when(col("__op").startsWith("-"), -1L).otherwise(1L)).as("__n"))
-        .where(col("__n") === 1L)
-        .select(col("event_id"), col("user_id"), col("last_event_type"),
-          col("band_label"), col("value"))
-    }),
-
     // ── SAME-ID REPLACE lifecycle on the persisted IVF index
     //    (Similarity.scala § appendToIvfIndex): vec 42's embedding is
     //    replaced by vec 43's through tombstone → compact → append
@@ -4540,7 +2742,1023 @@ object SparkEntry {
         while (i < r.content.length) { sum += (r.content(i) & 0xFF); i += 1 }
         (r.id, r.width, r.height, r.content.length, sum)
       }.toDF("id", "out_w", "out_h", "n_bytes_out", "byte_sum")
-    }))
+    })) ++ runnerGates.map { case (name, gate) =>
+      name -> ((s: SparkSession, dir: String) => runGate(s, name, gate(s, dir)))
+    }
+
+  /** The runner gates: each entry builds its
+    * [[RunnerGate]] value, and [[queries]] runs it through
+    * [[runGate]]. */
+  private[graft] def runnerGates: Map[String, (SparkSession, String) => RunnerGate] = Map(
+
+    // ── STREAMING UPSERT through the STATEMENT RUNNER, DRIVER-GATED
+    //    (round 12): the reference's S1 shape end-to-end — JSON topic
+    //    feed, registered source, CREATE TABLE with PRIMARY KEY,
+    //    long-running INSERT — with events replayed in 4 event-time
+    //    epochs. Each epoch carries at most one row per key (its
+    //    max-(ts, event_id) row), so arrival order is deterministic and
+    //    the final materialized state equals the batch latest-per-key
+    //    oracle (q05's SQL) ──
+    "q202_stream_upsert_runner" -> ((s, dir) => s1Upsert(s, dir, "q202")),
+
+    // ── SOURCE-SIDE TOMBSTONE path through the STATEMENT RUNNER,
+    //    DRIVER-GATED (round 12): the compacted-topic DELETE contract
+    //    end-to-end — an INSERT whose select tags 'error' events
+    //    `__op = '-D'` writes null-value tombstones to the PK table's
+    //    topic (Topics.appendJson keyed encode), and the materialized
+    //    view folds latest-by-offset FIRST, tombstone-filter AFTER, so
+    //    a user whose LAST event is an error disappears (and a later
+    //    non-error event resurrects the key). Epochs are event-time
+    //    slices reduced to one row per key (q202's determinism trick),
+    //    so arrival order = (ts, event_id) order and the final state
+    //    equals the batch last-event-wins oracle ──
+    "q210_stream_tombstone_runner" -> ((s, dir) => {
+      val ev = events(s, dir, quarter = false)
+      RunnerGate(Seq("events_feed_q210" -> EventDdl), """
+        CREATE TABLE user_live_q210 (
+          user_id BIGINT, last_event_id BIGINT, last_value DOUBLE, ts_us BIGINT,
+          __op STRING,
+          PRIMARY KEY (user_id) NOT ENFORCED) DISTRIBUTED INTO 1 BUCKETS;
+        INSERT INTO user_live_q210
+        SELECT user_id, event_id, value, ts_us,
+          CASE WHEN event_type = 'error' THEN '-D' ELSE '+U' END
+        FROM events_feed_q210""",
+        ev, epochs = 4, upsertFeed("events_feed_q210", ev, EventCols: _*),
+        Project("user_live_q210", col("user_id"), col("last_event_id"),
+          col("last_value"), col("ts_us")))
+    }),
+
+    // ── CHECKPOINTED RESTART of the long-running INSERT path, DRIVER-
+    //    GATED (round 13, VERDICT r12 item 1): q202's S1 pipeline with
+    //    the runner KILLED after epoch 2 and a NEW runner resumed on
+    //    the same topics + checkpoints (same script re-run, the
+    //    reference's re-applied-statement contract). The checkpoint
+    //    keeps the restarted source from re-reading epochs 1–2 and the
+    //    epoch-idempotent sink keeps any replayed batch from
+    //    double-appending, so the final materialized state equals the
+    //    uninterrupted batch oracle (q202's SQL) ──
+    "q224_stream_restart_runner" -> ((s, dir) =>
+      s1Upsert(s, dir, "q224", restartAfter = Some(2))),
+
+    // ── TABLE-TO-TABLE CONTINUOUS INSERT, DRIVER-GATED (round 13):
+    //    statement B's FROM references only statement A's table, so the
+    //    runner PROMOTES A to its changelog stream — B receives every
+    //    per-epoch upsert revision exactly once. With the feed split
+    //    into 4 event-time quartile epochs (each pre-folded to its
+    //    max-(ts, event_id) row per key), B's content IS the per-
+    //    (epoch, user) folded row set, which the oracle reproduces by
+    //    re-deriving the integer epoch boundaries ──
+    "q225_stream_chained_insert" -> ((s, dir) =>
+      s1Upsert(s, dir, "q225", chained = true)),
+
+    // ── AGGREGATE over a promoted APPEND driver, DRIVER-GATED: an
+    //    append table is a true insert stream, so the continuous
+    //    GROUP BY runs as NATIVE streaming aggregation (no retraction
+    //    machinery — contrast q227/q228, whose changelog drivers fold
+    //    signed revisions), revising per-key counts in update mode and
+    //    landing on the batch aggregate.
+    //    Raw events flow unfolded through 4 epochs so the count
+    //    genuinely accumulates cross-batch state ──
+    "q226_stream_promoted_agg" -> ((s, dir) => {
+      val ev = events(s, dir)
+      RunnerGate(Seq("events_raw_q226" -> "user_id BIGINT, event_id BIGINT, ts_us BIGINT"), """
+          CREATE TABLE events_log_q226 (user_id BIGINT, event_id BIGINT, ts_us BIGINT);
+          INSERT INTO events_log_q226 SELECT user_id, event_id, ts_us FROM events_raw_q226;
+          CREATE TABLE user_counts_q226 (user_id BIGINT, n_events BIGINT,
+            PRIMARY KEY (user_id) NOT ENFORCED) DISTRIBUTED INTO 1 BUCKETS;
+          INSERT INTO user_counts_q226
+          SELECT user_id, count(*) AS n_events FROM events_log_q226 GROUP BY user_id""",
+        ev, epochs = 4,
+        e => i => Seq("events_raw_q226" -> e.slice(ev, i).select("user_id", "event_id", "ts_us")),
+        Project("user_counts_q226", col("user_id"), col("n_events")))
+    }),
+
+    // ── RETRACTION-AWARE AGGREGATE over an UPSERT changelog driver,
+    //    DRIVER-GATED (round 14, VERDICT r13 item 1 — the Flink
+    //    semantic the reference's aggregation lab runs first:
+    //    GROUP BY over shoe_customers_keyed,
+    //    terraform/lab-aggregations/main.tf:396,431): the S1 pipeline
+    //    revises user_latest per epoch; the chained aggregate folds
+    //    each revision as retract-prior + add-new (ChangelogNormalize
+    //    → RetractAggRewrite), so a user whose latest event_type
+    //    changes MOVES between groups. Final state = the aggregate
+    //    over batch latest-per-key — a revision-counting aggregate
+    //    would disagree on every re-keyed user ──
+    "q227_stream_retract_agg_upsert" -> ((s, dir) => {
+      val ev = events(s, dir, quarter = false)
+      RunnerGate(Seq("events_feed_q227" -> EventDdl), """
+          CREATE TABLE user_latest_q227 (
+            user_id BIGINT, last_event_id BIGINT, last_event_type STRING,
+            last_value DOUBLE, ts_us BIGINT,
+            PRIMARY KEY (user_id) NOT ENFORCED) DISTRIBUTED INTO 1 BUCKETS;
+          INSERT INTO user_latest_q227
+          SELECT user_id, event_id, event_type, value, ts_us FROM events_feed_q227;
+          CREATE TABLE type_stats_q227 (event_type STRING, n_users BIGINT,
+            sum_value DOUBLE,
+            PRIMARY KEY (event_type) NOT ENFORCED) DISTRIBUTED INTO 1 BUCKETS;
+          INSERT INTO type_stats_q227
+          SELECT last_event_type, count(*) AS n_users,
+                 CAST(sum(CAST(last_value AS DECIMAL(18,4))) AS DOUBLE) AS sum_value
+          FROM user_latest_q227 GROUP BY last_event_type""",
+        ev, epochs = 4, upsertFeed("events_feed_q227", ev, EventCols: _*),
+        Project("type_stats_q227", col("event_type"), col("n_users"), col("sum_value")))
+    }),
+
+    // ── RETRACT-MODE topic consumed by a chained aggregate, DRIVER-
+    //    GATED (round 14, VERDICT r13 item 3 — S5's
+    //    changelog.mode=retract, lab-aggregations/main.tf:530): the
+    //    per-user revision chain rides the topic as EXPLICIT -U/+U
+    //    pairs; the chained statement folds the __op tag as the sign
+    //    channel (no normalize state needed). Final aggregate state =
+    //    the batch aggregate over each user's last revision ──
+    "q228_stream_retract_consume" -> ((s, dir) => {
+      val ev = events(s, dir)
+      RunnerGate(Seq("rev_feed_q228" ->
+          "user_id BIGINT, event_id BIGINT, event_type STRING, value DOUBLE, ts_us BIGINT, __op STRING"), """
+          CREATE TABLE rev_log_q228 (user_id BIGINT, event_id BIGINT,
+            event_type STRING, value DOUBLE, ts_us BIGINT, __op STRING)
+            WITH ('changelog.mode' = 'retract');
+          INSERT INTO rev_log_q228
+          SELECT user_id, event_id, event_type, value, ts_us, __op FROM rev_feed_q228;
+          CREATE TABLE type_stats_q228 (event_type STRING, n_rows BIGINT,
+            sum_value DOUBLE,
+            PRIMARY KEY (event_type) NOT ENFORCED) DISTRIBUTED INTO 1 BUCKETS;
+          INSERT INTO type_stats_q228
+          SELECT event_type, count(*) AS n_rows,
+                 CAST(sum(CAST(value AS DECIMAL(18,4))) AS DOUBLE) AS sum_value
+          FROM rev_log_q228 GROUP BY event_type""",
+        ev, epochs = 4, e => {
+          // per-(epoch, user) fold, then the EXPLICIT retract chain: the
+          // first revision of a user is +I; each later one emits -U with
+          // the PRIOR epoch-fold's full row, then +U with its own
+          // integral div (not `/`, which is double division and can round a
+          // boundary timestamp into the adjacent epoch); operands non-negative
+          val folded = ev
+            .withColumn("ep", expr(s"(ts_us - ${e.lo}L) div ${e.width}L"))
+            .groupBy(col("ep"), col("user_id"))
+            .agg(max_by(struct(col("event_id"), col("event_type"), col("value"),
+              col("ts_us")), struct(col("ts_us"), col("event_id"))).as("__l"))
+            .select(col("ep"), col("user_id"), col("__l.event_id"),
+              col("__l.event_type"), col("__l.value"), col("__l.ts_us"))
+          val w = Window.partitionBy(col("user_id")).orderBy(col("ep"))
+          val chained = folded
+            .withColumn("p_event_id", lag(col("event_id"), 1).over(w))
+            .withColumn("p_event_type", lag(col("event_type"), 1).over(w))
+            .withColumn("p_value", lag(col("value"), 1).over(w))
+            .withColumn("p_ts_us", lag(col("ts_us"), 1).over(w))
+            .localCheckpoint() // 4 epoch filters below re-scan this frame
+          i => {
+            val cur = chained.where(col("ep") === i)
+            val adds = cur.select(col("user_id"), col("event_id"), col("event_type"),
+              col("value"), col("ts_us"),
+              when(col("p_event_id").isNull, lit("+I")).otherwise(lit("+U")).as("__op"))
+            val retracts = cur.where(col("p_event_id").isNotNull)
+              .select(col("user_id"), col("p_event_id").as("event_id"),
+                col("p_event_type").as("event_type"), col("p_value").as("value"),
+                col("p_ts_us").as("ts_us"), lit("-U").as("__op"))
+            Seq("rev_feed_q228" -> adds.unionByName(retracts))
+          }
+        },
+        Project("type_stats_q228", col("event_type"), col("n_rows"), col("sum_value")))
+    }),
+
+    // ── MERGE-ON-WRITE AGGREGATE over a SNAPSHOT JOIN, DRIVER-GATED
+    //    (round 14): `stream JOIN dim GROUP BY` — the shape that used
+    //    to reject ("batch-local partial aggregates") — now folds
+    //    continuously: each epoch's signed deltas cross the snapshot
+    //    join and merge onto the target topic's prior state (offset-
+    //    filtered to earlier epochs, replay-idempotent). Final state
+    //    must equal the batch join + aggregate ──
+    "q229_stream_merge_join_agg" -> ((s, dir) => {
+      val ev = events(s, dir)
+      t(s, dir, "customer").select(col("c_custkey"), col("c_mktsegment"))
+        .createOrReplaceTempView("cust_dim_q229")
+      RunnerGate(Seq("events_raw_q229" ->
+          "user_id BIGINT, event_id BIGINT, ts_us BIGINT, value DOUBLE"), """
+          CREATE TABLE seg_stats_q229 (segment STRING, n_events BIGINT,
+            sum_value DOUBLE,
+            PRIMARY KEY (segment) NOT ENFORCED) DISTRIBUTED INTO 1 BUCKETS;
+          INSERT INTO seg_stats_q229
+          SELECT c.c_mktsegment, count(*) AS n_events,
+                 CAST(sum(CAST(e.value AS DECIMAL(18,4))) AS DOUBLE) AS sum_value
+          FROM events_raw_q229 e JOIN cust_dim_q229 c ON e.user_id = c.c_custkey
+          GROUP BY c.c_mktsegment""",
+        ev, epochs = 4, e => i => Seq("events_raw_q229" ->
+          e.slice(ev, i).select("user_id", "event_id", "ts_us", "value")),
+        Project("seg_stats_q229", col("segment"), col("n_events"), col("sum_value")))
+    }),
+
+    // ── MERGE AGGREGATE over a PROMOTED UPSERT DRIVER + dim join,
+    //    DRIVER-GATED (round 14): the hardest changelog shape — each
+    //    per-epoch revision of user_latest RETRACTS its prior
+    //    contribution from the joined group and adds the new one, so a
+    //    user whose latest value changes revises their segment's sum
+    //    in place. Final state must equal batch latest-per-key ⋈ dim ⋈
+    //    aggregate ──
+    "q230_stream_merge_upsert_join_agg" -> ((s, dir) => {
+      val ev = events(s, dir)
+      t(s, dir, "customer").select(col("c_custkey"), col("c_mktsegment"))
+        .createOrReplaceTempView("cust_dim_q230")
+      RunnerGate(Seq("events_feed_q230" ->
+          "user_id BIGINT, event_id BIGINT, value DOUBLE, ts_us BIGINT"), """
+          CREATE TABLE user_latest_q230 (
+            user_id BIGINT, last_event_id BIGINT, last_value DOUBLE, ts_us BIGINT,
+            PRIMARY KEY (user_id) NOT ENFORCED) DISTRIBUTED INTO 1 BUCKETS;
+          INSERT INTO user_latest_q230
+          SELECT user_id, event_id, value, ts_us FROM events_feed_q230;
+          CREATE TABLE seg_latest_q230 (segment STRING, n_users BIGINT,
+            sum_last DOUBLE,
+            PRIMARY KEY (segment) NOT ENFORCED) DISTRIBUTED INTO 1 BUCKETS;
+          INSERT INTO seg_latest_q230
+          SELECT c.c_mktsegment, count(*) AS n_users,
+                 CAST(sum(CAST(u.last_value AS DECIMAL(18,4))) AS DOUBLE) AS sum_last
+          FROM user_latest_q230 u JOIN cust_dim_q230 c ON u.user_id = c.c_custkey
+          GROUP BY c.c_mktsegment""",
+        ev, epochs = 4, upsertFeed("events_feed_q230", ev, "event_id", "value", "ts_us"),
+        Project("seg_latest_q230", col("segment"), col("n_users"), col("sum_last")))
+    }),
+
+    // ── RETRACTABLE MIN/MAX + EXACT DISTINCT over an upsert changelog
+    //    driver, DRIVER-GATED (round 14): the per-(group, value)
+    //    multiset helpers — each revision retracts its old value from
+    //    the multiset; retracting the current extreme forces a
+    //    recompute from the remaining values, and a duplicated
+    //    distinct value survives until its last holder leaves. Final
+    //    state must equal the batch latest-per-key aggregate ──
+    "q231_stream_retract_minmax_distinct" -> ((s, dir) => {
+      val ev = events(s, dir)
+      RunnerGate(Seq("events_feed_q231" -> EventDdl), """
+          CREATE TABLE user_latest_q231 (
+            user_id BIGINT, last_event_id BIGINT, last_event_type STRING,
+            last_value DOUBLE, ts_us BIGINT,
+            PRIMARY KEY (user_id) NOT ENFORCED) DISTRIBUTED INTO 1 BUCKETS;
+          INSERT INTO user_latest_q231
+          SELECT user_id, event_id, event_type, value, ts_us FROM events_feed_q231;
+          CREATE TABLE type_extremes_q231 (event_type STRING, n_users BIGINT,
+            min_value DOUBLE, max_value DOUBLE, n_buckets BIGINT,
+            PRIMARY KEY (event_type) NOT ENFORCED) DISTRIBUTED INTO 1 BUCKETS;
+          INSERT INTO type_extremes_q231
+          SELECT last_event_type, count(*) AS n_users,
+                 min(last_value) AS min_value, max(last_value) AS max_value,
+                 count(DISTINCT user_id % 16) AS n_buckets
+          FROM user_latest_q231 GROUP BY last_event_type""",
+        ev, epochs = 4, upsertFeed("events_feed_q231", ev, EventCols: _*),
+        Project("type_extremes_q231", col("event_type"), col("n_users"),
+          col("min_value"), col("max_value"), col("n_buckets")))
+    }),
+
+    // ── HAVING over a retract-folded continuous aggregate, DRIVER-
+    //    GATED (round 14): the predicate re-evaluates as revisions
+    //    fold, and a group whose predicate stops holding is DELETED
+    //    downstream. `count(*) % 2 = 0` flips as per-type counts grow
+    //    across the 4 epochs, so groups genuinely enter AND leave the
+    //    table mid-stream; the final state equals the batch
+    //    latest-per-key aggregate under the same HAVING ──
+    "q232_stream_retract_agg_having" -> ((s, dir) => {
+      val ev = events(s, dir, quarter = false)
+      RunnerGate(Seq("events_feed_q232" -> EventDdl), """
+          CREATE TABLE user_latest_q232 (
+            user_id BIGINT, last_event_id BIGINT, last_event_type STRING,
+            last_value DOUBLE, ts_us BIGINT,
+            PRIMARY KEY (user_id) NOT ENFORCED) DISTRIBUTED INTO 1 BUCKETS;
+          INSERT INTO user_latest_q232
+          SELECT user_id, event_id, event_type, value, ts_us FROM events_feed_q232;
+          CREATE TABLE even_types_q232 (event_type STRING, n_users BIGINT,
+            sum_value DOUBLE,
+            PRIMARY KEY (event_type) NOT ENFORCED) DISTRIBUTED INTO 1 BUCKETS;
+          INSERT INTO even_types_q232
+          SELECT last_event_type, count(*) AS n_users,
+                 CAST(sum(CAST(last_value AS DECIMAL(18,4))) AS DOUBLE) AS sum_value
+          FROM user_latest_q232 GROUP BY last_event_type
+          HAVING count(*) % 2 = 0""",
+        ev, epochs = 4, upsertFeed("events_feed_q232", ev, EventCols: _*),
+        Project("even_types_q232", col("event_type"), col("n_users"), col("sum_value")))
+    }),
+
+    // ── MULTI-LEVEL CONTINUOUS AGGREGATE, DRIVER-GATED (round 15,
+    //    VERDICT r14 item 2 — the lab-aggregations chain one level
+    //    deeper): statement A MERGE-aggregates (retractable max + a
+    //    HAVING whose verdict flips across epochs) into an upsert
+    //    table whose topic records carry hidden raws/__net/__keep;
+    //    statement B retract-folds over A's CHANGELOG — extra value
+    //    fields must stay invisible and a __keep=false state record
+    //    must retract the group downstream exactly as the batch view
+    //    hides it. Final state = the batch two-level aggregate ──
+    "q233_stream_multilevel_agg" -> ((s, dir) => {
+      val ev = events(s, dir)
+      RunnerGate(Seq("events_feed_q233" -> EventDdl), """
+          CREATE TABLE user_latest_q233 (
+            user_id BIGINT, last_event_id BIGINT, last_event_type STRING,
+            last_value DOUBLE, ts_us BIGINT,
+            PRIMARY KEY (user_id) NOT ENFORCED) DISTRIBUTED INTO 1 BUCKETS;
+          INSERT INTO user_latest_q233
+          SELECT user_id, event_id, event_type, value, ts_us FROM events_feed_q233;
+          CREATE TABLE type_stats_q233 (event_type STRING, n_users BIGINT,
+            max_value DOUBLE,
+            PRIMARY KEY (event_type) NOT ENFORCED) DISTRIBUTED INTO 1 BUCKETS;
+          INSERT INTO type_stats_q233
+          SELECT last_event_type, count(*) AS n_users, max(last_value) AS max_value
+          FROM user_latest_q233 GROUP BY last_event_type
+          HAVING count(*) % 2 = 0;
+          CREATE TABLE parity_stats_q233 (bucket BIGINT, n_types BIGINT,
+            sum_max DOUBLE,
+            PRIMARY KEY (bucket) NOT ENFORCED) DISTRIBUTED INTO 1 BUCKETS;
+          INSERT INTO parity_stats_q233
+          SELECT CAST(n_users % 3 AS BIGINT) AS bucket, count(*) AS n_types,
+                 CAST(sum(CAST(max_value AS DECIMAL(18,4))) AS DOUBLE) AS sum_max
+          FROM type_stats_q233 GROUP BY CAST(n_users % 3 AS BIGINT)""",
+        ev, epochs = 4, upsertFeed("events_feed_q233", ev, EventCols: _*),
+        Project("parity_stats_q233", col("bucket"), col("n_types"), col("sum_max")))
+    }),
+
+    // ── ARGMAX/ARGMIN + MULTI-COLUMN DISTINCT over an upsert changelog
+    //    driver, DRIVER-GATED (round 15, VERDICT r14 item 3 — the last
+    //    "Flink runs this, we refuse" shapes): max_by/min_by fold as
+    //    (order, value) multisets, so a revision that moves the argmax
+    //    HOLDER out of a group recomputes from the remaining pairs;
+    //    count(DISTINCT a, b) keeps a struct-keyed multiset. user_id
+    //    as the order key makes the argmax deterministic (unique per
+    //    group by construction). Final state = the batch
+    //    latest-per-key aggregate ──
+    "q234_stream_argmax_distinct" -> ((s, dir) => {
+      val ev = events(s, dir)
+      RunnerGate(Seq("events_feed_q234" -> EventDdl), """
+          CREATE TABLE user_latest_q234 (
+            user_id BIGINT, last_event_id BIGINT, last_event_type STRING,
+            last_value DOUBLE, ts_us BIGINT,
+            PRIMARY KEY (user_id) NOT ENFORCED) DISTRIBUTED INTO 1 BUCKETS;
+          INSERT INTO user_latest_q234
+          SELECT user_id, event_id, event_type, value, ts_us FROM events_feed_q234;
+          CREATE TABLE type_tops_q234 (event_type STRING, n_users BIGINT,
+            top_value DOUBLE, bot_value DOUBLE, n_pairs BIGINT,
+            PRIMARY KEY (event_type) NOT ENFORCED) DISTRIBUTED INTO 1 BUCKETS;
+          INSERT INTO type_tops_q234
+          SELECT last_event_type, count(*) AS n_users,
+                 max_by(last_value, user_id) AS top_value,
+                 min_by(last_value, user_id) AS bot_value,
+                 count(DISTINCT user_id % 8, user_id % 3) AS n_pairs
+          FROM user_latest_q234 GROUP BY last_event_type""",
+        ev, epochs = 4, upsertFeed("events_feed_q234", ev, EventCols: _*),
+        Project("type_tops_q234", col("event_type"), col("n_users"),
+          col("top_value"), col("bot_value"), col("n_pairs")))
+    }),
+
+    // ── VARIANCE FAMILY + BOOL_AND/BOOL_OR + RETRACTABLE LISTAGG over
+    //    an upsert changelog driver, DRIVER-GATED (round 15): variance
+    //    folds by EXACT DECIMAL MOMENTS (n, Σ±x, Σ±x²) with the pinned
+    //    double closed form mirrored verbatim in the oracle (the
+    //    CLAUDE.md iterative-float rule); bool_and/bool_or fold as
+    //    boolean order statistics through the value multiset; listagg
+    //    recomputes the sorted distinct set per touched group. One
+    //    statement exercises raws + two multisets together ──
+    "q235_stream_variance_bool_listagg" -> ((s, dir) => {
+      val ev = events(s, dir)
+      RunnerGate(Seq("events_feed_q235" -> EventDdl), """
+          CREATE TABLE user_latest_q235 (
+            user_id BIGINT, last_event_id BIGINT, last_event_type STRING,
+            last_value DOUBLE, ts_us BIGINT,
+            PRIMARY KEY (user_id) NOT ENFORCED) DISTRIBUTED INTO 1 BUCKETS;
+          INSERT INTO user_latest_q235
+          SELECT user_id, event_id, event_type, value, ts_us FROM events_feed_q235;
+          CREATE TABLE type_spread_q235 (event_type STRING, n_users BIGINT,
+            var_s DOUBLE, std_p DOUBLE, cov_vu DOUBLE, corr_vu DOUBLE,
+            n_big BIGINT, all_small BOOLEAN, any_big BOOLEAN,
+            buckets STRING,
+            PRIMARY KEY (event_type) NOT ENFORCED) DISTRIBUTED INTO 1 BUCKETS;
+          INSERT INTO type_spread_q235
+          SELECT last_event_type, count(*) AS n_users,
+                 round(var_samp(CAST(last_value AS DECIMAL(18,4))), 6) AS var_s,
+                 round(stddev_pop(CAST(last_value AS DECIMAL(18,4))), 6) AS std_p,
+                 round(covar_samp(CAST(last_value AS DECIMAL(18,4)),
+                                  CAST(user_id AS DECIMAL(18,0))), 6) AS cov_vu,
+                 round(corr(CAST(last_value AS DECIMAL(18,4)),
+                            CAST(user_id AS DECIMAL(18,0))), 6) AS corr_vu,
+                 count_if(last_value > 100.0) AS n_big,
+                 bool_and(last_value < 300.0) AS all_small,
+                 bool_or(last_value > 300.0) AS any_big,
+                 listagg(DISTINCT CAST(user_id % 5 AS STRING), ',')
+                   WITHIN GROUP (ORDER BY CAST(user_id % 5 AS STRING)) AS buckets
+          FROM user_latest_q235 GROUP BY last_event_type""",
+        ev, epochs = 4, upsertFeed("events_feed_q235", ev, EventCols: _*),
+        Project("type_spread_q235", col("event_type"), col("n_users"),
+          col("var_s"), col("std_p"), col("cov_vu"), col("corr_vu"),
+          col("n_big"), col("all_small"), col("any_big"), col("buckets")))
+    }),
+
+    // ── FLINK REGULAR JOIN into a RETRACT target, DRIVER-GATED
+    //    (round 16, VERDICT r15 item 1 — the reference's S6:
+    //    shoe_orders_enriched is changelog.mode='retract',
+    //    lab-aggregations/main.tf:530, BECAUSE the regular join :563
+    //    retracts + re-emits previously-joined rows when a dimension
+    //    revises): facts stream in per epoch; the per-user dim revises
+    //    across epochs; past enrichments must NOT freeze — the folded
+    //    net state equals the batch join of ALL facts against FINAL
+    //    dim state (for every fact, not just post-revision ones) ──
+    "q236_stream_regular_join" -> ((s, dir) => {
+      val ev = events(s, dir)
+      RunnerGate(Seq(
+          "dim_feed_q236" -> "user_id BIGINT, event_type STRING",
+          "orders_feed_q236" -> "event_id BIGINT, user_id BIGINT, value DOUBLE"), """
+          CREATE TABLE user_dim_q236 (user_id BIGINT, last_event_type STRING,
+            PRIMARY KEY (user_id) NOT ENFORCED) DISTRIBUTED INTO 1 BUCKETS;
+          INSERT INTO user_dim_q236 SELECT user_id, event_type FROM dim_feed_q236;
+          CREATE TABLE enriched_q236 (event_id BIGINT, user_id BIGINT,
+            last_event_type STRING, value DOUBLE, __op STRING)
+            WITH ('changelog.mode' = 'retract');
+          INSERT INTO enriched_q236 (event_id, user_id, last_event_type, value)
+          SELECT o.event_id, o.user_id, c.last_event_type, o.value
+          FROM orders_feed_q236 o JOIN user_dim_q236 c ON o.user_id = c.user_id""",
+        ev, epochs = 4, e => i => {
+          // dim slice FIRST (per-user latest within the epoch — revising
+          // users force re-emission of their already-joined facts), then
+          // the epoch's facts join the revised state
+          val slice = e.slice(ev, i)
+          Seq("dim_feed_q236" -> latestPerUser(slice, "event_type"),
+            "orders_feed_q236" -> slice.select("event_id", "user_id", "value"))
+        },
+        RetractNet("enriched_q236", "event_id", "user_id", "last_event_type", "value"))
+    }),
+
+    // ── RETRACTABLE COLLECT over an upsert changelog driver, DRIVER-
+    //    GATED (round 16, VERDICT r15 item 3 — the rejection list
+    //    shrinks to exact percentile only): collect_set emits the
+    //    multiset's live DISTINCT values, collect_list every live
+    //    copy, both value-sorted (Flink's retractable COLLECT keeps
+    //    the same per-(group, value) count state). Arrays ride to the
+    //    oracle as joined strings — the driver hash has no LIST-type
+    //    parity contract (the q57 HUGEINT lesson: never gate on a
+    //    novel output type class); ValueSetAggSpec asserts the true
+    //    array emission ──
+    "q237_stream_collect_agg" -> ((s, dir) => {
+      val ev = events(s, dir)
+      RunnerGate(Seq("events_feed_q237" -> "user_id BIGINT, event_type STRING, value DOUBLE"), """
+          CREATE TABLE user_latest_q237 (
+            user_id BIGINT, last_event_type STRING, last_value DOUBLE,
+            PRIMARY KEY (user_id) NOT ENFORCED) DISTRIBUTED INTO 1 BUCKETS;
+          INSERT INTO user_latest_q237
+          SELECT user_id, event_type, value FROM events_feed_q237;
+          CREATE TABLE bucket_collect_q237 (bucket BIGINT, n_users BIGINT,
+            types STRING, septets STRING,
+            PRIMARY KEY (bucket) NOT ENFORCED) DISTRIBUTED INTO 1 BUCKETS;
+          INSERT INTO bucket_collect_q237
+          SELECT CAST(user_id % 41 AS BIGINT) AS bucket, count(*) AS n_users,
+                 array_join(collect_set(last_event_type), ',') AS types,
+                 array_join(collect_list(CAST(user_id % 7 AS STRING)), ',') AS septets
+          FROM user_latest_q237 GROUP BY CAST(user_id % 41 AS BIGINT)""",
+        ev, epochs = 4, upsertFeed("events_feed_q237", ev, "event_type", "value"),
+        Project("bucket_collect_q237", col("bucket"), col("n_users"),
+          col("types"), col("septets")))
+    }),
+
+    // ── THREE-LEVEL CONTINUOUS AGGREGATE CHAIN, DRIVER-GATED (round
+    //    16, VERDICT r15 item 5 — q233 one level deeper, promoting the
+    //    round-15 composition spec): merge-agg (retractable max) →
+    //    retract-fold → retract-fold. Every revision at the bottom can
+    //    ripple THREE changelog hops; integer-only aggregates above
+    //    level 2 (a re-derived double must never re-enter DECIMAL —
+    //    the CLAUDE.md money rule) ──
+    "q238_stream_three_level_agg" -> ((s, dir) => {
+      val ev = events(s, dir)
+      RunnerGate(Seq("events_feed_q238" -> "user_id BIGINT, event_type STRING, value DOUBLE"), """
+          CREATE TABLE user_latest_q238 (
+            user_id BIGINT, last_event_type STRING, last_value DOUBLE,
+            PRIMARY KEY (user_id) NOT ENFORCED) DISTRIBUTED INTO 1 BUCKETS;
+          INSERT INTO user_latest_q238
+          SELECT user_id, event_type, value FROM events_feed_q238;
+          CREATE TABLE type_stats_q238 (event_type STRING, n_users BIGINT,
+            max_value DOUBLE,
+            PRIMARY KEY (event_type) NOT ENFORCED) DISTRIBUTED INTO 1 BUCKETS;
+          INSERT INTO type_stats_q238
+          SELECT last_event_type, count(*) AS n_users, max(last_value) AS max_value
+          FROM user_latest_q238 GROUP BY last_event_type;
+          CREATE TABLE parity_q238 (bucket BIGINT, n_types BIGINT, sum_users BIGINT,
+            PRIMARY KEY (bucket) NOT ENFORCED) DISTRIBUTED INTO 1 BUCKETS;
+          INSERT INTO parity_q238
+          SELECT CAST(n_users % 3 AS BIGINT) AS bucket, count(*) AS n_types,
+                 CAST(sum(n_users) AS BIGINT) AS sum_users
+          FROM type_stats_q238 GROUP BY CAST(n_users % 3 AS BIGINT);
+          CREATE TABLE grand_q238 (par BIGINT, n_buckets BIGINT, total BIGINT,
+            PRIMARY KEY (par) NOT ENFORCED) DISTRIBUTED INTO 1 BUCKETS;
+          INSERT INTO grand_q238
+          SELECT CAST(n_types % 2 AS BIGINT) AS par, count(*) AS n_buckets,
+                 CAST(sum(sum_users) AS BIGINT) AS total
+          FROM parity_q238 GROUP BY CAST(n_types % 2 AS BIGINT)""",
+        ev, epochs = 4, upsertFeed("events_feed_q238", ev, "event_type", "value"),
+        Project("grand_q238", col("par"), col("n_buckets"), col("total")))
+    }),
+
+    // ── TUMBLE TVF THROUGH THE MULTISET MERGE PATH, DRIVER-GATED
+    //    (round 16, VERDICT r15 item 5 — promoting the round-15
+    //    composition spec): the TVF rewrite's star subquery carries
+    //    the upsert driver's sign AND the windowed group keys into the
+    //    merge path, where max folds as a (window, value) multiset —
+    //    revising a user's latest event time MOVES its value between
+    //    windows and both windows' max recompute retraction-aware ──
+    "q239_stream_tumble_multiset" -> ((s, dir) => {
+      val ev = events(s, dir)
+      RunnerGate(Seq("events_feed_q239" -> "user_id BIGINT, ts TIMESTAMP, value DOUBLE"), """
+          CREATE TABLE user_latest_q239 (
+            user_id BIGINT, ts TIMESTAMP, last_value DOUBLE,
+            PRIMARY KEY (user_id) NOT ENFORCED) DISTRIBUTED INTO 1 BUCKETS;
+          INSERT INTO user_latest_q239
+          SELECT user_id, ts, value FROM events_feed_q239;
+          CREATE TABLE hourly_q239 (window_start TIMESTAMP, n_users BIGINT,
+            max_value DOUBLE,
+            PRIMARY KEY (window_start) NOT ENFORCED) DISTRIBUTED INTO 1 BUCKETS;
+          INSERT INTO hourly_q239
+          SELECT window_start, count(*) AS n_users, max(last_value) AS max_value
+          FROM TABLE(TUMBLE(TABLE user_latest_q239, DESCRIPTOR(ts), INTERVAL '1' HOUR))
+          GROUP BY window_start""",
+        ev, epochs = 4, upsertFeed("events_feed_q239", ev, "ts", "value"),
+        Project("hourly_q239", unix_micros(col("window_start")).as("window_start_us"),
+          col("n_users"), col("max_value")))
+    }),
+
+    // ── LEFT OUTER REGULAR JOIN into a RETRACT target, DRIVER-GATED
+    //    (round 16): only a quarter of the fact users ever get a dim
+    //    row, and facts arrive BEFORE their epoch's dim slice — so
+    //    null-padded rows are emitted, then RETRACTED when the match
+    //    lands (Flink's outer-join state view), and matched rows
+    //    re-enrich on every later revision. Folded net state = the
+    //    batch LEFT JOIN of ALL facts against FINAL dim state ──
+    "q240_stream_left_outer_join" -> ((s, dir) => {
+      val ev = events(s, dir)
+      RunnerGate(Seq(
+          "dim_feed_q240" -> "user_id BIGINT, event_type STRING",
+          "orders_feed_q240" -> "event_id BIGINT, user_id BIGINT, value DOUBLE"), """
+          CREATE TABLE user_dim_q240 (user_id BIGINT, last_event_type STRING,
+            PRIMARY KEY (user_id) NOT ENFORCED) DISTRIBUTED INTO 1 BUCKETS;
+          INSERT INTO user_dim_q240 SELECT user_id, event_type FROM dim_feed_q240;
+          CREATE TABLE enriched_q240 (event_id BIGINT, user_id BIGINT,
+            last_event_type STRING, value DOUBLE, __op STRING)
+            WITH ('changelog.mode' = 'retract');
+          INSERT INTO enriched_q240 (event_id, user_id, last_event_type, value)
+          SELECT o.event_id, o.user_id, c.last_event_type, o.value
+          FROM orders_feed_q240 o LEFT JOIN user_dim_q240 c ON o.user_id = c.user_id""",
+        ev, epochs = 4, e => i => {
+          // facts FIRST: new facts of dim-covered users pad until their
+          // epoch's dim slice lands — the pad-retract transition is
+          // exercised every epoch, not just at the start
+          val slice = e.slice(ev, i)
+          Seq("orders_feed_q240" -> slice.select("event_id", "user_id", "value"),
+            "dim_feed_q240" -> latestPerUser(
+              slice.where(pmod(col("user_id"), lit(8)) === 0), "event_type"))
+        },
+        RetractNet("enriched_q240", "event_id", "user_id", "last_event_type", "value"))
+    }),
+
+    // ── FULL OUTER REGULAR JOIN, DRIVER-GATED (round 16): BOTH sides
+    //    pad — facts of never-dimmed users null-pad on the left, dim
+    //    rows of factless users (user_id % 8 = 1 never passes the
+    //    fact filter) null-pad on the right, and each pad retracts
+    //    the moment the other side produces a match. Folded net state
+    //    = the batch FULL JOIN over final inputs ──
+    "q241_stream_full_outer_join" -> ((s, dir) => {
+      val evAll = events(s, dir, quarter = false)
+      val facts = evAll.where(pmod(col("user_id"), lit(4)) === 0)
+      val dimsSrc = evAll.where(pmod(col("user_id"), lit(8)).isin(0L, 1L))
+      RunnerGate(Seq(
+          "dim_feed_q241" -> "user_id BIGINT, event_type STRING",
+          "orders_feed_q241" -> "event_id BIGINT, user_id BIGINT, value DOUBLE"), """
+          CREATE TABLE user_dim_q241 (user_id BIGINT, last_event_type STRING,
+            PRIMARY KEY (user_id) NOT ENFORCED) DISTRIBUTED INTO 1 BUCKETS;
+          INSERT INTO user_dim_q241 SELECT user_id, event_type FROM dim_feed_q241;
+          CREATE TABLE enriched_q241 (event_id BIGINT, fact_user BIGINT,
+            dim_user BIGINT, last_event_type STRING, value DOUBLE, __op STRING)
+            WITH ('changelog.mode' = 'retract');
+          INSERT INTO enriched_q241 (event_id, fact_user, dim_user, last_event_type, value)
+          SELECT o.event_id, o.user_id, c.user_id, c.last_event_type, o.value
+          FROM orders_feed_q241 o FULL JOIN user_dim_q241 c ON o.user_id = c.user_id""",
+        // epoch bounds over ALL events: the dim side spans users the
+        // fact filter excludes, and a dim row outside the facts' ts
+        // range must still reach its slice
+        evAll, epochs = 4, e => i => Seq(
+          "orders_feed_q241" -> e.slice(facts, i).select("event_id", "user_id", "value"),
+          "dim_feed_q241" -> latestPerUser(e.slice(dimsSrc, i), "event_type")),
+        RetractNet("enriched_q241", "event_id", "fact_user", "dim_user",
+          "last_event_type", "value"))
+    }),
+
+    // ── REGULAR JOIN → CONTINUOUS AGGREGATE chain, DRIVER-GATED
+    //    (round 16): the join's -D/+I records drive a downstream
+    //    retract-folded GROUP BY — every dim revision MOVES the
+    //    re-enriched rows' contributions between groups, and a group
+    //    whose rows all retract is deleted. The full lab-aggregations
+    //    pipeline shape with the true regular join in the middle ──
+    "q242_stream_join_agg_chain" -> ((s, dir) => {
+      val ev = events(s, dir)
+      RunnerGate(Seq(
+          "dim_feed_q242" -> "user_id BIGINT, event_type STRING",
+          "orders_feed_q242" -> "event_id BIGINT, user_id BIGINT, value DOUBLE"), """
+          CREATE TABLE user_dim_q242 (user_id BIGINT, last_event_type STRING,
+            PRIMARY KEY (user_id) NOT ENFORCED) DISTRIBUTED INTO 1 BUCKETS;
+          INSERT INTO user_dim_q242 SELECT user_id, event_type FROM dim_feed_q242;
+          CREATE TABLE enriched_q242 (event_id BIGINT, user_id BIGINT,
+            last_event_type STRING, value DOUBLE)
+            WITH ('changelog.mode' = 'retract');
+          INSERT INTO enriched_q242
+          SELECT o.event_id, o.user_id, c.last_event_type, o.value
+          FROM orders_feed_q242 o JOIN user_dim_q242 c ON o.user_id = c.user_id;
+          CREATE TABLE type_stats_q242 (last_event_type STRING, n_rows BIGINT,
+            sum_value DOUBLE,
+            PRIMARY KEY (last_event_type) NOT ENFORCED) DISTRIBUTED INTO 1 BUCKETS;
+          INSERT INTO type_stats_q242
+          SELECT last_event_type, count(*) AS n_rows,
+                 CAST(sum(CAST(value AS DECIMAL(18,4))) AS DOUBLE) AS sum_value
+          FROM enriched_q242 GROUP BY last_event_type""",
+        ev, epochs = 4, e => i => {
+          val slice = e.slice(ev, i)
+          Seq("dim_feed_q242" -> latestPerUser(slice, "event_type"),
+            "orders_feed_q242" -> slice.select("event_id", "user_id", "value"))
+        },
+        Project("type_stats_q242", col("last_event_type"), col("n_rows"), col("sum_value")))
+    }),
+
+    // ── STREAMING DECONTAMINATION against a REVISABLE blocklist,
+    //    DRIVER-GATED (round 16): `WHERE NOT EXISTS (blocklist)` into
+    //    a retract target — blocking a user RETRACTS its already-kept
+    //    rows, unblocking RE-ADMITS them (the brute pre/post diff over
+    //    fact state), fresh rows evaluate at current blocklist state.
+    //    The LLM-pipeline shape: a takedown/GDPR list that changes
+    //    while the corpus streams. Final net state = the batch NOT
+    //    EXISTS against the FINAL blocklist ──
+    "q243_stream_blocklist_decontam" -> ((s, dir) => {
+      val ev = events(s, dir)
+      val users = ev.select("user_id").distinct()
+      def blockOps(i: Int): DataFrame = i match {
+        // epoch 2 blocks user_id % 16 = 0 (their epoch-1 rows RETRACT);
+        // epoch 3 blocks % 16 = 4; epoch 4 UNBLOCKS % 16 = 0 (their
+        // rows RE-ADMIT) — final blocklist = % 16 = 4 only
+        case 1 => users.where(pmod(col("user_id"), lit(16)) === 0)
+          .withColumn("__op", lit("+I"))
+        case 2 => users.where(pmod(col("user_id"), lit(16)) === 4)
+          .withColumn("__op", lit("+I"))
+        case 3 => users.where(pmod(col("user_id"), lit(16)) === 0)
+          .withColumn("__op", lit("-D"))
+        case _ => users.where(lit(false)).withColumn("__op", lit("+I"))
+      }
+      RunnerGate(Seq(
+          "block_feed_q243" -> "user_id BIGINT, __op STRING",
+          "orders_feed_q243" -> "event_id BIGINT, user_id BIGINT, value DOUBLE"), """
+          CREATE TABLE blocklist_q243 (user_id BIGINT, __op STRING,
+            PRIMARY KEY (user_id) NOT ENFORCED) DISTRIBUTED INTO 1 BUCKETS;
+          INSERT INTO blocklist_q243 SELECT user_id, __op FROM block_feed_q243;
+          CREATE TABLE kept_q243 (event_id BIGINT, user_id BIGINT, value DOUBLE,
+            __op STRING) WITH ('changelog.mode' = 'retract');
+          INSERT INTO kept_q243 (event_id, user_id, value)
+          SELECT o.event_id, o.user_id, o.value FROM orders_feed_q243 o
+          WHERE NOT EXISTS (SELECT 1 FROM blocklist_q243 b
+                            WHERE b.user_id = o.user_id)""",
+        ev, epochs = 4, e => i => Seq(
+          "orders_feed_q243" -> e.slice(ev, i).select("event_id", "user_id", "value"),
+          "block_feed_q243" -> blockOps(i)),
+        RetractNet("kept_q243", "event_id", "user_id", "value"))
+    }),
+
+    // ── EXACT PERCENTILE over an upsert changelog driver, DRIVER-GATED
+    //    (round 16 — the last multiset-foldable shape; the practical
+    //    rejection list is now empty): percentile/median recompute
+    //    from the per-(group, value) net counts via Spark's weighted
+    //    Percentile. Values are INTEGER-valued doubles and the
+    //    percentages dyadic (0.25/0.5/0.75), so every interpolation
+    //    step is exactly representable — bit-identical to DuckDB's
+    //    quantile_cont regardless of either engine's evaluation order
+    //    (the CLAUDE.md float-tie rule applied by construction) ──
+    "q244_stream_exact_percentile" -> ((s, dir) => {
+      val ev = events(s, dir)
+      RunnerGate(Seq("events_feed_q244" -> "user_id BIGINT, event_type STRING, value DOUBLE"), """
+          CREATE TABLE user_latest_q244 (
+            user_id BIGINT, last_event_type STRING, last_value DOUBLE,
+            PRIMARY KEY (user_id) NOT ENFORCED) DISTRIBUTED INTO 1 BUCKETS;
+          INSERT INTO user_latest_q244
+          SELECT user_id, event_type, value FROM events_feed_q244;
+          CREATE TABLE type_pcts_q244 (event_type STRING, n_users BIGINT,
+            p25 DOUBLE, p50 DOUBLE, p75 DOUBLE, med DOUBLE,
+            PRIMARY KEY (event_type) NOT ENFORCED) DISTRIBUTED INTO 1 BUCKETS;
+          INSERT INTO type_pcts_q244
+          SELECT last_event_type, count(*) AS n_users,
+                 percentile(CAST(user_id % 97 AS DOUBLE), 0.25) AS p25,
+                 percentile(CAST(user_id % 97 AS DOUBLE), 0.5) AS p50,
+                 percentile(CAST(user_id % 97 AS DOUBLE), 0.75) AS p75,
+                 median(CAST(user_id % 97 AS DOUBLE)) AS med
+          FROM user_latest_q244 GROUP BY last_event_type""",
+        ev, epochs = 4, upsertFeed("events_feed_q244", ev, "event_type", "value"),
+        Project("type_pcts_q244", col("event_type"), col("n_users"),
+          col("p25"), col("p50"), col("p75"), col("med")))
+    }),
+
+    // ── EXACT PERCENTILE_DISC over an upsert changelog driver,
+    //    DRIVER-GATED (round 17 — closing the one degenerate rejection
+    //    a user actually types, VERDICT r16 item 3): the discrete
+    //    cume_dist ≥ p pick over the live per-(group, value) multiset,
+    //    ASC and DESC, targeted by EXACT integer micro-arithmetic
+    //    (⌈m·N/10⁶⌉ via intDiv — no float boundary drift). The oracle
+    //    states the SAME pick rule explicitly (row_number = target)
+    //    rather than trusting DuckDB's quantile_disc convention ──
+    "q246_stream_percentile_disc" -> ((s, dir) => {
+      val ev = events(s, dir)
+      RunnerGate(Seq("events_feed_q246" -> "user_id BIGINT, event_type STRING, value DOUBLE"), """
+          CREATE TABLE user_latest_q246 (
+            user_id BIGINT, last_event_type STRING, last_value DOUBLE,
+            PRIMARY KEY (user_id) NOT ENFORCED) DISTRIBUTED INTO 1 BUCKETS;
+          INSERT INTO user_latest_q246
+          SELECT user_id, event_type, value FROM events_feed_q246;
+          CREATE TABLE type_disc_q246 (event_type STRING, n_users BIGINT,
+            d50 DOUBLE, d25 DOUBLE, d50r DOUBLE,
+            PRIMARY KEY (event_type) NOT ENFORCED) DISTRIBUTED INTO 1 BUCKETS;
+          INSERT INTO type_disc_q246
+          SELECT last_event_type, count(*) AS n_users,
+                 percentile_disc(0.5) WITHIN GROUP (ORDER BY CAST(user_id % 97 AS DOUBLE)) AS d50,
+                 percentile_disc(0.25) WITHIN GROUP (ORDER BY CAST(user_id % 97 AS DOUBLE)) AS d25,
+                 percentile_disc(0.5) WITHIN GROUP (ORDER BY CAST(user_id % 97 AS DOUBLE) DESC) AS d50r
+          FROM user_latest_q246 GROUP BY last_event_type""",
+        ev, epochs = 4, upsertFeed("events_feed_q246", ev, "event_type", "value"),
+        Project("type_disc_q246", col("event_type"), col("n_users"),
+          col("d50"), col("d25"), col("d50r")))
+    }),
+
+    // ── CHAINED multi-dim LEFT OUTER regular join, DRIVER-GATED
+    //    (round 17, VERDICT r16 item 1 — the production enrichment
+    //    shape of `lab-aggregations/main.tf:563` written the way users
+    //    write it, so missing dims never drop facts): facts LEFT JOIN
+    //    a per-user dim LEFT JOIN a per-type dim whose join key is the
+    //    FIRST dim's output (the pad-of-pad dependence). Facts stream
+    //    BEFORE their dims each epoch (maximal pad churn); both dims
+    //    revise independently across epochs. The folded net state must
+    //    equal the batch chained LEFT JOIN over FINAL dim state —
+    //    including the three pad classes the restricted dims leave
+    //    behind: user%8=4 facts (both dims null), 'click'-latest users
+    //    (level-2 null), and fully-enriched rows ──
+    "q245_stream_chained_left_join" -> ((s, dir) => {
+      val ev = events(s, dir)
+      // joinState observability as a GUARD (VERDICT r19 item 5): at
+      // every drain the enriched statement's state report must show
+      // compaction keeping up — un-folded batch dirs can exceed the
+      // threshold by at most the batch just written (maybeCompact
+      // folds dirs STRICTLY BELOW the current batch), and the
+      // gen-atomic publish keeps at most two generations live. The
+      // 7-day TTL exercises the TTL'd read/compact path without
+      // expiring anything in-test, so the folded oracle is unchanged.
+      def assertJoinStateBounded(r: exec.StreamingStatementRunner, drain: String): Unit = {
+        val ps = r.progressSummary.filter(_.name.contains("enriched_q245"))
+        require(ps.nonEmpty && ps.forall(_.joinState.nonEmpty),
+          s"q245[$drain]: enriched statement reported no joinState")
+        ps.flatMap(_.joinState).foreach { side =>
+          require(side.batchDirs <= 2 + 1,
+            s"q245[$drain] ${side.table}: ${side.batchDirs} un-folded batch " +
+            s"dirs > compact.threshold+1 — compaction not keeping up")
+          require(side.generations <= 2,
+            s"q245[$drain] ${side.table}: ${side.generations} live " +
+            "generations — superseded generations not pruned")
+          // the fact LOG must be non-empty from the first drain on
+          // (facts stream first); dim snapshots are legitimately empty
+          // until their feed's first revision lands
+          if (side.kind == "log")
+            require(side.bytes > 0 && side.rows > 0,
+              s"q245[$drain] ${side.table}: empty fact-log state report " +
+              s"(rows=${side.rows}, bytes=${side.bytes})")
+        }
+      }
+      RunnerGate(Seq(
+          "dim_feed_q245" -> "user_id BIGINT, event_type STRING",
+          "band_feed_q245" -> "event_type STRING, label STRING",
+          "orders_feed_q245" -> "event_id BIGINT, user_id BIGINT, value DOUBLE"), """
+          CREATE TABLE user_dim_q245 (user_id BIGINT, last_event_type STRING,
+            PRIMARY KEY (user_id) NOT ENFORCED) DISTRIBUTED INTO 1 BUCKETS;
+          INSERT INTO user_dim_q245 SELECT user_id, event_type FROM dim_feed_q245;
+          CREATE TABLE band_dim_q245 (event_type STRING, label STRING,
+            PRIMARY KEY (event_type) NOT ENFORCED) DISTRIBUTED INTO 1 BUCKETS;
+          INSERT INTO band_dim_q245 SELECT event_type, label FROM band_feed_q245;
+          CREATE TABLE enriched_q245 (event_id BIGINT, user_id BIGINT,
+            last_event_type STRING, band_label STRING, value DOUBLE, __op STRING)
+            WITH ('changelog.mode' = 'retract', 'join.state.ttl' = '7 d',
+                  'join.state.compact.threshold' = '2');
+          INSERT INTO enriched_q245 (event_id, user_id, last_event_type, band_label, value)
+          SELECT o.event_id, o.user_id, c.last_event_type, b.label, o.value
+          FROM orders_feed_q245 o
+          LEFT JOIN user_dim_q245 c ON o.user_id = c.user_id
+          LEFT JOIN band_dim_q245 b ON c.last_event_type = b.event_type""",
+        ev, epochs = 4, bandJoinFeeds(ev, "q245", i => lit(s"L$i")),
+        RetractNet("enriched_q245", "event_id", "user_id", "last_event_type",
+          "band_label", "value"),
+        afterDrain = assertJoinStateBounded)
+    }),
+
+    // ── ARRAY-of-percentages EXACT percentile over an upsert
+    //    changelog driver, DRIVER-GATED (round 18, VERDICT r17
+    //    item 4): q244's latest-per-user multiset with the three
+    //    quartile picks emitted as ONE array<double> stat column —
+    //    the same weighted-Percentile recompute, one pass for N
+    //    picks. Dyadic percentages + small-integer values keep the
+    //    interpolation exact in binary on both engines (the q244
+    //    discipline). The GATE projection unpacks the array into three
+    //    scalar DOUBLE columns (q25/q50/q75): the driver's pandas
+    //    compare cannot sort an ARRAY<DOUBLE> output column
+    //    (unhashable numpy.ndarray — round-18 red row), and top-level
+    //    array/map/struct outputs are now hard-rejected by
+    //    dev/check.py for exactly this reason ──
+    "q248_stream_percentile_array" -> ((s, dir) => {
+      val ev = events(s, dir)
+      RunnerGate(Seq("events_feed_q248" -> "user_id BIGINT, event_type STRING, value DOUBLE"), """
+          CREATE TABLE user_latest_q248 (
+            user_id BIGINT, last_event_type STRING, last_value DOUBLE,
+            PRIMARY KEY (user_id) NOT ENFORCED) DISTRIBUTED INTO 1 BUCKETS;
+          INSERT INTO user_latest_q248
+          SELECT user_id, event_type, value FROM events_feed_q248;
+          CREATE TABLE type_qs_q248 (event_type STRING, n_users BIGINT,
+            qs ARRAY<DOUBLE>, med DOUBLE,
+            PRIMARY KEY (event_type) NOT ENFORCED) DISTRIBUTED INTO 1 BUCKETS;
+          INSERT INTO type_qs_q248
+          SELECT last_event_type, count(*) AS n_users,
+                 percentile(CAST(user_id % 97 AS DOUBLE), array(0.25, 0.5, 0.75)) AS qs,
+                 percentile(CAST(user_id % 97 AS DOUBLE), 0.5) AS med
+          FROM user_latest_q248 GROUP BY last_event_type""",
+        ev, epochs = 3, upsertFeed("events_feed_q248", ev, "event_type", "value"),
+        Project("type_qs_q248", col("event_type"), col("n_users"),
+          col("qs").getItem(0).as("q25"), col("qs").getItem(1).as("q50"),
+          col("qs").getItem(2).as("q75"), col("med")))
+    }),
+
+    // ── MULTI-USE CTE SELF-JOIN regular join, DRIVER-GATED (round 18,
+    //    VERDICT r17 item 3): a CTE over the fact feed referenced
+    //    TWICE (same-user event pairs) joined to a revisable user dim.
+    //    Each CTE site routes as its OWN side (per-occurrence
+    //    renaming), so the cross terms — a new fact pairing against
+    //    the OTHER site's logged state — and dim-revision re-emission
+    //    both hold. The folded net state must equal the batch pair
+    //    join over the FINAL dim state ──
+    "q249_stream_cte_selfjoin" -> ((s, dir) => {
+      val ev = events(s, dir)
+      RunnerGate(Seq(
+          "facts_feed_q249" -> "event_id BIGINT, user_id BIGINT",
+          "dim_feed_q249" -> "user_id BIGINT, label STRING"), """
+          CREATE TABLE user_dim_q249 (user_id BIGINT, label STRING,
+            PRIMARY KEY (user_id) NOT ENFORCED) DISTRIBUTED INTO 1 BUCKETS;
+          INSERT INTO user_dim_q249 SELECT user_id, label FROM dim_feed_q249;
+          CREATE TABLE pairs_q249 (eid1 BIGINT, eid2 BIGINT, user_id BIGINT,
+            label STRING, __op STRING) WITH ('changelog.mode' = 'retract');
+          INSERT INTO pairs_q249 (eid1, eid2, user_id, label)
+          WITH e AS (SELECT event_id, user_id FROM facts_feed_q249)
+          SELECT a.event_id, b.event_id, a.user_id, d.label
+          FROM e a
+          JOIN e b ON a.user_id = b.user_id AND a.event_id < b.event_id
+          JOIN user_dim_q249 d ON a.user_id = d.user_id""",
+        ev, epochs = 3, e => i => {
+          // facts FIRST (pairs form against both sites' logged state),
+          // then the dim revision re-labels every logged pair
+          val slice = e.slice(ev, i).where(pmod(col("user_id"), lit(8)) === 0)
+          Seq("facts_feed_q249" -> slice.select("event_id", "user_id"),
+            "dim_feed_q249" -> slice.select("user_id").distinct()
+              .withColumn("label", lit(s"L$i")))
+        },
+        RetractNet("pairs_q249", "eid1", "eid2", "user_id", "label"))
+    }),
+
+    // ── BUSHY (non-left-deep) regular join, DRIVER-GATED (round 18):
+    //    facts LEFT JOIN a COMPOSED LOOKUP — (user_dim INNER band_dim
+    //    keyed on the user dim's output) as the right OPERAND. Both
+    //    subtree dims bracket at the LEFT node (inner-flip through
+    //    the bushy subtree + the facts-preserving pad pre/post); a
+    //    fact pads when its user has no dim row OR its latest type
+    //    has no band (the INNER inside drops half-complete lookups).
+    //    The folded net state must equal the batch bushy join over
+    //    FINAL dim states ──
+    "q251_stream_bushy_join" -> ((s, dir) => {
+      val ev = events(s, dir)
+      RunnerGate(Seq(
+          "dim_feed_q251" -> "user_id BIGINT, event_type STRING",
+          "band_feed_q251" -> "event_type STRING, label STRING",
+          "orders_feed_q251" -> "event_id BIGINT, user_id BIGINT, value DOUBLE"), """
+          CREATE TABLE user_dim_q251 (user_id BIGINT, last_event_type STRING,
+            PRIMARY KEY (user_id) NOT ENFORCED) DISTRIBUTED INTO 1 BUCKETS;
+          INSERT INTO user_dim_q251 SELECT user_id, event_type FROM dim_feed_q251;
+          CREATE TABLE band_dim_q251 (event_type STRING, label STRING,
+            PRIMARY KEY (event_type) NOT ENFORCED) DISTRIBUTED INTO 1 BUCKETS;
+          INSERT INTO band_dim_q251 SELECT event_type, label FROM band_feed_q251;
+          CREATE TABLE enriched_q251 (event_id BIGINT, user_id BIGINT,
+            last_event_type STRING, band_label STRING, value DOUBLE, __op STRING)
+            WITH ('changelog.mode' = 'retract');
+          INSERT INTO enriched_q251 (event_id, user_id, last_event_type, band_label, value)
+          SELECT o.event_id, o.user_id, c.last_event_type, b.label, o.value
+          FROM orders_feed_q251 o
+          LEFT JOIN (user_dim_q251 c
+                     JOIN band_dim_q251 b ON c.last_event_type = b.event_type)
+            ON o.user_id = c.user_id""",
+        ev, epochs = 3, bandJoinFeeds(ev, "q251", i => concat(lit(s"L${i}_"), col("event_type"))),
+        RetractNet("enriched_q251", "event_id", "user_id", "last_event_type",
+          "band_label", "value"))
+    }),
+
+    // ── DOUBLY-NULL-DOMINATED regular join, DRIVER-GATED (round 18 —
+    //    the multi-node bracket): facts LEFT JOIN a per-user dim
+    //    RIGHT JOIN a per-type band keyed on the LEFT dim's output.
+    //    The user dim is null-produced by BOTH nodes (its own LEFT and
+    //    the RIGHT above), so its bracket runs the top-down expansion:
+    //    one delta term through both inner flips + a pre/post pair per
+    //    node's terminal pad. Facts stream BEFORE dims each epoch; the
+    //    folded net state must equal the batch LEFT+RIGHT join over
+    //    FINAL dim states — enriched rows, right pads (band types no
+    //    user's latest type matches, whole left side null), and the
+    //    DROP of facts whose latest type has no band ('click') or
+    //    whose user has no dim row (RIGHT preserves only bands) ──
+    "q250_stream_doubly_dominated_join" -> ((s, dir) => {
+      val ev = events(s, dir)
+      RunnerGate(Seq(
+          "dim_feed_q250" -> "user_id BIGINT, event_type STRING",
+          "band_feed_q250" -> "event_type STRING, label STRING",
+          "orders_feed_q250" -> "event_id BIGINT, user_id BIGINT, value DOUBLE"), """
+          CREATE TABLE user_dim_q250 (user_id BIGINT, last_event_type STRING,
+            PRIMARY KEY (user_id) NOT ENFORCED) DISTRIBUTED INTO 1 BUCKETS;
+          INSERT INTO user_dim_q250 SELECT user_id, event_type FROM dim_feed_q250;
+          CREATE TABLE band_dim_q250 (event_type STRING, label STRING,
+            PRIMARY KEY (event_type) NOT ENFORCED) DISTRIBUTED INTO 1 BUCKETS;
+          INSERT INTO band_dim_q250 SELECT event_type, label FROM band_feed_q250;
+          CREATE TABLE enriched_q250 (event_id BIGINT, user_id BIGINT,
+            last_event_type STRING, band_label STRING, value DOUBLE, __op STRING)
+            WITH ('changelog.mode' = 'retract');
+          INSERT INTO enriched_q250 (event_id, user_id, last_event_type, band_label, value)
+          SELECT o.event_id, o.user_id, c.last_event_type, b.label, o.value
+          FROM orders_feed_q250 o
+          LEFT JOIN user_dim_q250 c ON o.user_id = c.user_id
+          RIGHT JOIN band_dim_q250 b ON c.last_event_type = b.event_type""",
+        ev, epochs = 3, bandJoinFeeds(ev, "q250", i => concat(lit(s"L${i}_"), col("event_type"))),
+        RetractNet("enriched_q250", "event_id", "user_id", "last_event_type",
+          "band_label", "value"))
+    }),
+
+    // ── MULTI-COLUMN count(DISTINCT a, b) over an upsert changelog
+    //    driver, DRIVER-GATED (round 19, VERDICT r18 item 5): the
+    //    STRUCT-KEYED per-(group, value-tuple) multiset — previously
+    //    spec-only (ValueSetAggSpec). Each user revision retracts its
+    //    old (user_id % 16, event_id % 8) pair from its group's
+    //    multiset; a pair survives until its LAST holder leaves. The
+    //    final state must equal the batch latest-per-key aggregate.
+    //    The oracle encodes the pair as a*8+b (b < 8, both mods
+    //    non-negative — exact integer bijection), keeping the OUTPUT
+    //    flat while the engine exercises the true multi-column form ──
+    "q252_stream_multicol_distinct" -> ((s, dir) => {
+      val ev = events(s, dir)
+      RunnerGate(Seq("events_feed_q252" ->
+          "user_id BIGINT, event_id BIGINT, event_type STRING, ts_us BIGINT"), """
+          CREATE TABLE user_latest_q252 (
+            user_id BIGINT, last_event_id BIGINT, last_event_type STRING, ts_us BIGINT,
+            PRIMARY KEY (user_id) NOT ENFORCED) DISTRIBUTED INTO 1 BUCKETS;
+          INSERT INTO user_latest_q252
+          SELECT user_id, event_id, event_type, ts_us FROM events_feed_q252;
+          CREATE TABLE type_pairs_q252 (event_type STRING, n_users BIGINT,
+            n_pairs BIGINT,
+            PRIMARY KEY (event_type) NOT ENFORCED) DISTRIBUTED INTO 1 BUCKETS;
+          INSERT INTO type_pairs_q252
+          SELECT last_event_type, count(*) AS n_users,
+                 count(DISTINCT user_id % 16, last_event_id % 8) AS n_pairs
+          FROM user_latest_q252 GROUP BY last_event_type""",
+        ev, epochs = 4, upsertFeed("events_feed_q252", ev, "event_id", "event_type", "ts_us"),
+        Project("type_pairs_q252", col("event_type"), col("n_users"), col("n_pairs")))
+    }),
+
+    // ── MID-CHAIN FULL OUTER regular join, DRIVER-GATED (round 18,
+    //    VERDICT r17 item 2 — the affect-set bracket generalization):
+    //    facts INNER JOIN a per-user dim FULL JOIN a per-type dim
+    //    keyed on the FIRST dim's output. The FULL node null-dominates
+    //    the whole left subtree (facts + inner dim each bracket at it:
+    //    inner-flip + right-preserving pad pre/post + own LEFT pad
+    //    over Δ) and anti-joins its right child (band: inner-flip +
+    //    left-preserving pad pre/post + own RIGHT pad over Δ). Facts
+    //    stream BEFORE dims each epoch; both dims revise across
+    //    epochs. The folded net state must equal the batch INNER+FULL
+    //    join over FINAL dim states — fully-enriched rows, left pads
+    //    ('click'-latest users: null band), and right pads (band
+    //    types no user's latest type matches: whole left side null).
+    //    Facts are INNER-gated until their dim arrives, then the dim
+    //    write flows them through the FULL node (retracting any right
+    //    pad their latest type was holding up). Band labels are unique
+    //    PER TYPE (not just per epoch): identical right-pad rows would
+    //    net past 1 and vanish from the retract-net fold ──
+    "q247_stream_midchain_full_join" -> ((s, dir) => {
+      val ev = events(s, dir)
+      RunnerGate(Seq(
+          "dim_feed_q247" -> "user_id BIGINT, event_type STRING",
+          "band_feed_q247" -> "event_type STRING, label STRING",
+          "orders_feed_q247" -> "event_id BIGINT, user_id BIGINT, value DOUBLE"), """
+          CREATE TABLE user_dim_q247 (user_id BIGINT, last_event_type STRING,
+            PRIMARY KEY (user_id) NOT ENFORCED) DISTRIBUTED INTO 1 BUCKETS;
+          INSERT INTO user_dim_q247 SELECT user_id, event_type FROM dim_feed_q247;
+          CREATE TABLE band_dim_q247 (event_type STRING, label STRING,
+            PRIMARY KEY (event_type) NOT ENFORCED) DISTRIBUTED INTO 1 BUCKETS;
+          INSERT INTO band_dim_q247 SELECT event_type, label FROM band_feed_q247;
+          CREATE TABLE enriched_q247 (event_id BIGINT, user_id BIGINT,
+            last_event_type STRING, band_label STRING, value DOUBLE, __op STRING)
+            WITH ('changelog.mode' = 'retract');
+          INSERT INTO enriched_q247 (event_id, user_id, last_event_type, band_label, value)
+          SELECT o.event_id, o.user_id, c.last_event_type, b.label, o.value
+          FROM orders_feed_q247 o
+          JOIN user_dim_q247 c ON o.user_id = c.user_id
+          FULL JOIN band_dim_q247 b ON c.last_event_type = b.event_type""",
+        ev, epochs = 3, bandJoinFeeds(ev, "q247", i => concat(lit(s"L${i}_"), col("event_type"))),
+        RetractNet("enriched_q247", "event_id", "user_id", "last_event_type",
+          "band_label", "value"))
+    })
+  )
 
   /** DuckDB-runnable oracle per query — the map lives in
     * [[graft.OracleSql]] (split per VERDICT r11 item 7). */

@@ -15,6 +15,12 @@ import org.apache.spark.sql.SparkSession
 object VerifySubset {
   def main(args: Array[String]): Unit = {
     require(args.length >= 3, "usage: VerifySubset <sfDir> <outDir> <query...>")
+    // reject unknown names before starting Spark, naming the valid ones
+    val registry = SparkEntry.queries
+    val unknown = args.drop(2).filterNot(registry.contains)
+    require(unknown.isEmpty,
+      s"unknown query name(s): ${unknown.mkString(", ")}; valid names: " +
+        registry.keys.toSeq.sorted.mkString(", "))
     val sfDir = args(0)
     val outDir = args(1)
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
@@ -30,7 +36,7 @@ object VerifySubset {
     spark.sparkContext.setLogLevel("WARN")
     new java.io.File(outDir).mkdirs()
     args.drop(2).foreach { name =>
-      Verify.assertFlat(name, SparkEntry.queries(name)(spark, sfDir)).coalesce(1)
+      Verify.assertFlat(name, registry(name)(spark, sfDir)).coalesce(1)
         .write.mode("overwrite").parquet(s"$outDir/$name")
       spark.catalog.clearCache()
     }

@@ -19,7 +19,7 @@ import org.apache.spark.sql.SparkSession
   * session at `start()` (and persisted into its checkpoint), so the
   * scoped helper here pins it for exactly the queries started inside
   * `body` — the same restore-after-start pattern as
-  * `StreamReplay.startNarrowState`. Semantics are provider-independent
+  * `StreamReplay.withNarrowState`. Semantics are provider-independent
   * (`StateBackendSpec` replays the same stateful operators under both
   * and asserts identical output); only the memory/disk profile
   * changes, so the engine defaults to Spark's default provider and

@@ -2,7 +2,6 @@ package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, Dataset, Encoders}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.StreamingQuery
 
 /** Batch→stream replay harness: runs a streaming operator over fixture
   * data as a REAL StructuredStreaming query (file source →
@@ -111,10 +110,10 @@ object StreamReplay {
     // update mode: the memory sink APPENDS each batch's updated rows —
     // callers recover the final per-key state with a monotone
     // update-counter column (see q206)
-    val q = startNarrowState(spark) {
+    val q = withNarrowState(spark) {
       transform(stream)
         .writeStream.format("memory").queryName(queryName)
-        .outputMode(outputMode)
+        .outputMode(outputMode).start()
     }
     try q.processAllAvailable() finally q.stop()
     spark.table(queryName)
@@ -132,18 +131,18 @@ object StreamReplay {
   private[graft] def statePartitions: Int =
     sys.props.getOrElse("graft.replay.statePartitions", "4").toInt
 
-  /** Start a streaming query with the shuffle-partition conf narrowed
-    * to [[statePartitions]]. `start()` clones the session conf into the
-    * stream's own session, so restoring the previous value immediately
-    * after is safe for the running query and invisible to everything
-    * batch. */
-  private def startNarrowState(spark: org.apache.spark.sql.SparkSession)
-                              (build: => org.apache.spark.sql.streaming.DataStreamWriter[
-                                 org.apache.spark.sql.Row]): StreamingQuery = {
+  /** Run `body` — which starts streaming queries — with the
+    * shuffle-partition conf narrowed to [[statePartitions]], restoring
+    * the previous value after (also when `body` throws). `start()`
+    * clones the session conf into the stream's own session, so the
+    * restore is safe for the running queries and invisible to
+    * everything batch. */
+  private[graft] def withNarrowState[T](spark: org.apache.spark.sql.SparkSession)
+                                       (body: => T): T = {
     val key = "spark.sql.shuffle.partitions"
     val prev = spark.conf.get(key)
     spark.conf.set(key, statePartitions.toString)
-    try build.start() finally spark.conf.set(key, prev)
+    try body finally spark.conf.set(key, prev)
   }
 
   /** Two-source replay for stream-stream operators (interval joins):
@@ -190,10 +189,10 @@ object StreamReplay {
     }
     def stream(df: DataFrame, dir: String): DataFrame = spark.readStream
       .schema(df.schema).option("maxFilesPerTrigger", 1).parquet(dir)
-    val q = startNarrowState(spark) {
+    val q = withNarrowState(spark) {
       transform(stream(left, stageDirL), stream(right, stageDirR))
         .writeStream.format("memory").queryName(queryName)
-        .outputMode("append")
+        .outputMode("append").start()
     }
     try q.processAllAvailable() finally q.stop()
     spark.table(queryName)

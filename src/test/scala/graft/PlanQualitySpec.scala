@@ -939,18 +939,44 @@ class PlanQualitySpec extends SparkSpec {
     // costs a full replay each; this guard pins the precondition that
     // makes the skip sound — a gate's RETURNED plan never contains a
     // join node, so a cartesian there is impossible by construction.
-    // Source-level check (no replay needed): the text after the
-    // replay's stopAll() up to the block end must not call .join/
-    // crossJoin. If a future gate legitimately adds a join to its
+    // Runner gates return a SparkEntry.GateFold, which can only project
+    // or retract-net-fold one table: the type rules out a join. Every
+    // other q2xx name must be listed here as a StreamReplay gate, whose
+    // fold keeps a source-level check (no replay needed): the text
+    // after the replay's stopAll() up to the block end must not call
+    // .join/crossJoin. If a future gate legitimately adds a join to its
     // fold, move that gate back into the sweep instead of weakening
     // this test.
+    val replayGates = Set(
+      "q200_temporal_join_eventtime", "q201_stream_neardup_gate",
+      "q203_stream_tumble_replay", "q204_stream_interval_join",
+      "q205_stream_session_replay", "q206_stream_retract_net",
+      "q207_stream_proctime_temporal", "q208_stream_hop_replay",
+      "q209_stream_cumulate_replay", "q211_stream_dedup_first",
+      "q212_stream_hll_window", "q213_stream_kmv_window",
+      "q214_stream_psi_window", "q215_stream_js_window",
+      "q216_stream_burst_window", "q217_stream_corpus_card",
+      "q218_stream_calibration", "q219_stream_lang_agreement",
+      "q220_stream_novelty_presence", "q221_stream_nearvec_gate",
+      "q222_stream_interval_outer", "q223_stream_quantile_window")
+    val runnerGates = SparkEntry.runnerGates.keySet
+    val q2xx = SparkEntry.queries.keySet.filter(_.matches("q2\\d{2}_.*"))
+    assert(runnerGates.subsetOf(q2xx) && replayGates.subsetOf(q2xx),
+      s"listed gates missing from queries: ${(runnerGates ++ replayGates) -- q2xx}")
+    assert((runnerGates & replayGates).isEmpty)
+    assert(q2xx -- runnerGates -- replayGates == Set.empty,
+      "q2xx gates that are neither runner gates nor listed StreamReplay gates: " +
+        (q2xx -- runnerGates -- replayGates).toSeq.sorted)
+
     val src = {
       val s = scala.io.Source.fromFile(
         "src/main/scala/graft/SparkEntry.scala", "UTF-8")
       try s.mkString finally s.close()
     }
     val blocks = src.split("\"(?=q2\\d{2}_)").toSeq.tail
-    assert(blocks.nonEmpty)
+      .filter(b => replayGates.contains(b.takeWhile(_ != '"')))
+    assert(blocks.map(_.takeWhile(_ != '"')).toSet == replayGates,
+      "every listed StreamReplay gate must have a source block to check")
     val offenders = blocks.flatMap { b =>
       val name = b.takeWhile(_ != '"')
       val fold = b.split("stopAll\\(\\)").last
