@@ -20,9 +20,14 @@ import org.apache.spark.sql.SparkSession
   * Env-parameterized (not hard-coded to the local box) so a driver A/B
   * or a production deploy can override without a rebuild; the defaults
   * are Spark's advisory default (64m), not a local[32]-tuned constant.
+  *
+  * The `file` scheme is always served fork-free
+  * (`graft.sources.LocalFs.configure`, shared with the test session):
+  * Hadoop's own local filesystem forks `chmod`/`readlink` for every
+  * checkpoint, log and topic file a micro-batch writes.
   */
 object SessionTuning {
-  def tuned(b: SparkSession.Builder): SparkSession.Builder = b
+  def tuned(b: SparkSession.Builder): SparkSession.Builder = graft.sources.LocalFs.configure(b)
     .config("spark.sql.adaptive.coalescePartitions.parallelismFirst",
       sys.env.getOrElse("SPARK_GRAFT_AQE_PARALLELISM_FIRST", "false"))
     .config("spark.sql.adaptive.advisoryPartitionSizeInBytes",

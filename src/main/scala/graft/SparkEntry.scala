@@ -91,8 +91,9 @@ object SparkEntry {
     * INSERT polling its topics through the rest of a Verify/Bench
     * session. */
   private[graft] def runGate(s: SparkSession, name: String, g: RunnerGate): DataFrame = {
-    import graft.sources.{TopicConf, Topics}
-    val conf = TopicConf(gateTopicDir(name))
+    import graft.sources.{Fs, TopicConf, Topics}
+    // the returned frame reads the topic files lazily: the dir outlives the call
+    val conf = TopicConf(Fs.tempDirDeletedAtExit(s"graft-$name"))
     var r: exec.StreamingStatementRunner = null
     def start(): Unit = {
       r = new exec.StreamingStatementRunner(s, topicConf = Some(conf))
@@ -120,22 +121,6 @@ object SparkEntry {
       }
     } finally if (r != null) r.stopAll()
     g.fold(s)
-  }
-
-  /** A gate's topic root. The returned frame reads these files lazily,
-    * so the dir outlives the call and is deleted at JVM exit. */
-  private def gateTopicDir(name: String): String = {
-    import java.nio.file.{Files, Path}
-    val root = Files.createTempDirectory(s"graft-$name")
-    sys.addShutdownHook {
-      try {
-        val walk = Files.walk(root)
-        try walk.sorted(java.util.Comparator.reverseOrder[Path]())
-          .forEach(p => Files.deleteIfExists(p))
-        finally walk.close()
-      } catch { case _: java.io.IOException | _: java.io.UncheckedIOException => }
-    }
-    root.toString
   }
 
   /** The events fixture with micros time as `ts_us`. Micros ride as

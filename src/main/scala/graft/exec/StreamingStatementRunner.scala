@@ -4,7 +4,7 @@ import graft.catalog.{ChangelogMode, InMemoryCatalog, TableMeta}
 import graft.ddl.StatementPreprocessor
 import graft.ddl.StatementPreprocessor._
 import graft.operators.ChangelogOps
-import graft.sources.{TopicConf, Topics}
+import graft.sources.{Fs, TopicConf, Topics}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.StreamingQuery
@@ -53,8 +53,9 @@ final class StreamingStatementRunner(spark: SparkSession,
                                      val catalog: InMemoryCatalog = new InMemoryCatalog,
                                      topicConf: Option[TopicConf] = None) {
 
+  /** Without a `TopicConf`, a temp topic root that is deleted at JVM exit. */
   val conf: TopicConf = topicConf.getOrElse(
-    TopicConf(java.nio.file.Files.createTempDirectory("graft-topics").toString))
+    TopicConf(Fs.tempDirDeletedAtExit("graft-topics")))
 
   /** Checkpoint root for the long-running INSERT queries — lives under
     * the topic root (dot-prefixed: invisible to file listings), so a
@@ -2811,10 +2812,12 @@ final class StreamingStatementRunner(spark: SparkSession,
     * surface a production operator of never-terminating statements
     * watches (the managed-platform analog is the statement status
     * panel): last completed batch, rows ingested by it, current
-    * processing rate, and the event-time watermark (the lag signal
-    * for the stateful operators). Reads each query's LAST progress
+    * processing rate, the event-time watermark (the lag signal for
+    * the stateful operators), and the trigger's per-phase wall split
+    * (`phases`). Reads each query's LAST progress
     * snapshot — a driver-side constant-size read, no job run. */
   def progressSummary: Seq[StatementProgress] = queries.toSeq.flatMap { q =>
+    import scala.jdk.CollectionConverters._
     Option(q.lastProgress).map { p =>
       // tombstones skipped by a promoted upsert driver THIS trigger
       // (ADVICE r13: never silent) — the observe metric registered in
@@ -2843,7 +2846,8 @@ final class StreamingStatementRunner(spark: SparkSession,
         rowsPerSecond = p.processedRowsPerSecond,
         watermark = Option(p.eventTime.get("watermark")).getOrElse(""),
         tombstonesDropped = dropped,
-        joinState = js)
+        joinState = js,
+        phases = p.durationMs.asScala.map { case (k, v) => k -> v.longValue }.toMap)
     }
   }
 
@@ -2895,12 +2899,17 @@ final case class AggShape(contexts: Int, topIsAggregate: Boolean,
   * `tombstonesDropped`: upsert-driver DELETEs skipped by a promoted
   * append consumer in that batch (they cannot flow without a
   * retraction channel) — non-zero means the downstream table is
-  * retaining deleted keys. */
+  * retaining deleted keys. `phases`: that trigger's wall split in ms,
+  * Structured Streaming's `durationMs` — `addBatch` (the statement's
+  * own work, sink included), `latestOffset` (source listing),
+  * `walCommit`/`commitOffsets` (offset and commit logs),
+  * `queryPlanning`, `getBatch`, and `triggerExecution`, the whole. */
 final case class StatementProgress(name: String, batchId: Long,
                                    inputRows: Long, rowsPerSecond: Double,
                                    watermark: String,
                                    tombstonesDropped: Long = 0L,
-                                   joinState: Seq[JoinSideState] = Nil)
+                                   joinState: Seq[JoinSideState] = Nil,
+                                   phases: Map[String, Long] = Map.empty)
 
 /** Size of one regular-join side's operator state, per state-owning
   * side (self-join occurrences share their owner's entry). `kind` is

@@ -59,4 +59,28 @@ object Fs {
       new String(buf.toByteArray, "UTF-8")
     } finally in.close()
   }
+
+  /** A fresh local temp dir, deleted with its contents at JVM exit —
+    * not on return, for callers whose frames read the files lazily. */
+  def tempDirDeletedAtExit(prefix: String): String = {
+    val root = java.nio.file.Files.createTempDirectory(prefix)
+    exitDeletes.add(root)
+    root.toString
+  }
+
+  private lazy val exitDeletes = {
+    import java.nio.file.{Files, Path}
+    val roots = java.util.concurrent.ConcurrentHashMap.newKeySet[Path]()
+    sys.addShutdownHook {
+      roots.forEach { root =>
+        try {
+          val walk = Files.walk(root)
+          try walk.sorted(java.util.Comparator.reverseOrder[Path]())
+            .forEach(p => Files.deleteIfExists(p))
+          finally walk.close()
+        } catch { case _: java.io.IOException | _: java.io.UncheckedIOException => }
+      }
+    }
+    roots
+  }
 }

@@ -5,9 +5,11 @@ import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Shared local session for specs (single JVM; `local[4]` keeps spec
-  * runtime low — scale behavior is exercised via Bench, not here). */
+  * runtime low — scale behavior is exercised via Bench, not here). Its
+  * `file` scheme is the engine's fork-free filesystem, as in every main;
+  * the mains' AQE tuning stays out. */
 trait SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
-  lazy val spark: SparkSession = SparkSession.builder()
+  lazy val spark: SparkSession = graft.sources.LocalFs.configure(SparkSession.builder())
     .master("local[4]")
     .appName("graft-test")
     .config("spark.sql.shuffle.partitions", "4")

@@ -278,6 +278,11 @@ class StreamingStatementRunnerSpec extends SparkSpec {
     assert(p.name.startsWith("ins0-") && p.name.contains("prog_cust_keyed"),
       s"progress row must identify its statement: $p")
     assert(p.batchId >= 0 && p.rowsPerSecond >= 0.0)
+    // the trigger's phase split: ingest listing, the statement's own
+    // work, and the offset/commit log writes, inside the whole trigger
+    assert(Seq("addBatch", "walCommit", "commitOffsets", "latestOffset").forall(p.phases.contains),
+      s"phases must carry the trigger split: ${p.phases}")
+    assert(p.phases("triggerExecution") >= p.phases("addBatch"))
     // the LAST batch's input rows — a later drain refreshes the snapshot
     customers.addData(SCust("c3", "Cid", "C", "c@x"))
     r.processAllAvailable()

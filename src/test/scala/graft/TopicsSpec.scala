@@ -10,8 +10,7 @@ import org.apache.spark.sql.types._
 class TopicsSpec extends SparkSpec {
   import spark.implicits._
 
-  private def freshConf() = TopicConf(
-    java.nio.file.Files.createTempDirectory("graft-topics-spec").toString)
+  private def freshConf() = TopicConf(graft.sources.Fs.tempDirDeletedAtExit("graft-topics-spec"))
 
   test("records carry the exact Kafka source shape; offsets are monotone per partition") {
     val conf = freshConf()
