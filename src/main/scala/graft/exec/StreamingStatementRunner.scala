@@ -2603,7 +2603,7 @@ final class StreamingStatementRunner(spark: SparkSession,
     val valueSchema = StructType(Seq(
       org.apache.spark.sql.types.StructField("__vsn", org.apache.spark.sql.types.LongType)))
     val records = Topics.readBatchRecords(sess, vsTopic, conf)
-      .where(col("offset") < lit(epoch * (1L << 40)))
+      .where(col("offset") < graft.expressions.BoundLong.long(epoch * (1L << 40)))
     val latest = ChangelogOps.latestByKey(records, Seq("key"), Seq("offset"))
       .where(col("value").isNotNull)
     Topics.decodeJson(latest, valueSchema, Some(keySchema))
@@ -2627,7 +2627,7 @@ final class StreamingStatementRunner(spark: SparkSession,
       } :+ org.apache.spark.sql.types.StructField(
         RetractAggRewrite.NetCol, org.apache.spark.sql.types.LongType))
     val records = Topics.readBatchRecords(sess, target.topic, conf)
-      .where(col("offset") < lit(epoch * (1L << 40)))
+      .where(col("offset") < graft.expressions.BoundLong.long(epoch * (1L << 40)))
     val latest = ChangelogOps.latestByKey(records, Seq("key"), Seq("offset"))
       .where(col("value").isNotNull)
     Topics.decodeJson(latest, valueSchema, Some(keySchema))
@@ -2711,7 +2711,8 @@ final class StreamingStatementRunner(spark: SparkSession,
 
   /** Sink ONE micro-batch: encode to Kafka-shaped records, write to the
     * target topic (distributed write — `Topics.appendJson` never
-    * collects), re-materialize the visible view from the read-back.
+    * collects), make the visible view over the read-back current, and
+    * record the write's and the refresh's nanos for [[progressSummary]].
     *
     * Effectively-once on the FILES transport: the epoch is a PURE
     * FUNCTION of (statement id, batchId) — a crash-replayed
@@ -2737,59 +2738,114 @@ final class StreamingStatementRunner(spark: SparkSession,
     // concurrent statements sink to disjoint epoch namespaces (stmtId
     // rides the epoch's low bits; upsert targets are single-writer),
     // so only the shared MAIN-session view refresh needs the lock
+    val t0 = System.nanoTime()
     Topics.appendJson(tagged, target.topic, conf,
       keyCols = if (isUpsert) meta.primaryKey else Nil, epoch = epoch)
+    val t1 = System.nanoTime()
     synchronized { refreshTargetView(spark, target, meta, tagged.schema) }
+    val t2 = System.nanoTime()
+    sinkPhases.merge(queryDisplayName(target, stmtId), SinkPhases(batchId, t1 - t0, t2 - t1),
+      (prev, cur) => if (prev.batchId == cur.batchId) prev + cur else cur)
   }
 
-  /** Rebuild the target's visible view from its topic. Upsert targets
-    * materialize latest-by-offset per key (the compacted-topic contract);
-    * append/retract targets expose every record. Metadata columns are
-    * dropped unless the table declares them.
+  /** The sink's own phases of a query's latest micro-batch, by query
+    * name: nanos in [[Topics.appendJson]] (encode, write, commit) and
+    * in the view refresh, summed over the batch's [[sinkBatch]] calls. */
+  private final case class SinkPhases(batchId: Long, writeNs: Long, refreshNs: Long) {
+    def +(o: SinkPhases): SinkPhases =
+      SinkPhases(batchId, writeNs + o.writeNs, refreshNs + o.refreshNs)
+  }
+  private val sinkPhases = new java.util.concurrent.ConcurrentHashMap[String, SinkPhases]()
+
+  /** What a target's visible view is built from. `written` keeps only
+    * the top-level names and types: the decode makes every column
+    * nullable, so a batch schema and the declared one that differ in
+    * nullability or metadata build the same view. */
+  private final case class ViewSpec(topic: String, upsertKey: Seq[String],
+                                    written: StructType)
+
+  /** Visible views by (session, spec), built once each. */
+  private val visibleViews =
+    scala.collection.concurrent.TrieMap.empty[(SparkSession, ViewSpec), DataFrame]
+  /** The catalog entry this runner last registered under each
+    * (session, view name), with the spec it was built from. An entry
+    * that is no longer the catalog's (a shadow, a scope switch, a drop)
+    * means the name must be registered again. */
+  private val registeredViews =
+    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String), (ViewSpec, AnyRef)]()
+
+  /** Make the target's visible view current in `sess`: the scoped
+    * shadow always, the bare name while this table is what the current
+    * scope resolves it to. Upsert targets materialize latest-by-offset
+    * per key (the compacted-topic contract); append/retract targets
+    * expose every record. Metadata columns are dropped unless the table
+    * declares them.
     *
-    * The view is LAZY — per micro-batch this only re-registers a plan;
-    * the O(log length) materialization runs when a consumer queries it,
-    * which is the compacted-topic contract cost. `Topics.compact` bounds
-    * it at O(live keys), exactly as Kafka log compaction does. */
+    * Register-once: the view reads its topic through
+    * `Topics.readBatchRecords`, whose file list comes from the topic's
+    * manifest when each query is planned, so a view built once serves
+    * every later commit. A name is registered again only when its
+    * catalog entry is no longer the one registered here (a
+    * `withViewShadow` shadow, `switchScope`, a side-view drop) or the
+    * spec changed; otherwise this is a catalog lookup per name.
+    *
+    * The view is LAZY — the O(log length) materialization runs when a
+    * consumer queries it, which is the compacted-topic contract cost.
+    * `Topics.compact` bounds it at O(live keys), exactly as Kafka log
+    * compaction does. */
   private def refreshTargetView(sess: SparkSession, target: TargetBinding,
                                 meta: TableMeta, written: StructType): Unit = {
-    val records = Topics.readBatchRecords(sess, target.topic, conf)
     val isUpsert = meta.changelogMode == ChangelogMode.Upsert && meta.primaryKey.nonEmpty
-    val visible =
-      if (isUpsert) {
-        val keySchema = StructType(written.fields.filter(f => meta.primaryKey.contains(f.name)))
-        // decode an OPTIONAL __keep visibility marker alongside the
-        // declared fields: a merge-aggregate writer stores a
-        // HAVING-failing group's STATE with __keep=false (the data
-        // still exists; only visibility changed). Records from every
-        // other writer lack the field — from_json yields null and the
-        // coalesce keeps them visible.
-        val valueSchema = StructType(
-          written.fields.filterNot(f => meta.primaryKey.contains(f.name) ||
-            f.name == "__op" || f.name == RetractAggRewrite.KeepCol) :+
-            org.apache.spark.sql.types.StructField(
-              RetractAggRewrite.KeepCol, org.apache.spark.sql.types.BooleanType))
-        // latest record per KEY BYTES by offset FIRST, tombstone filter
-        // AFTER — the same fold `Topics.compact` applies, so the view is
-        // identical before and after compaction. Filtering tombstones
-        // first would resurrect a deleted key's previous value.
-        val latestRec = ChangelogOps.latestByKey(records, Seq("key"), Seq("offset"))
-          .where(col("value").isNotNull)
-        val decoded = Topics.decodeJson(latestRec, valueSchema, Some(keySchema))
-          .where(coalesce(col(RetractAggRewrite.KeepCol), lit(true)))
-        decoded.select(written.fieldNames
-          .filterNot(n => n == "__op" || n == RetractAggRewrite.KeepCol)
-          .map(col).toIndexedSeq: _*)
-      } else {
-        val decoded = Topics.decodeJson(records, written)
-        decoded.select(written.fieldNames.map(col).toIndexedSeq: _*)
+    val spec = ViewSpec(target.topic, if (isUpsert) meta.primaryKey else Nil,
+      StructType(written.fields.map(f => org.apache.spark.sql.types.StructField(f.name, f.dataType))))
+    val catalogOf = sess.sessionState.catalog
+    // a micro-batch arriving after USE switched away must not clobber
+    // the other scope's same-named view
+    val names = target.scoped +: (if (inCurrentScope(target)) Seq(target.bare) else Nil)
+    names.foreach { name =>
+      val current = catalogOf.getRawTempView(name)
+      val upToDate = Option(registeredViews.get((sess, name))).exists { case (s, entry) =>
+        s == spec && current.exists(_ eq entry)
       }
-    // scoped shadow always; the bare binding only while this table is
-    // what the current scope resolves the bare name to — a micro-batch
-    // arriving after USE switched away must not clobber the other
-    // scope's same-named view
-    visible.createOrReplaceTempView(target.scoped)
-    if (inCurrentScope(target)) visible.createOrReplaceTempView(target.bare)
+      if (!upToDate) {
+        visibleViews.getOrElseUpdate((sess, spec), visibleView(sess, spec))
+          .createOrReplaceTempView(name)
+        catalogOf.getRawTempView(name).foreach(e => registeredViews.put((sess, name), (spec, e)))
+      }
+    }
+  }
+
+  private def visibleView(sess: SparkSession, spec: ViewSpec): DataFrame = {
+    val written = spec.written
+    val records = Topics.readBatchRecords(sess, spec.topic, conf)
+    if (spec.upsertKey.nonEmpty) {
+      val keySchema = StructType(written.fields.filter(f => spec.upsertKey.contains(f.name)))
+      // decode an OPTIONAL __keep visibility marker alongside the
+      // declared fields: a merge-aggregate writer stores a
+      // HAVING-failing group's STATE with __keep=false (the data
+      // still exists; only visibility changed). Records from every
+      // other writer lack the field — from_json yields null and the
+      // coalesce keeps them visible.
+      val valueSchema = StructType(
+        written.fields.filterNot(f => spec.upsertKey.contains(f.name) ||
+          f.name == "__op" || f.name == RetractAggRewrite.KeepCol) :+
+          org.apache.spark.sql.types.StructField(
+            RetractAggRewrite.KeepCol, org.apache.spark.sql.types.BooleanType))
+      // latest record per KEY BYTES by offset FIRST, tombstone filter
+      // AFTER — the same fold `Topics.compact` applies, so the view is
+      // identical before and after compaction. Filtering tombstones
+      // first would resurrect a deleted key's previous value.
+      val latestRec = ChangelogOps.latestByKey(records, Seq("key"), Seq("offset"))
+        .where(col("value").isNotNull)
+      val decoded = Topics.decodeJson(latestRec, valueSchema, Some(keySchema))
+        .where(coalesce(col(RetractAggRewrite.KeepCol), lit(true)))
+      decoded.select(written.fieldNames
+        .filterNot(n => n == "__op" || n == RetractAggRewrite.KeepCol)
+        .map(col).toIndexedSeq: _*)
+    } else {
+      val decoded = Topics.decodeJson(records, written)
+      decoded.select(written.fieldNames.map(col).toIndexedSeq: _*)
+    }
   }
 
   /** Drain every statement to quiescence. One pass drains each query
@@ -2847,7 +2903,11 @@ final class StreamingStatementRunner(spark: SparkSession,
         watermark = Option(p.eventTime.get("watermark")).getOrElse(""),
         tombstonesDropped = dropped,
         joinState = js,
-        phases = p.durationMs.asScala.map { case (k, v) => k -> v.longValue }.toMap)
+        phases = p.durationMs.asScala.map { case (k, v) => k -> v.longValue }.toMap ++
+          Option(sinkPhases.get(Option(p.name).getOrElse(""))).filter(_.batchId == p.batchId)
+            .map(sp => Map("sinkWrite" -> sp.writeNs / 1000000L,
+              "viewRefresh" -> sp.refreshNs / 1000000L))
+            .getOrElse(Map.empty))
     }
   }
 
@@ -2903,7 +2963,11 @@ final case class AggShape(contexts: Int, topIsAggregate: Boolean,
   * Structured Streaming's `durationMs` — `addBatch` (the statement's
   * own work, sink included), `latestOffset` (source listing),
   * `walCommit`/`commitOffsets` (offset and commit logs),
-  * `queryPlanning`, `getBatch`, and `triggerExecution`, the whole. */
+  * `queryPlanning`, `getBatch`, and `triggerExecution`, the whole —
+  * plus, for a batch that sank through the runner's common sink, the
+  * sink's own parts of `addBatch`: `sinkWrite` (encode, write and
+  * commit the epoch to the target topic) and `viewRefresh` (make the
+  * target's view current). */
 final case class StatementProgress(name: String, batchId: Long,
                                    inputRows: Long, rowsPerSecond: Double,
                                    watermark: String,

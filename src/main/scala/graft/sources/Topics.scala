@@ -1,6 +1,13 @@
 package graft.sources
 
+import graft.expressions.BoundLong
+import org.apache.hadoop.fs.{FileStatus, FileSystem, Path}
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.expressions.Expression
+import org.apache.spark.sql.catalyst.util.DateTimeUtils
+import org.apache.spark.sql.execution.datasources.{FileIndex, FileStatusWithMetadata, HadoopFsRelation, PartitionDirectory}
+import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
@@ -70,7 +77,11 @@ object Topics {
         spark.readStream.schema(recordSchema).parquet(dirOf(conf, topic))
     }
 
-  /** Bounded scan of everything currently in a topic. */
+  /** Bounded scan of everything currently in a topic. On the files
+    * transport the scan's file list comes from the topic's [[Manifest]]
+    * each time a query over the frame is PLANNED, so one frame (and a
+    * view registered over it) follows every later commit without being
+    * rebuilt, and planning does not list the topic directory. */
   def readBatchRecords(spark: SparkSession, topic: String, conf: TopicConf): DataFrame =
     conf.transport match {
       case TopicConf.Kafka =>
@@ -83,7 +94,9 @@ object Topics {
           .select("key", "value", "topic", "partition", "offset", "timestamp")
       case _ =>
         ensureTopic(spark, conf, topic)
-        spark.read.schema(recordSchema).parquet(dirOf(conf, topic))
+        spark.baseRelationToDataFrame(HadoopFsRelation(
+          new ManifestIndex(spark, dirOf(conf, topic)), StructType(Nil), recordSchema,
+          None, new ParquetFileFormat, Map.empty)(spark))
     }
 
   /** Producer/sink side: JSON-encode typed rows into records and append
@@ -106,6 +119,12 @@ object Topics {
     * per append, 2^23 epochs — exceeding one throws (a clamp would
     * alias offsets at the cap, making latest-by-offset upsert order
     * nondeterministic among the aliased records).
+    *
+    * The epoch's offset base and the write instant (the record
+    * timestamp when no `eventTimeCol` is given; one instant for every
+    * row of the write) are [[BoundLong]] references, not literals: the
+    * generated code is the same for every epoch, so a micro-batch's
+    * sink reuses the compiled encoder instead of recompiling it.
     */
   def appendJson(df: DataFrame, topic: String, conf: TopicConf,
                  keyCols: Seq[String], epoch: Long,
@@ -124,11 +143,12 @@ object Topics {
       else valueJson
     require(epoch >= 0 && epoch < (1L << 23),
       s"appendJson($topic): epoch $epoch outside [0, 2^23)")
-    val ts = eventTimeCol.map(c => col(c).cast("timestamp")).getOrElse(current_timestamp())
+    val ts = eventTimeCol.map(c => col(c).cast("timestamp")).getOrElse(
+      BoundLong.timestampMicros(DateTimeUtils.instantToMicros(java.time.Instant.now())))
     val mono = monotonically_increasing_id()
     val pid = shiftright(mono, 33)
     val row = mono.bitwiseAND(lit((1L << 33) - 1))
-    val packed = lit(epoch * (1L << 40)) + shiftleft(pid, 27) + row
+    val packed = BoundLong.long(epoch * (1L << 40)) + shiftleft(pid, 27) + row
     val offset = coalesce(
       assert_true(pid < lit(1L << 13) && row < lit(1L << 27),
         lit(s"appendJson($topic): offset packing overflow — " +
@@ -159,8 +179,12 @@ object Topics {
           .option("topic", topic)
           .save()
       case _ =>
-        ensureTopic(records.sparkSession, conf, topic)
+        val spark = records.sparkSession
+        ensureTopic(spark, conf, topic)
         records.write.mode("append").parquet(dirOf(conf, topic))
+        // the commit protocol chose the file names: publish a listing
+        val (fs, dir) = Fs.on(spark, dirOf(conf, topic))
+        manifestOf(fs, dir).commit(fs, dir)(None)
     }
 
   /** Files-transport epoch write, IDEMPOTENT per (topic, epoch): a
@@ -195,7 +219,12 @@ object Topics {
     * an epoch overwritten after the reader consumed it is not re-read.
     * Replayed batches recompute the same rows from the same
     * checkpointed offsets, so the overwrite is byte-stable where it
-    * matters (keys, values, epoch ordering). */
+    * matters (keys, values, epoch ordering).
+    *
+    * The deletes and renames run under the topic's [[Manifest]] lock,
+    * which then publishes the new file list in one swap: a batch
+    * reader that plans during the commit waits for it, and one that
+    * planned before it keeps the previous list. */
   private def writeEpochIdempotent(records: DataFrame, topic: String,
                                    conf: TopicConf, epoch: Long): Unit = {
     val spark = records.sparkSession
@@ -203,26 +232,140 @@ object Topics {
     ensureTopic(spark, conf, topic)
     val staging = s"${conf.root}/.staging/$topic-e$epoch"
     records.write.mode("overwrite").parquet(staging)
-    val (fs, _) = Fs.on(spark, dir)
-    val staged = fs.listStatus(new org.apache.hadoop.fs.Path(staging))
+    val (fs, dirPath) = Fs.on(spark, dir)
+    val staged = fs.listStatus(new Path(staging))
       .filter(s => s.isFile && s.getPath.getName.startsWith("part-"))
       .sortBy(_.getPath.getName)
-    // drop the previous attempt's files for THIS epoch only — globbed,
-    // so the commit never lists the whole (epoch-count-sized) topic dir
     val prefix = s"e$epoch-"
-    fs.globStatus(new org.apache.hadoop.fs.Path(dir, s"$prefix*"))
-      .filter(_.isFile)
-      .foreach(s => fs.delete(s.getPath, false))
-    staged.zipWithIndex.foreach { case (s, i) =>
-      val name = s.getPath.getName
-      val suffix = name.dropWhile(_ != '.') // keep .snappy.parquet etc.
-      if (!fs.rename(s.getPath,
-          new org.apache.hadoop.fs.Path(dir, s"${prefix}p$i$suffix")))
-        throw new java.io.IOException(
-          s"appendJson($topic): cannot commit epoch $epoch file $name")
+    manifestOf(fs, dirPath).commit(fs, dirPath) {
+      // drop the previous attempt's files for THIS epoch only — globbed,
+      // so the commit never lists the whole (epoch-count-sized) topic dir
+      fs.globStatus(new Path(dir, s"$prefix*"))
+        .filter(_.isFile)
+        .foreach(s => fs.delete(s.getPath, false))
+      val committed = staged.zipWithIndex.map { case (s, i) =>
+        val name = s.getPath.getName
+        val suffix = name.dropWhile(_ != '.') // keep .snappy.parquet etc.
+        val dest = new Path(dir, s"${prefix}p$i$suffix")
+        if (!fs.rename(s.getPath, dest))
+          throw new java.io.IOException(
+            s"appendJson($topic): cannot commit epoch $epoch file $name")
+        fs.getFileStatus(dest)
+      }
+      Some((known: Vector[FileStatus]) =>
+        known.filterNot(_.getPath.getName.startsWith(prefix)) ++ committed)
     }
     Fs.deleteRecursive(spark, staging)
     spark.catalog.refreshByPath(dir)
+  }
+
+  /** The committed record files of one files-transport topic directory,
+    * shared by every reader and writer of the topic in this JVM — the
+    * analog of a Kafka log's segment index: a read plans from it without
+    * listing the directory.
+    *
+    * Contract:
+    *  - writers in this JVM ([[writeEpochIdempotent]], [[appendRecords]],
+    *    [[compact]]) run their deletes and renames through [[commit]],
+    *    which publishes the resulting list in ONE swap after the last
+    *    rename — no reader sees an epoch half-renamed;
+    *  - the first read (or commit) of a topic in a JVM lists it once;
+    *  - files this JVM did not write (another runner process on the
+    *    same root, a restart, a plain `write.parquet`) are found by the
+    *    directory's mtime: each published list records the mtime it
+    *    matches, every [[files]] call stats the directory, and a
+    *    different mtime re-lists. A stat per planned scan, never a
+    *    listing. Limit: an outside write that lands in the same mtime
+    *    tick as this JVM's last commit or listing is seen only at the
+    *    directory's next change, and a filesystem without directory
+    *    mtimes (object stores) sees outside writes never.
+    *
+    * Holds no thread; the lock is held only for a commit's renames or
+    * a listing. */
+  private final class Manifest {
+    @volatile private var snap: Snapshot = _
+
+    private def mtimeOf(fs: FileSystem, dir: Path): Long =
+      try fs.getFileStatus(dir).getModificationTime
+      catch { case _: java.io.FileNotFoundException => -1L }
+
+    /** Data files as a directory scan sees them: no `_`/`.`-prefixed
+      * (commit markers, checksums, staging) or empty files. */
+    private def list(fs: FileSystem, dir: Path): Vector[FileStatus] =
+      try fs.listStatus(dir).iterator.filter { s =>
+        val n = s.getPath.getName
+        s.isFile && s.getLen > 0 && !n.startsWith("_") && !n.startsWith(".")
+      }.toVector.sortBy(_.getPath.getName)
+      catch { case _: java.io.FileNotFoundException => Vector.empty }
+
+    /** The topic's record files now. */
+    def files(fs: FileSystem, dir: Path): Vector[FileStatus] = {
+      val s = snap
+      if (s != null && s.dirMtime == mtimeOf(fs, dir)) s.files
+      else synchronized {
+        // stat BEFORE listing: a change after the stat leaves the
+        // recorded mtime behind, so the next read lists again
+        val m = mtimeOf(fs, dir)
+        val cur = snap
+        if (cur != null && cur.dirMtime == m) cur.files
+        else {
+          val listed = list(fs, dir)
+          snap = Snapshot(listed, m)
+          listed
+        }
+      }
+    }
+
+    /** Run a writer's deletes and renames, then publish. `renames`
+      * returns the edit that turns the list known before it into the
+      * list after it, or None when only a listing can tell. A stale
+      * or unhydrated list is re-listed instead of edited. */
+    def commit(fs: FileSystem, dir: Path)(
+        renames: => Option[Vector[FileStatus] => Vector[FileStatus]]): Unit = synchronized {
+      val s = snap
+      val known = if (s != null && s.dirMtime == mtimeOf(fs, dir)) Some(s.files) else None
+      val edit = renames
+      val m = mtimeOf(fs, dir)
+      val files = known.zip(edit).map { case (k, e) => e(k) }.getOrElse(list(fs, dir))
+      snap = Snapshot(files, m)
+    }
+  }
+
+  /** A published file list and the directory mtime it matches. */
+  private final case class Snapshot(files: Vector[FileStatus], dirMtime: Long)
+
+  private val manifests = new java.util.concurrent.ConcurrentHashMap[String, Manifest]()
+
+  private def manifestOf(fs: FileSystem, dir: Path): Manifest =
+    manifests.computeIfAbsent(fs.makeQualified(dir).toString, _ => new Manifest)
+
+  /** A topic directory as a file-source index: every planning asks the
+    * topic's [[Manifest]] for the current files. Equal for equal
+    * directories, as Spark's `InMemoryFileIndex` is, so cached plans
+    * over a topic keep matching. */
+  private final class ManifestIndex(spark: SparkSession, dir: String) extends FileIndex {
+    private val hadoopConf = spark.sessionState.newHadoopConf()
+    private val path = new Path(dir)
+    private val fs = path.getFileSystem(hadoopConf)
+    private val root = fs.makeQualified(path)
+    private val manifest = manifestOf(fs, path)
+
+    private def current: Vector[FileStatus] = manifest.files(fs, root)
+
+    override def rootPaths: Seq[Path] = Seq(root)
+    override def listFiles(partitionFilters: Seq[Expression],
+                           dataFilters: Seq[Expression]): Seq[PartitionDirectory] =
+      Seq(PartitionDirectory(InternalRow.empty, current.map(FileStatusWithMetadata(_))))
+    override def inputFiles: Array[String] = current.map(_.getPath.toString).toArray
+    override def refresh(): Unit = () // the manifest is current by construction
+    override def sizeInBytes: Long = current.map(_.getLen).sum
+    override def partitionSchema: StructType = StructType(Nil)
+
+    override def equals(other: Any): Boolean = other match {
+      case o: ManifestIndex => o.root == root
+      case _ => false
+    }
+    override def hashCode(): Int = root.hashCode
   }
 
   /** Decode JSON-valued records into typed table columns plus the
@@ -273,12 +416,17 @@ object Topics {
     Fs.deleteRecursive(spark, old)
     // swap with rollback, through Hadoop FileSystem so a topic root on
     // HDFS/S3A works too; every rename result is checked — a silent
-    // false return would otherwise leave a half-swapped topic
-    if (!Fs.rename(spark, dir, old))
-      throw new java.io.IOException(s"compact: cannot stage $dir aside")
-    if (!Fs.rename(spark, tmp, dir)) {
-      Fs.rename(spark, old, dir) // roll back to the uncompacted log
-      throw new java.io.IOException(s"compact: cannot swap $tmp into place")
+    // false return would otherwise leave a half-swapped topic. Under
+    // the manifest lock, which publishes the compacted list after it.
+    val (fs, dirPath) = Fs.on(spark, dir)
+    manifestOf(fs, dirPath).commit(fs, dirPath) {
+      if (!Fs.rename(spark, dir, old))
+        throw new java.io.IOException(s"compact: cannot stage $dir aside")
+      if (!Fs.rename(spark, tmp, dir)) {
+        Fs.rename(spark, old, dir) // roll back to the uncompacted log
+        throw new java.io.IOException(s"compact: cannot swap $tmp into place")
+      }
+      None
     }
     Fs.deleteRecursive(spark, old)
     spark.catalog.refreshByPath(dir)

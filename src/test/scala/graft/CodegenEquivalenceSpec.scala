@@ -1,6 +1,6 @@
 package graft
 
-import graft.expressions.{CharEntropy, HashExpressions, LevenshteinBytes, NormalizeText, TokensOutsideIntervals, VectorExpressions}
+import graft.expressions.{BoundLong, CharEntropy, HashExpressions, LevenshteinBytes, NormalizeText, TokensOutsideIntervals, VectorExpressions}
 import graft.expressions.{LayoutExpressions => LayoutExprs}
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
@@ -94,14 +94,15 @@ class CodegenEquivalenceSpec extends SparkSpec {
       LayoutExprs.zOrderKey(col("x"), col("y"), 16).as("zorder"))
   }
 
-  private def collectUnder(wholeStage: Boolean, factoryMode: String): Seq[String] = {
+  private def collectUnder(wholeStage: Boolean, factoryMode: String,
+                           build: DataFrame => DataFrame = kernels): Seq[String] = {
     val wsKey = "spark.sql.codegen.wholeStage"
     val fmKey = "spark.sql.codegen.factoryMode"
     val wsPrev = spark.conf.get(wsKey)
     val fmPrev = spark.conf.getOption(fmKey)
     spark.conf.set(wsKey, wholeStage.toString)
     spark.conf.set(fmKey, factoryMode)
-    try kernels(inputs()).orderBy("id").collect().toSeq.map(_.toString)
+    try build(inputs()).orderBy("id").collect().toSeq.map(_.toString)
     finally {
       spark.conf.set(wsKey, wsPrev)
       fmPrev match {
@@ -118,6 +119,23 @@ class CodegenEquivalenceSpec extends SparkSpec {
     gen.zip(interp).zipWithIndex.foreach { case ((g, i), idx) =>
       assert(g === i, s"row $idx diverged between codegen and interpreted")
     }
+  }
+
+  test("BoundLong: CODEGEN_ONLY results equal NO_CODEGEN results and the literals it stands for") {
+    val base = 3L << 40
+    val micros = 1704164645000000L // 2024-01-02 03:04:05 UTC
+    def bound(df: DataFrame): DataFrame = df.select(col("id"),
+      (BoundLong.long(base) + col("x")).as("packed"),
+      (col("x") < BoundLong.long(30000L)).as("below"),
+      BoundLong.timestampMicros(micros).as("ts"))
+    def literal(df: DataFrame): DataFrame = df.select(col("id"),
+      (lit(base) + col("x")).as("packed"),
+      (col("x") < lit(30000L)).as("below"),
+      lit(java.sql.Timestamp.from(java.time.Instant.ofEpochSecond(micros / 1000000L))).as("ts"))
+    val gen = collectUnder(wholeStage = true, factoryMode = "CODEGEN_ONLY", build = bound)
+    val interp = collectUnder(wholeStage = false, factoryMode = "NO_CODEGEN", build = bound)
+    assert(gen === interp)
+    assert(gen === collectUnder(wholeStage = true, factoryMode = "CODEGEN_ONLY", build = literal))
   }
 
   test("Verify.assertFlat rejects nested top-level gate outputs and passes flat ones (the q248 driver-crash class)") {

@@ -140,7 +140,7 @@ class IndexMaintenanceSpec extends SparkSpec {
     // strongest form; for an in-sample id only same-sidecar parity
     // would hold, which the LSH-side test's pigeonhole argument does
     // not need but IVF does)
-    def mk() = java.nio.file.Files.createTempDirectory("graft-ivf-repl").toString
+    def mk() = tempDir("graft-ivf-repl")
     val dirLive = mk()
     Similarity.buildIvfIndex(emb, "vec_id", "embedding", dirLive, nCentroids = 16)
     val sampleIds = emb
@@ -369,7 +369,7 @@ class IndexMaintenanceSpec extends SparkSpec {
   }
 
   test("IVF append assigns with the sidecar quantizer; results cover the union corpus; pruning survives") {
-    val dir = java.nio.file.Files.createTempDirectory("graft-ivf-maint").toString
+    val dir = tempDir("graft-ivf-maint")
     val even = emb.where($"vec_id" % 2 === 0)
     val odd = emb.where($"vec_id" % 2 === 1)
     Similarity.buildIvfIndex(even, "vec_id", "embedding", dir, nCentroids = 16)
@@ -409,8 +409,8 @@ class IndexMaintenanceSpec extends SparkSpec {
   }
 
   test("IVF tombstones == compacted index; compaction keeps the sidecar and drops the rows") {
-    val dir = java.nio.file.Files.createTempDirectory("graft-ivf-tomb").toString
-    val dirV2 = java.nio.file.Files.createTempDirectory("graft-ivf-tomb-v2").toString
+    val dir = tempDir("graft-ivf-tomb")
+    val dirV2 = tempDir("graft-ivf-tomb-v2")
     Similarity.buildIvfIndex(emb, "vec_id", "embedding", dir, nCentroids = 16)
     val tomb = emb.where($"vec_id" % 5 === 0).select("vec_id")
     val queries = emb.where($"vec_id" < 10)
@@ -497,7 +497,7 @@ class IndexMaintenanceSpec extends SparkSpec {
   }
 
   test("crash-consistent generations (VERDICT r12 item 3): a writer killed mid-rewrite leaves the old index serving") {
-    val dir = java.nio.file.Files.createTempDirectory("graft-ivf-crash").toString
+    val dir = tempDir("graft-ivf-crash")
     Similarity.buildIvfIndex(emb, "vec_id", "embedding", dir, nCentroids = 8)
     val queries = emb.where($"vec_id" < 5)
     def knn() = Similarity.ivfKnnIndexed(spark, dir, queries, "vec_id",

@@ -29,7 +29,7 @@ class JoinStateSpec extends SparkSpec {
   }
 
   private def newDir(tag: String): String =
-    java.nio.file.Files.createTempDirectory(s"graft-$tag").toString + "/log"
+    tempDir(s"graft-$tag") + "/log"
 
   private def payloads(dir: String, batchId: Long): List[String] =
     JoinState.readLog(spark, dir, batchId).as[String].collect().toList.sorted
@@ -177,6 +177,28 @@ class JoinStateSpec extends SparkSpec {
     JoinState.writeLog(Seq("a", "b", "c").toDF("__payload"), dir, 0L)
     assert(JoinState.stats(spark, dir).rows === 3L,
       "an overwritten batch dir must be re-counted, not served stale")
+  }
+
+  test("stats footer memo: a same-length rewrite of the same file within one mtime tick is re-counted") {
+    val dir = newDir("js-memo-tick")
+    def partOf(b: String): java.io.File =
+      new java.io.File(s"$dir/$b").listFiles().filter(f =>
+        f.getName.startsWith("part-") && f.getName.endsWith(".parquet")).head
+    // one distinct payload: 2 and 3 rows encode to files of one length
+    def rows(n: Int) = Seq.fill(n)("same").toDF("__payload").coalesce(1)
+    JoinState.writeLog(rows(2), dir, 0L)
+    val first = partOf("b0")
+    val (len, mtime) = (first.length(), first.lastModified())
+    assert(JoinState.stats(spark, dir).rows === 2L) // memoized at (path, len, mtime)
+    // the replay rewrites b0; a writer that reuses its file name inside
+    // the same mtime tick leaves path, length and mtime all unchanged
+    JoinState.writeLog(rows(3), dir, 0L)
+    val second = partOf("b0")
+    assert(second.length() === len, "the window needs a same-length rewrite")
+    java.nio.file.Files.move(second.toPath, first.toPath)
+    assert(first.setLastModified(mtime))
+    assert(JoinState.stats(spark, dir).rows === 3L,
+      "a rewritten state dir must be re-counted, not served from the memo")
   }
 
   test("a superseded generation leaked by a crash between rename and delete is swept (ADVICE r17)") {

@@ -25,7 +25,7 @@ class MergeAggFuzzSpec extends SparkSpec {
       val rnd = new scala.util.Random(4242 + idx * 13)
       val tag = s"mafz$idx"
       val conf = TopicConf(
-        java.nio.file.Files.createTempDirectory(s"graft-$tag").toString)
+        tempDir(s"graft-$tag"))
       val r = new StreamingStatementRunner(spark, topicConf = Some(conf))
       r.registerTopicSource(s"${tag}_feed", StructType(Seq(
         StructField("k", StringType), StructField("grp", StringType),
@@ -103,7 +103,7 @@ class MergeAggFuzzSpec extends SparkSpec {
       val rnd = new scala.util.Random(777 + idx * 31)
       val tag = s"chfz$idx"
       val conf = TopicConf(
-        java.nio.file.Files.createTempDirectory(s"graft-$tag").toString)
+        tempDir(s"graft-$tag"))
       val r = new StreamingStatementRunner(spark, topicConf = Some(conf))
       r.registerTopicSource(s"${tag}_dim_feed", StructType(Seq(
         StructField("uid", LongType), StructField("t", StringType),

@@ -22,7 +22,7 @@ class MergeAggRejectionSpec extends SparkSpec {
   import spark.implicits._
 
   private def newConf(tag: String): TopicConf =
-    TopicConf(java.nio.file.Files.createTempDirectory(s"graft-$tag").toString)
+    TopicConf(tempDir(s"graft-$tag"))
 
   test("sum/avg(DISTINCT a, b) is unreachable SQL: Spark's analyzer rejects the arity before the rewrite") {
     Seq((1L, 2L)).toDF("a", "b").createOrReplaceTempView("mar_batch")

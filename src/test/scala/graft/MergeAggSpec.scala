@@ -21,7 +21,7 @@ class MergeAggSpec extends SparkSpec {
   import spark.implicits._
 
   private def newConf(tag: String): TopicConf =
-    TopicConf(java.nio.file.Files.createTempDirectory(s"graft-$tag").toString)
+    TopicConf(tempDir(s"graft-$tag"))
 
   test("external stream + dim + GROUP BY accumulates across micro-batches (never batch-local)") {
     implicit val sqlCtx = spark.sqlContext

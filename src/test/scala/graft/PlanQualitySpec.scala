@@ -1412,7 +1412,7 @@ class PlanQualitySpec extends SparkSpec {
     // the per-micro-batch join plan of StreamingSimilarity.flagNearVectors
     // (batch stand-in: stream-static joins re-plan this shape per trigger)
     val emb = spark.read.parquet(s"$dir/embeddings.parquet")
-    val idx = java.nio.file.Files.createTempDirectory("plan-ivf-q221").toString
+    val idx = tempDir("plan-ivf-q221")
     graft.operators.Similarity.buildIvfIndex(emb, "vec_id", "embedding", idx, 8)
     val arrivals = emb.where(col("vec_id") % 5 === 0)
       .select(col("vec_id"), col("embedding"))

@@ -78,7 +78,7 @@ class RegularJoinFuzzSpec extends SparkSpec {
                    batchJoin: (DataFrame, DataFrame, DataFrame) => DataFrame): Unit = {
     val rnd = new scala.util.Random(seed)
     val conf = TopicConf(
-      java.nio.file.Files.createTempDirectory(s"graft-$tag").toString)
+      tempDir(s"graft-$tag"))
     val r = new StreamingStatementRunner(spark, topicConf = Some(conf))
     r.registerTopicSource(s"${tag}_dim_feed", StructType(Seq(
       StructField("uid", LongType), StructField("t", StringType),

@@ -22,7 +22,7 @@ class RetractAggSpec extends SparkSpec {
   import spark.implicits._
 
   private def newConf(tag: String): TopicConf =
-    TopicConf(java.nio.file.Files.createTempDirectory(s"graft-$tag").toString)
+    TopicConf(tempDir(s"graft-$tag"))
 
   private val srcSchema = StructType(Seq(
     StructField("k", StringType), StructField("grp", StringType),

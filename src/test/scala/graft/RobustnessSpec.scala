@@ -218,7 +218,7 @@ class RobustnessSpec extends SparkSpec {
     import graft.sources.{TopicConf, Topics}
     import spark.implicits._
     val conf = TopicConf(
-      java.nio.file.Files.createTempDirectory("graft-rob-empty").toString)
+      tempDir("graft-rob-empty"))
     val none = Seq.empty[(String, Int)].toDF("k", "n")
     // an empty micro-batch is routine under checkpointed restart (a
     // no-data trigger replayed after a crash) — it must commit an
@@ -248,7 +248,7 @@ class RobustnessSpec extends SparkSpec {
     // fails loudly on the read itself, not inside the resolver)
     assert(Similarity.resolveIvfGen(spark, missing) === missing)
     // legacy flat layout (no gen-* subdirs): the root IS the generation
-    val flat = java.nio.file.Files.createTempDirectory("graft-rob-flat").toString
+    val flat = tempDir("graft-rob-flat")
     assert(Similarity.resolveIvfGen(spark, flat) === flat)
   }
 }

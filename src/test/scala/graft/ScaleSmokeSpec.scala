@@ -148,7 +148,7 @@ class ScaleSmokeSpec extends SparkSpec {
       val sentinel = Seq(1).toDF("__x").select(
         timestamp_micros(lit(sentinelTs)).as("ts"), lit(0.0).as("value"),
         lit(sentinelTs).as("__ord"))
-      val dir = java.nio.file.Files.createTempDirectory("smoke-replay").toString
+      val dir = tempDir("smoke-replay")
       graft.streaming.StreamReplay.replayAppend(ev, "__ord",
           s"$dir/stage", slices = 5,
           queryName = s"smoke_tumble_${System.nanoTime()}",
@@ -172,7 +172,7 @@ class ScaleSmokeSpec extends SparkSpec {
       import org.apache.spark.sql.types._
       val spark0 = docs.sparkSession
       val conf = graft.sources.TopicConf(
-        java.nio.file.Files.createTempDirectory("smoke-restart").toString)
+        tempDir("smoke-restart"))
       val feed = docs.select(col("doc_id"),
         length(col("text")).cast("long").as("n_chars"))
       def newRunner(): graft.exec.StreamingStatementRunner = {
@@ -213,7 +213,7 @@ class ScaleSmokeSpec extends SparkSpec {
       val spark0 = docs.sparkSession
       import spark0.implicits._
       val conf = graft.sources.TopicConf(
-        java.nio.file.Files.createTempDirectory("smoke-merge").toString)
+        tempDir("smoke-merge"))
       val feed = docs.select(col("doc_id"),
         pmod(col("doc_id"), lit(64L)).as("grp_id"),
         length(col("text")).cast("double").as("n_chars"))
@@ -257,7 +257,7 @@ class ScaleSmokeSpec extends SparkSpec {
       import org.apache.spark.sql.types._
       val spark0 = docs.sparkSession
       val conf = graft.sources.TopicConf(
-        java.nio.file.Files.createTempDirectory("smoke-cn").toString)
+        tempDir("smoke-cn"))
       val feed = docs.select(col("doc_id"),
         length(col("text")).cast("long").as("n_chars"))
       val r = new graft.exec.StreamingStatementRunner(spark0, topicConf = Some(conf))
@@ -299,7 +299,7 @@ class ScaleSmokeSpec extends SparkSpec {
       import org.apache.spark.sql.types._
       val spark0 = docs.sparkSession
       val conf = graft.sources.TopicConf(
-        java.nio.file.Files.createTempDirectory("smoke-vs").toString)
+        tempDir("smoke-vs"))
       val r = new graft.exec.StreamingStatementRunner(spark0, topicConf = Some(conf))
       r.registerTopicSource("smoke_vs_feed", StructType(Seq(
         StructField("doc_id", LongType), StructField("val_id", LongType))))
@@ -341,7 +341,7 @@ class ScaleSmokeSpec extends SparkSpec {
       import org.apache.spark.sql.types._
       val spark0 = docs.sparkSession
       val conf = graft.sources.TopicConf(
-        java.nio.file.Files.createTempDirectory("smoke-fl").toString)
+        tempDir("smoke-fl"))
       val r = new graft.exec.StreamingStatementRunner(spark0, topicConf = Some(conf))
       r.registerTopicSource("smoke_fl_feed", StructType(Seq(
         StructField("doc_id", LongType), StructField("n_chars", LongType),
@@ -385,7 +385,7 @@ class ScaleSmokeSpec extends SparkSpec {
       import org.apache.spark.sql.types._
       val spark0 = docs.sparkSession
       val conf = graft.sources.TopicConf(
-        java.nio.file.Files.createTempDirectory("smoke-rj").toString)
+        tempDir("smoke-rj"))
       val r = new graft.exec.StreamingStatementRunner(spark0, topicConf = Some(conf))
       r.registerTopicSource("smoke_rj_dim_feed", StructType(Seq(
         StructField("bucket", LongType), StructField("label", StringType))))
@@ -433,7 +433,7 @@ class ScaleSmokeSpec extends SparkSpec {
       import org.apache.spark.sql.types._
       val spark0 = docs.sparkSession
       val conf = graft.sources.TopicConf(
-        java.nio.file.Files.createTempDirectory("smoke-cj").toString)
+        tempDir("smoke-cj"))
       val r = new graft.exec.StreamingStatementRunner(spark0, topicConf = Some(conf))
       r.registerTopicSource("smoke_cj_dim1_feed", StructType(Seq(
         StructField("bucket", LongType), StructField("label", StringType))))
@@ -495,7 +495,7 @@ class ScaleSmokeSpec extends SparkSpec {
       import org.apache.spark.sql.types._
       val spark0 = docs.sparkSession
       val conf = graft.sources.TopicConf(
-        java.nio.file.Files.createTempDirectory("smoke-sj").toString)
+        tempDir("smoke-sj"))
       val r = new graft.exec.StreamingStatementRunner(spark0, topicConf = Some(conf))
       r.registerTopicSource("smoke_sj_dim_feed", StructType(Seq(
         StructField("bucket", LongType), StructField("label", StringType))))

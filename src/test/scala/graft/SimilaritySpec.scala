@@ -68,7 +68,7 @@ class SimilaritySpec extends SparkSpec {
   test("persisted IVF index: identical results to the inline form; scan prunes to probed partitions") {
     val emb = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
     val queries = emb.where($"vec_id" < 10)
-    val dir = java.nio.file.Files.createTempDirectory("graft-ivf-idx").toString
+    val dir = tempDir("graft-ivf-idx")
     Similarity.buildIvfIndex(emb, "vec_id", "embedding", dir, nCentroids = 16)
     val indexed = Similarity.ivfKnnIndexed(spark, dir, queries, "vec_id", "embedding",
       k = 5, nProbe = 6)

@@ -23,4 +23,17 @@ trait SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
     // session is shared across suites; do not stop it here
     super.afterAll()
   }
+
+  /** A fresh temp dir for a spec's topics, checkpoints or state. */
+  def tempDir(prefix: String): String = SparkSpec.tempDir(prefix)
+}
+
+object SparkSpec {
+  /** One root per test JVM for every spec's temp dirs, deleted with its
+    * contents when the JVM exits — a suite run leaves none behind. */
+  private lazy val suiteRoot =
+    java.nio.file.Paths.get(graft.sources.Fs.tempDirDeletedAtExit("graft-suite"))
+
+  def tempDir(prefix: String): String =
+    java.nio.file.Files.createTempDirectory(suiteRoot, prefix).toString
 }

@@ -51,7 +51,7 @@ class StateBackendSpec extends SparkSpec {
       lit(StreamReplay.SentinelKey).as("event_type"),
       lit(hi + 3L * 3600000000L).as("__ord"))
     def replay(name: String): Set[(Long, String, Long)] = {
-      val dir = java.nio.file.Files.createTempDirectory(s"graft-$name").toString
+      val dir = tempDir(s"graft-$name")
       StreamReplay.replayAppend(ev, "__ord", dir, slices = 4,
           queryName = name, sentinel = Some(sentinel)) { s =>
         s.withWatermark("ts", "0 seconds")

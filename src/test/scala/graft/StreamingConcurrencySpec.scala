@@ -47,7 +47,7 @@ class StreamingConcurrencySpec extends SparkSpec {
     Seq("k1").toDS().map { v => ConcurrencyProbe.meet("b"); v }.toDF("k")
       .createOrReplaceTempView("cc_dim_b")
     val conf = TopicConf(
-      java.nio.file.Files.createTempDirectory("graft-cc").toString)
+      tempDir("graft-cc"))
     val r = new StreamingStatementRunner(spark, topicConf = Some(conf))
     // stream × dim × GROUP BY — the merge-on-write path, the heaviest
     // per-batch body (the one the old global lock hurt most)

@@ -84,7 +84,7 @@ class StreamingKillFuzzSpec extends SparkSpec {
   private def soakLeft(tag: String, seed: Int): Unit = {
     val rnd = new scala.util.Random(seed)
     val conf = TopicConf(
-      java.nio.file.Files.createTempDirectory(s"graft-$tag").toString)
+      tempDir(s"graft-$tag"))
     def mk(): StreamingStatementRunner = {
       val r = new StreamingStatementRunner(spark, topicConf = Some(conf))
       r.registerTopicSource(s"${tag}_dim_feed", StructType(Seq(
@@ -165,7 +165,7 @@ class StreamingKillFuzzSpec extends SparkSpec {
   private def soakChain(tag: String, seed: Int): Unit = {
     val rnd = new scala.util.Random(seed)
     val conf = TopicConf(
-      java.nio.file.Files.createTempDirectory(s"graft-$tag").toString)
+      tempDir(s"graft-$tag"))
     def mk(): StreamingStatementRunner = {
       val r = new StreamingStatementRunner(spark, topicConf = Some(conf))
       r.registerTopicSource(s"${tag}_dim_feed", StructType(Seq(
@@ -267,7 +267,7 @@ class StreamingKillFuzzSpec extends SparkSpec {
   private def soakS6(tag: String, seed: Int): Unit = {
     val rnd = new scala.util.Random(seed)
     val conf = TopicConf(
-      java.nio.file.Files.createTempDirectory(s"graft-$tag").toString)
+      tempDir(s"graft-$tag"))
     def mk(): StreamingStatementRunner = {
       val r = new StreamingStatementRunner(spark, topicConf = Some(conf))
       r.registerTopicSource(s"${tag}_cust_feed", StructType(Seq(

@@ -18,7 +18,7 @@ class StreamingRestartSpec extends SparkSpec {
   import spark.implicits._
 
   private def freshConf() = TopicConf(
-    java.nio.file.Files.createTempDirectory("graft-restart").toString)
+    tempDir("graft-restart"))
 
   private val evSchema = StructType(Seq(
     StructField("user_id", LongType), StructField("v", DoubleType)))

@@ -433,7 +433,7 @@ class StreamingSpec extends SparkSpec {
     val emb = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
     val gen1 = emb.where($"vec_id" % 2 === 0)
     val gen2 = emb.where($"vec_id" % 2 === 1 && $"vec_id" < 40)
-    val dir = java.nio.file.Files.createTempDirectory("graft-ivf-grow").toString
+    val dir = tempDir("graft-ivf-grow")
     Similarity.buildIvfIndex(gen1, "vec_id", "embedding", dir, nCentroids = 16)
     spark.sql("DROP TABLE IF EXISTS ivf_idx_grow")
     // the external table points at the CURRENT generation dir (round
@@ -503,7 +503,7 @@ class StreamingSpec extends SparkSpec {
     import graft.operators.Similarity
     import graft.streaming.StreamingSimilarity
     val emb = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
-    val dir = java.nio.file.Files.createTempDirectory("graft-ivf-stream").toString
+    val dir = tempDir("graft-ivf-stream")
     Similarity.buildIvfIndex(emb, "vec_id", "embedding", dir, nCentroids = 16)
     val arrivals = emb.where($"vec_id".isin(3L, 17L))
       .select($"vec_id", $"embedding").as[(Long, Seq[Float])].collect()

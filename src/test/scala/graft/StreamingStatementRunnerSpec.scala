@@ -225,7 +225,7 @@ class StreamingStatementRunnerSpec extends SparkSpec {
     intercept[IllegalArgumentException](parseWatermarkDelay("ts", "other_col - INTERVAL '5' SECOND"))
 
     val conf = TopicConf(
-      java.nio.file.Files.createTempDirectory("graft-wm-delay").toString)
+      tempDir("graft-wm-delay"))
     val t0 = java.sql.Timestamp.valueOf("2024-01-01 00:00:00")
     def ts(secs: Int) = new java.sql.Timestamp(t0.getTime + secs * 1000L)
     Topics.appendJson(Seq(("a", ts(0)), ("b", ts(10)), ("c", ts(30)))
@@ -295,7 +295,7 @@ class StreamingStatementRunnerSpec extends SparkSpec {
     import graft.sources.{TopicConf, Topics}
     import org.apache.spark.sql.types._
     val conf = TopicConf(
-      java.nio.file.Files.createTempDirectory("graft-promote").toString)
+      tempDir("graft-promote"))
     val r = new StreamingStatementRunner(spark, topicConf = Some(conf))
     r.registerTopicSource("promo_src", StructType(Seq(
       StructField("k", StringType), StructField("v", IntegerType))))
@@ -326,7 +326,7 @@ class StreamingStatementRunnerSpec extends SparkSpec {
     import graft.sources.{TopicConf, Topics}
     import org.apache.spark.sql.types._
     val conf = TopicConf(
-      java.nio.file.Files.createTempDirectory("graft-promote-join").toString)
+      tempDir("graft-promote-join"))
     val r = new StreamingStatementRunner(spark, topicConf = Some(conf))
     r.registerTopicSource("pj_orders_src", StructType(Seq(
       StructField("order_id", IntegerType), StructField("cust", StringType))))
@@ -360,7 +360,7 @@ class StreamingStatementRunnerSpec extends SparkSpec {
     import graft.sources.{TopicConf, Topics}
     import org.apache.spark.sql.types._
     val conf = TopicConf(
-      java.nio.file.Files.createTempDirectory("graft-promote-guard").toString)
+      tempDir("graft-promote-guard"))
     val r = new StreamingStatementRunner(spark, topicConf = Some(conf))
     r.registerTopicSource("pg_src", StructType(Seq(
       StructField("k", StringType), StructField("v", IntegerType))))

@@ -21,7 +21,7 @@ class TopicPipelineSpec extends SparkSpec {
 
   test("S1–S6 over file topics: upsert materialization + snapshot join, distributed sinks") {
     val conf = TopicConf(
-      java.nio.file.Files.createTempDirectory("graft-topic-spec").toString)
+      tempDir("graft-topic-spec"))
 
     // ---- datagen-producer analog: seed the source topics (epoch 1)
     Topics.appendJson(Seq(
@@ -96,7 +96,7 @@ class TopicPipelineSpec extends SparkSpec {
 
   test("stream-stream interval join through the runner: two watermarked topic sources") {
     val conf = TopicConf(
-      java.nio.file.Files.createTempDirectory("graft-topic-ss").toString)
+      tempDir("graft-topic-ss"))
     val t0 = java.sql.Timestamp.valueOf("2024-01-01 00:00:00")
     def ts(mins: Int) = new java.sql.Timestamp(t0.getTime + mins * 60000L)
     Topics.appendJson(Seq(("o1", "c1", ts(0)), ("o2", "c2", ts(120)))
@@ -136,7 +136,7 @@ class TopicPipelineSpec extends SparkSpec {
 
   test("S7/S8: key metadata column retyped at scan; S9/S10: watermark on $rowtime") {
     val conf = TopicConf(
-      java.nio.file.Files.createTempDirectory("graft-topic-keys").toString)
+      tempDir("graft-topic-keys"))
     // a compacted clickstream topic: real message keys (user_id)
     Topics.appendJson(
       Seq(("u1", "/home", 5), ("u2", "/cart", 9))
@@ -187,7 +187,7 @@ class TopicPipelineSpec extends SparkSpec {
     import graft.sources.StubKafkaBroker
     StubKafkaBroker.reset()
     val fileConf = TopicConf(
-      java.nio.file.Files.createTempDirectory("graft-transport-parity").toString)
+      tempDir("graft-transport-parity"))
     val kafkaConf = TopicConf(root = "", transport = TopicConf.Kafka,
       bootstrapServers = "stub-broker:9092")
     val rows = Seq(("a1", "x", 1)).toDF("id", "payload", "n")

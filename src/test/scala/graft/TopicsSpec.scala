@@ -1,16 +1,18 @@
 package graft
 
+import graft.exec.StreamingStatementRunner
 import graft.sources.{AvroCodec, TopicConf, Topics}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
 /** The Kafka-shaped topic layer in isolation: record shape, offset
   * ordering, JSON type-fidelity round trips, compacted-topic tombstone
-  * encoding, and the Avro value path. */
+  * encoding, the Avro value path, and the topic manifest that batch
+  * reads plan from. */
 class TopicsSpec extends SparkSpec {
   import spark.implicits._
 
-  private def freshConf() = TopicConf(graft.sources.Fs.tempDirDeletedAtExit("graft-topics-spec"))
+  private def freshConf() = TopicConf(tempDir("graft-topics-spec"))
 
   test("records carry the exact Kafka source shape; offsets are monotone per partition") {
     val conf = freshConf()
@@ -117,5 +119,151 @@ class TopicsSpec extends SparkSpec {
     val rows = decoded.select(col("key").cast("string"), col("url"), col("dwell"))
       .as[(String, String, Int)].collect().toSet
     assert(rows === Set(("u1", "/home", 5), ("u2", "/cart", 9)))
+  }
+
+  test("appendJson offsets equal the epoch·2^40 | partition·2^27 | row packing (golden, epochs 0, 1, 2^22)") {
+    val conf = freshConf()
+    // range(0, 5) over 2 slices: n = 0, 1 in partition 0; n = 2, 3, 4 in partition 1
+    val rows = spark.range(0, 5, 1, 2).toDF("n")
+    val golden = Map(
+      0L -> Seq(0L, 1L, 134217728L, 134217729L, 134217730L),
+      1L -> Seq(1099511627776L, 1099511627777L, 1099645845504L, 1099645845505L,
+        1099645845506L),
+      (1L << 22) -> Seq(4611686018427387904L, 4611686018427387905L,
+        4611686018561605632L, 4611686018561605633L, 4611686018561605634L))
+    golden.keys.foreach(e => Topics.appendJson(rows, "tg", conf, Nil, epoch = e))
+    val recs = Topics.decodeJson(Topics.readBatchRecords(spark, "tg", conf),
+      StructType(Seq(StructField("n", LongType))))
+    golden.foreach { case (e, offsets) =>
+      val lo = e << 40
+      val got = recs.where(col("__offset") >= lo && col("__offset") < lo + (1L << 40))
+        .select("n", "__offset").as[(Long, Long)].collect().sortBy(_._1).map(_._2).toSeq
+      assert(got === offsets, s"epoch $e offsets")
+      // one write, one instant: every row of the epoch carries the same timestamp
+      assert(Topics.readBatchRecords(spark, "tg", conf)
+        .where(col("offset") >= lo && col("offset") < lo + (1L << 40))
+        .select("timestamp").distinct().count() === 1, s"epoch $e timestamps")
+    }
+  }
+
+  test("manifest: a frame built once sees every later committed epoch") {
+    val conf = freshConf()
+    val recs = Topics.readBatchRecords(spark, "m1", conf)
+    assert(recs.count() === 0)
+    (1 to 3).foreach { e =>
+      Topics.appendJson(Seq(("a", e)).toDF("k", "n"), "m1", conf, Nil, epoch = e)
+      assert(recs.count() === e, s"after epoch $e")
+    }
+  }
+
+  private def recordFiles(conf: TopicConf, topic: String): Set[String] =
+    new java.io.File(s"${conf.root}/$topic").listFiles().map(_.getName)
+      .filter(n => !n.startsWith(".") && !n.startsWith("_")).toSet
+
+  private def planned(recs: org.apache.spark.sql.DataFrame): Set[String] =
+    recs.inputFiles.map(f => new org.apache.hadoop.fs.Path(f).getName).toSet
+
+  test("manifest: a crash-retried epoch replaces the first attempt's files (delete, then rename)") {
+    val conf = freshConf()
+    val recs = Topics.readBatchRecords(spark, "m2", conf)
+    // the first attempt writes epoch 1 from several partitions …
+    Topics.appendJson(Seq(("a", 1), ("b", 2), ("c", 3), ("d", 4)).toDF("k", "n")
+      .repartition(2), "m2", conf, Nil, epoch = 1)
+    Topics.appendJson(Seq(("e", 5)).toDF("k", "n"), "m2", conf, Nil, epoch = 2)
+    assert(planned(recs).count(_.startsWith("e1-")) === 2)
+    // … the retry recomputes it into one: the stale e1-p1 must go too
+    Topics.appendJson(Seq(("a", 1), ("b", 2), ("c", 3), ("d", 4)).toDF("k", "n")
+      .coalesce(1), "m2", conf, Nil, epoch = 1)
+    assert(recs.count() === 5)
+    assert(planned(recs) === recordFiles(conf, "m2"))
+    assert(planned(recs).count(_.startsWith("e1-")) === 1)
+  }
+
+  test("manifest: a compact swap publishes the compacted files to an existing frame") {
+    val conf = freshConf()
+    val recs = Topics.readBatchRecords(spark, "m3", conf)
+    Topics.appendJson(Seq(("k1", "v1", "+I"), ("k2", "v2", "+I"))
+      .toDF("id", "payload", "__op"), "m3", conf, Seq("id"), epoch = 1)
+    Topics.appendJson(Seq(("k1", "v1b", "+I"), ("k2", "x", "-D"))
+      .toDF("id", "payload", "__op"), "m3", conf, Seq("id"), epoch = 2)
+    assert(recs.count() === 4)
+    Topics.compact(spark, "m3", conf)
+    assert(recs.count() === 1)
+    assert(planned(recs) === recordFiles(conf, "m3"))
+    Topics.appendJson(Seq(("k3", "v3", "+I")).toDF("id", "payload", "__op"),
+      "m3", conf, Seq("id"), epoch = 3)
+    assert(recs.count() === 2)
+  }
+
+  test("manifest: a plain write.parquet into the topic directory is picked up") {
+    val conf = freshConf()
+    Topics.appendJson(Seq(("a", 1)).toDF("k", "n"), "m4", conf, Nil, epoch = 1)
+    Topics.appendJson(Seq(("b", 2), ("c", 3)).toDF("k", "n"), "m4src", conf, Nil, epoch = 1)
+    val recs = Topics.readBatchRecords(spark, "m4", conf)
+    assert(recs.count() === 1)
+    // a writer that does not go through Topics (another process, a tool)
+    Topics.readBatchRecords(spark, "m4src", conf)
+      .write.mode("append").parquet(s"${conf.root}/m4")
+    assert(recs.count() === 3)
+    assert(planned(recs) === recordFiles(conf, "m4"))
+  }
+
+  private val kv = StructType(Seq(StructField("k", StringType), StructField("n", IntegerType)))
+
+  test("manifest: a second runner on the same root follows the first's commits; a restart hydrates through CREATE TABLE") {
+    val conf = freshConf()
+    val script = "CREATE TABLE mf_out (k STRING, n INT); INSERT INTO mf_out SELECT k, n FROM mf_src"
+    val first = new StreamingStatementRunner(spark, topicConf = Some(conf))
+    first.registerTopicSource("mf_src", kv)
+    first.runScript(script)
+    Topics.appendJson(Seq(("a", 1)).toDF("k", "n"), "mf_src", conf, Nil, epoch = 1)
+    first.processAllAvailable()
+    // a second runner, in a session of its own, registers the table once
+    val other = spark.newSession()
+    val second = new StreamingStatementRunner(other, topicConf = Some(conf))
+    second.run("CREATE TABLE mf_out (k STRING, n INT)")
+    assert(other.table("mf_out").count() === 1)
+    Topics.appendJson(Seq(("b", 2)).toDF("k", "n"), "mf_src", conf, Nil, epoch = 2)
+    first.processAllAvailable()
+    assert(other.table("mf_out").count() === 2, "the second runner's view must follow the first's sink")
+    first.stopAll()
+    // restart on the same root: CREATE TABLE hydrates before any new input
+    val restarted = new StreamingStatementRunner(spark, topicConf = Some(conf))
+    restarted.registerTopicSource("mf_src", kv)
+    restarted.runScript(script)
+    try {
+      assert(spark.table("mf_out").as[(String, Int)].collect().toSet === Set(("a", 1), ("b", 2)))
+      Topics.appendJson(Seq(("c", 3)).toDF("k", "n"), "mf_src", conf, Nil, epoch = 3)
+      restarted.processAllAvailable()
+      assert(spark.table("mf_out").as[(String, Int)].collect().toSet ===
+        Set(("a", 1), ("b", 2), ("c", 3)))
+      assert(spark.table("mf_out").count() === 3, "a restart must resume, not replay")
+    } finally restarted.stopAll()
+  }
+
+  test("manifest: a view shadowed by withViewShadow is restored and then kept across commits") {
+    val conf = freshConf()
+    val r = new StreamingStatementRunner(spark, topicConf = Some(conf))
+    r.registerTopicSource("sh_src", kv)
+    // the promoted INSERT shadows sh_a with its changelog stream while it starts
+    r.runScript("""
+      CREATE TABLE sh_a (k STRING, n INT, PRIMARY KEY (k) NOT ENFORCED) DISTRIBUTED INTO 1 BUCKETS;
+      INSERT INTO sh_a SELECT k, n FROM sh_src;
+      CREATE TABLE sh_b (k STRING, doubled INT);
+      INSERT INTO sh_b SELECT k, n * 2 FROM sh_a""")
+    try {
+      assert(!spark.table("sh_a").isStreaming, "the shadow must be restored to the table's state")
+      Topics.appendJson(Seq(("a", 1), ("b", 2)).toDF("k", "n"), "sh_src", conf, Nil, epoch = 1)
+      r.processAllAvailable()
+      val entry = spark.sessionState.catalog.getRawTempView("sh_a")
+      assert(entry.isDefined)
+      Topics.appendJson(Seq(("a", 3)).toDF("k", "n"), "sh_src", conf, Nil, epoch = 2)
+      r.processAllAvailable()
+      assert(spark.table("sh_a").as[(String, Int)].collect().toMap === Map("a" -> 3, "b" -> 2))
+      assert(spark.sessionState.catalog.getRawTempView("sh_a").get eq entry.get,
+        "an unchanged view must not be registered again per micro-batch")
+      assert(spark.table("sh_b").as[(String, Int)].collect().sorted.toSeq ===
+        Seq(("a", 2), ("a", 6), ("b", 4)))
+    } finally r.stopAll()
   }
 }
