@@ -28,7 +28,10 @@ final case class TableMeta(
     watermarkCol: Option[String] = None,
     watermarkDelay: String = "0 seconds",
     columnCasts: Map[String, String] = Map.empty, // ALTER ... MODIFY (col TYPE)
-    options: Map[String, String] = Map.empty)
+    options: Map[String, String] = Map.empty) {
+  /** Upsert semantics hold only with a key to fold revisions by. */
+  def isUpsert: Boolean = changelogMode == ChangelogMode.Upsert && primaryKey.nonEmpty
+}
 
 /** In-memory catalog with environment/cluster scoping: every reference
   * statement runs under a session `sql.current-catalog` (environment) /
