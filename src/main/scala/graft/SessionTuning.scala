@@ -32,4 +32,17 @@ object SessionTuning {
       sys.env.getOrElse("SPARK_GRAFT_AQE_PARALLELISM_FIRST", "false"))
     .config("spark.sql.adaptive.advisoryPartitionSizeInBytes",
       sys.env.getOrElse("SPARK_GRAFT_AQE_ADVISORY", "64m"))
+
+  /** The dev mains' session: [[tuned]] on `local[cores]` with one shuffle
+    * partition per core, AQE on, UTC, and the fixture's timestamp
+    * reading (nanos as long, no NTZ inference). */
+  def session(cores: String): SparkSession = tuned(SparkSession.builder())
+    .master(s"local[$cores]")
+    .config("spark.sql.shuffle.partitions", cores)
+    .config("spark.sql.session.timeZone", "UTC")
+    .config("spark.sql.adaptive.enabled", "true")
+    .config("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
+    .config("spark.sql.legacy.parquet.nanosAsLong", "true")
+    .config("spark.ui.enabled", "false")
+    .getOrCreate()
 }

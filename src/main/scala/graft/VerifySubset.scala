@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Dev-loop companion to [[Verify]]: dump ONLY the named queries (plus
   * a fresh `oracle_sql.json`) into an existing verify output dir, so a
   * `dev/check.py <sf> <out> <names...>` subset re-check doesn't pay a
@@ -24,15 +22,7 @@ object VerifySubset {
     val sfDir = args(0)
     val outDir = args(1)
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SessionTuning.tuned(SparkSession.builder())
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = SessionTuning.session(cpus)
     spark.sparkContext.setLogLevel("WARN")
     new java.io.File(outDir).mkdirs()
     args.drop(2).foreach { name =>

@@ -3,7 +3,7 @@ package graft.exec
 import graft.catalog.{ChangelogMode, InMemoryCatalog, TableMeta}
 import graft.ddl.StatementPreprocessor
 import graft.ddl.StatementPreprocessor._
-import graft.exec.StreamingStatementRunner.{RegularShape, Term}
+import graft.exec.StreamingStatementRunner.{Driver, RegularShape, Route, Term}
 import graft.operators.ChangelogOps
 import graft.sources.{Fs, TopicConf, Topics}
 import org.apache.spark.sql.{DataFrame, SparkSession}
@@ -78,13 +78,10 @@ final class StreamingStatementRunner(spark: SparkSession,
     * so it folded q249's self-join pair explosion onto ONE task
     * (A/B at sf0.1: 14.1 s → 20.0 s min-of-3). The session-global
     * advisory-size coalescing (`graft.SessionTuning`) stays in force
-    * for batch analytics, where input bytes do predict work. Sys-prop
-    * parameterized like `graft.replay.statePartitions` — a production
-    * deploy that widens statePartitions can flip this to inherit. */
+    * for batch analytics, where input bytes do predict work. */
   private def microBatchSession(): SparkSession = {
     val s = org.apache.spark.sql.GraftSqlBridge.cloneSession(spark)
-    s.conf.set("spark.sql.adaptive.coalescePartitions.parallelismFirst",
-      sys.props.getOrElse("graft.microbatch.parallelismFirst", "true"))
+    s.conf.set("spark.sql.adaptive.coalescePartitions.parallelismFirst", "true")
     s
   }
 
@@ -237,7 +234,7 @@ final class StreamingStatementRunner(spark: SparkSession,
       refreshTargetView(spark, b, meta, sunkSchema(meta, schema))
       None
 
-    case InsertInto(target, targetCols, select) =>
+    case insert @ InsertInto(target, _, _) =>
       val meta = catalog.getOrCreate(target)
       val binding = bind(target)
       // an earlier statement promoted-consumes this target → the DAG
@@ -249,8 +246,8 @@ final class StreamingStatementRunner(spark: SparkSession,
       // own batch progression, not arrival time — an older revision
       // from the statement with the larger batchId would beat a newer
       // one from the other, silently and forever. The slot is claimed
-      // ATOMICALLY here and RELEASED if any later guard or the query
-      // start throws (ADVICE r14: the old check-then-act pair raced
+      // ATOMICALLY here and RELEASED if routing or the query start
+      // throws (ADVICE r14: the old check-then-act pair raced
       // across two synchronized blocks, and a failed start leaked the
       // claim forever). It is deliberately NOT released on stopAll: a
       // re-declared statement would draw a fresh stmtId whose epochs
@@ -267,179 +264,7 @@ final class StreamingStatementRunner(spark: SparkSession,
             "UNION the feeds into one INSERT, or target separate tables.")
         upsertWriters += binding.qualified
       }
-      val q = try {
-        val refs = tableRefs(select)
-        val streamRefs = refs.filter(r =>
-          spark.catalog.tableExists(r) && spark.table(r).isStreaming)
-        // base shape (driverless): is there ANY aggregate anywhere?
-        // Routing then refines per driver — contexts confined to
-        // subqueries/CTEs that never touch the driver are dim-side
-        // work the per-batch re-resolution evaluates correctly and
-        // need no folding (ADVICE r14).
-        val baseShape = aggregateContexts(select)
-        def shapeFor(driver: String): AggShape =
-          if (baseShape.contexts == 0) baseShape
-          else aggregateContexts(select, Some(driver))
-        def requireFoldableShape(driver: String, shape: AggShape): Unit =
-          require(shape.topIsAggregate && shape.contexts == 1,
-            s"INSERT INTO $target: an aggregate hidden in a subquery, CTE, or " +
-              s"nested under other operators over $driver would see raw " +
-              "per-batch rows — only a top-level GROUP BY select folds " +
-              "continuously on this path.")
-        def mergeExternal(driverRef: String, shape: AggShape): StreamingQuery = {
-          requireFoldableShape(driverRef, shape)
-          val orig = spark.table(driverRef)
-          startMergeAgg(binding, meta, targetCols, select, driverRef,
-            orig.withColumn(RetractAggRewrite.SignCol, lit(1)), restoreTo = orig,
-            mayRetract = false)
-        }
-        // dim refs that are UPSERT topic tables: their revisions can
-        // retract previously-joined rows — with a RETRACT-mode target
-        // that is the user declaring Flink regular-join semantics.
-        // RETRACT-mode refs are excluded ON EITHER SIDE: a retract
-        // table's __op tag rides its records as DATA through chained
-        // joins (the r13 contract, RetractAggSpec "chained JOIN" —
-        // every revision record crosses the join once, tag intact), so
-        // its sign channel cannot double as regular-join content
-        def changelogDims(driver: String, all: Seq[String]): Boolean = {
-          def metaOf(r: String): Option[TableMeta] =
-            if (synchronized { topicOf.contains(catalog.qualify(r)) })
-              Some(catalog.getOrCreate(r))
-            else None
-          val anyRetract = all.exists(r =>
-            metaOf(r).exists(_.changelogMode == ChangelogMode.Retract))
-          !anyRetract && all.exists(r => r != driver && metaOf(r).exists(_.isUpsert))
-        }
-        // the regular-join routing decision for a retract target:
-        // applicable shape + at least one upsert dim among the outer
-        // refs PLUS the subquery-referenced refs (an EXISTS blocklist
-        // is a dim even though it never appears in FROM)
-        def regularJoinPlan(driver: String): Option[(Seq[String], RegularShape)] =
-          if (meta.changelogMode != ChangelogMode.Retract) None
-          else StreamingStatementRunner.regularJoinShape(
-              spark.sessionState.sqlParser, select).flatMap { shape =>
-            // OCCURRENCE view names, not table names (round 18): a
-            // multi-use table contributes one side per FROM site. The
-            // changelog check runs on the REAL tables behind them.
-            val all = (shape.sideOrder ++ shape.subRefs.toSeq.sorted).distinct
-            if (all.size > 1 && changelogDims(driver, all.map(shape.realOf).distinct))
-              Some((all, shape))
-            else None
-          }
-        if (streamRefs.nonEmpty) {
-          if (streamRefs.size == 1 && refs.size > 1) {
-            val shape = shapeFor(streamRefs.head)
-            if (shape.contexts > 0)
-              // stream + dims + GROUP BY (round 14): per-batch signed
-              // deltas through the snapshot join, merged onto the
-              // target's prior state — a continuous aggregate, never
-              // batch-local partials
-              mergeExternal(streamRefs.head, shape)
-            else regularJoinPlan(streamRefs.head) match {
-              case Some((all, rj)) =>
-                // retract target + changelog dims = Flink's REGULAR join:
-                // dim revisions retract + re-emit past enrichments
-                startRegularJoin(binding, meta, targetCols, select, all, rj)
-              case None =>
-                // any aggregate lives in a dim-only subquery/CTE — the
-                // snapshot join re-resolves the select per batch, so the
-                // dim-side aggregate evaluates at current dim state
-                startSnapshotJoin(binding, meta, targetCols, select, streamRefs.head)
-            }
-          } else if (streamRefs.size == 1 && (baseShape.hasDistinctAgg ||
-              baseShape.hasArrivalAgg || baseShape.hasCollectAgg)) {
-            val shape = shapeFor(streamRefs.head)
-            if (shape.hasDistinctAgg || shape.hasArrivalAgg || shape.hasCollectAgg)
-              // exact DISTINCT (Spark has no native streaming distinct),
-              // first/last (native streaming First/Last is shuffle-order
-              // nondeterministic — they need arrival order, which an
-              // EXTERNAL stream does not carry: mergeExternal's ordAttr
-              // lookup rejects with the clear no-arrival-order message,
-              // ADVICE r15), and listagg (Collect-based, multiset-only)
-              // all route to the merge path, never to startDirect
-              mergeExternal(streamRefs.head, shape)
-            else startDirect(binding, meta, targetCols, select)
-          } else {
-            // single stream whose only dims live in SUBQUERY predicates
-            // (EXISTS/NOT EXISTS/IN blocklists) — still the regular
-            // join: a blocklist revision retracts/re-admits past rows
-            val rj =
-              if (streamRefs.size == 1 && refs.size == 1 &&
-                  shapeFor(streamRefs.head).contexts == 0)
-                regularJoinPlan(streamRefs.head)
-              else None
-            rj match {
-              case Some((all, shape)) =>
-                startRegularJoin(binding, meta, targetCols, select, all, shape)
-              case None => startDirect(binding, meta, targetCols, select)
-            }
-          }
-        } else {
-          // TABLE-TO-TABLE continuous INSERT (Flink's everyday shape,
-          // beyond the reference's corpus): no external streaming
-          // source in FROM — promote the FIRST runner-created
-          // topic-backed ref to a CHANGELOG STREAM of its topic and
-          // drive the statement with it; any remaining refs join at
-          // their current materialized state per micro-batch (the
-          // same regular-join approximation as the S6 path).
-          val promotable = refs.filter(r => synchronized {
-            topicOf.contains(catalog.qualify(r))
-          })
-          require(promotable.nonEmpty,
-            s"INSERT INTO $target: select references no streaming source " +
-              "and no topic-backed table — a continuous INSERT needs a " +
-              "changelog to drive it; run a one-off query as a plain SELECT")
-          val driver = promotable.head
-          promotedDrivers += catalog.qualify(driver)
-          val driverMeta = catalog.getOrCreate(driver)
-          val driverRetracts =
-            driverMeta.isUpsert || driverMeta.changelogMode == ChangelogMode.Retract
-          val shape = shapeFor(driver)
-          val hasAgg = shape.contexts > 0
-          if (hasAgg && (refs.size > 1 ||
-              (driverRetracts && shape.needsMultiset) || shape.hasDistinctAgg ||
-              shape.hasArrivalAgg || shape.hasCollectAgg)) {
-            // merge-on-write path (round 14): aggregate + join (the
-            // driver's signed revisions snapshot-join per batch into
-            // per-group DELTAS, merged onto the target's prior state),
-            // retractable min/max, argmax (max_by/min_by), first/last
-            // by arrival order (round 15 — deterministic offset order
-            // even on insert-only drivers, so they route here too),
-            // and exact DISTINCT aggregates (the per-(group, value)
-            // multiset helpers)
-            requireFoldableShape(driver, shape)
-            startMergeAgg(binding, meta, targetCols, select, driver,
-              signedChangelogStream(driver, driverMeta,
-                needProvenance = shape.hasArrivalAgg),
-              mayRetract = driverRetracts)
-          } else if (hasAgg && driverRetracts) {
-            // an aggregate over a CHANGELOG driver must fold revisions,
-            // not count them: route to the retraction-aware path —
-            // ChangelogNormalize (upsert) / the __op tag (retract)
-            // provides the sign, RetractAggRewrite folds it. Only the
-            // plain top-level GROUP BY shape is foldable; a subquery-
-            // hidden or nested aggregate would still see raw revisions,
-            // so anything else stays a loud rejection.
-            requireFoldableShape(s"changelog table $driver", shape)
-            startRetractAgg(binding, meta, targetCols, select, driver, driverMeta)
-          } else regularJoinPlan(driver) match {
-            case Some((all, rj)) =>
-              // table-to-table joined INSERT into a retract target whose
-              // dims are changelog tables (joined in FROM or referenced
-              // by a subquery predicate): the regular join — dim
-              // revisions retract + re-emit past enrichments
-              startRegularJoin(binding, meta, targetCols, select, all, rj)
-            case None =>
-              val promoted = changelogStream(driver, warnTombstones = true)
-              withViewShadow(driver, promoted) {
-                if (refs.size > 1)
-                  startSnapshotJoin(binding, meta, targetCols, select, driver)
-                else
-                  startDirect(binding, meta, targetCols, select)
-              }
-          }
-        }
-      } catch {
+      val q = try start(insert, binding, meta, route(insert)) catch {
         case t: Throwable =>
           if (meta.isUpsert) synchronized { upsertWriters -= binding.qualified }
           throw t
@@ -471,6 +296,143 @@ final class StreamingStatementRunner(spark: SparkSession,
       spark.sql(sql)
       None
   }
+
+  /** An INSERT's route, decided once at submission from its parsed
+    * select and the catalog. Pure: it builds no stream, starts no
+    * query and changes no runner state; it raises the statement's
+    * routing rejections.
+    *
+    * The DRIVER is the select's one streaming ref; with none, its first
+    * runner-created topic table, PROMOTED to a changelog stream of that
+    * table's topic (Flink's everyday table-to-table INSERT: the
+    * promoted table's own view keeps serving materialized state to
+    * every other consumer); with several, the select streams as is.
+    * Then one table over the driver's aggregate contexts (`shape`,
+    * scoped to the driver: a dim-only subquery/CTE aggregate is
+    * re-evaluated per batch by the snapshot re-resolution and needs no
+    * folding, ADVICE r14), the ref count, whether the driver's
+    * revisions retract (a promoted upsert or retract table), and the
+    * regular-join shape — first match wins:
+    *
+    *  1. an aggregate with no native streaming form (exact DISTINCT;
+    *     first/last, which fold by arrival order — an EXTERNAL stream
+    *     carries none, and the merge path rejects that loudly, ADVICE
+    *     r15; listagg/collect), an aggregate over a join, or an order
+    *     statistic over retracting revisions → [[Route.MergeAgg]];
+    *  2. any other aggregate over retracting revisions →
+    *     [[Route.RetractAgg]] (ChangelogNormalize/the `__op` tag give
+    *     the sign, RetractAggRewrite folds it);
+    *  3. any other aggregate (one ref, insert-only rows) →
+    *     [[Route.Direct]]: Spark's native streaming aggregation;
+    *  4. a retract target and at least one upsert dim among the FROM
+    *     and subquery refs (an EXISTS blocklist is a dim though it
+    *     never appears in FROM) → [[Route.RegularJoin]]: dim revisions
+    *     retract and re-emit past enrichments;
+    *  5. several refs → [[Route.SnapshotJoin]]: the dims join at their
+    *     current state, past enrichments freeze;
+    *  6. otherwise [[Route.Direct]].
+    *
+    * Both aggregate routes only take a top-level GROUP BY: a
+    * subquery-hidden or nested aggregate would see raw per-batch rows
+    * or revisions, so it is rejected here. */
+  private[graft] def route(insert: InsertInto): Route = {
+    val InsertInto(target, _, select) = insert
+    val refs = tableRefs(select)
+    val streams = refs.filter(r => spark.catalog.tableExists(r) && spark.table(r).isStreaming)
+    if (streams.size > 1) return Route.Direct(None)
+    val driver = streams.headOption.map(Driver(_, promoted = false)).getOrElse {
+      val promotable = refs.filter(isTopicTable)
+      require(promotable.nonEmpty,
+        s"INSERT INTO $target: select references no streaming source " +
+          "and no topic-backed table — a continuous INSERT needs a " +
+          "changelog to drive it; run a one-off query as a plain SELECT")
+      Driver(promotable.head, promoted = true)
+    }
+    val retracts = driver.promoted && catalog.get(driver.table).exists(m =>
+      m.isUpsert || m.changelogMode == ChangelogMode.Retract)
+    val shape = aggregateContexts(select, Some(driver.table))
+    val agg = shape.contexts > 0
+    def foldable(over: String): Unit =
+      require(shape.topIsAggregate && shape.contexts == 1,
+        s"INSERT INTO $target: an aggregate hidden in a subquery, CTE, or " +
+          s"nested under other operators over $over would see raw " +
+          "per-batch rows — only a top-level GROUP BY select folds " +
+          "continuously on this path.")
+    if (shape.hasDistinctAgg || shape.hasArrivalAgg || shape.hasCollectAgg ||
+        agg && (refs.size > 1 || retracts && shape.needsMultiset)) {
+      foldable(driver.table)
+      Route.MergeAgg(driver, mayRetract = retracts, needProvenance = shape.hasArrivalAgg)
+    } else if (agg && retracts) {
+      foldable(s"changelog table ${driver.table}")
+      Route.RetractAgg(driver.table)
+    } else if (agg) Route.Direct(Some(driver))
+    else regularJoin(target, select, driver.table).getOrElse(
+      if (refs.size > 1) Route.SnapshotJoin(driver) else Route.Direct(Some(driver)))
+  }
+
+  /** Rule 4 of [[route]]: the regular join over the select's
+    * OCCURRENCE view names (round 18: a multi-use table contributes one
+    * side per FROM site), when the target is retract-mode and a dim is
+    * an upsert topic table. RETRACT-mode refs are excluded ON EITHER
+    * SIDE: a retract table's `__op` tag rides its records as DATA
+    * through chained joins (the r13 contract, RetractAggSpec "chained
+    * JOIN" — every revision record crosses the join once, tag intact),
+    * so its sign channel cannot double as regular-join content. */
+  private def regularJoin(target: String, select: String,
+                          driver: String): Option[Route.RegularJoin] =
+    if (!catalog.get(target).exists(_.changelogMode == ChangelogMode.Retract)) None
+    else StreamingStatementRunner.regularJoinShape(
+        spark.sessionState.sqlParser, select).flatMap { shape =>
+      val all = (shape.sideOrder ++ shape.subRefs.toSeq.sorted).distinct
+      val tables = all.map(shape.realOf).distinct.filter(isTopicTable)
+        .flatMap(r => catalog.get(r).map(r -> _))
+      if (all.size > 1 && !tables.exists(_._2.changelogMode == ChangelogMode.Retract) &&
+          tables.exists { case (r, m) => r != driver && m.isUpsert })
+        Some(Route.RegularJoin(all, shape))
+      else None
+    }
+
+  /** Start the query `route` names: the executor half of an INSERT,
+    * owning every side effect routing leaves out — the promoted
+    * driver's changelog (tombstone probe included) and its
+    * out-of-order-chain bookkeeping, the signed streams the aggregate
+    * routes fold. */
+  private def start(insert: InsertInto, target: TargetBinding, meta: TableMeta,
+                    route: Route): StreamingQuery = {
+    val InsertInto(_, cols, select) = insert
+    def promote(table: String): Unit = promotedDrivers += catalog.qualify(table)
+    // a promoted driver's view reads its changelog while the plan is built
+    def overDriver(d: Driver)(body: => StreamingQuery): StreamingQuery =
+      if (!d.promoted) body
+      else {
+        promote(d.table)
+        withViewShadow(d.table, changelogStream(d.table, warnTombstones = true))(body)
+      }
+    route match {
+      case Route.Direct(None) => startDirect(target, meta, cols, select)
+      case Route.Direct(Some(d)) => overDriver(d)(startDirect(target, meta, cols, select))
+      case Route.SnapshotJoin(d) =>
+        overDriver(d)(startSnapshotJoin(target, meta, cols, select, d.table))
+      case Route.RegularJoin(sides, shape) =>
+        startRegularJoin(target, meta, cols, select, sides, shape)
+      case Route.RetractAgg(d) =>
+        promote(d)
+        startRetractAgg(target, meta, cols, select, d, catalog.getOrCreate(d))
+      case Route.MergeAgg(d, mayRetract, needProvenance) if d.promoted =>
+        promote(d.table)
+        startMergeAgg(target, meta, cols, select, d.table,
+          signedChangelogStream(d.table, catalog.getOrCreate(d.table), needProvenance),
+          mayRetract = mayRetract)
+      case Route.MergeAgg(d, _, _) =>
+        // an external stream is insert-only: every row adds
+        val orig = spark.table(d.table)
+        startMergeAgg(target, meta, cols, select, d.table,
+          orig.withColumn(RetractAggRewrite.SignCol, lit(1)), restoreTo = orig)
+    }
+  }
+
+  private def isTopicTable(ref: String): Boolean =
+    synchronized { topicOf.contains(catalog.qualify(ref)) }
 
   /** Table names a select references (pre-analysis, so shadowing views
     * per micro-batch is possible before resolution). CTE aliases are
@@ -738,14 +700,9 @@ final class StreamingStatementRunner(spark: SparkSession,
     // analyze BEFORE claiming a statement id: a rejected select must
     // not burn one of the 16 epoch slots (ADVICE r14 discipline)
     val renamed = renameTo(meta, targetCols, spark.sql(select))
-    val stmtId = nextInsertId(target)
-    renamed.writeStream.outputMode(if (meta.isUpsert) "update" else "append")
-      .queryName(queryDisplayName(target, stmtId))
-      .option("checkpointLocation", checkpointDir(target, stmtId))
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        sinkBatch(target, meta, batch, stmtId, batchId)
-        ()
-      }.start()
+    launch(target, renamed, if (meta.isUpsert) "update" else "append") { stmtId =>
+      (batch, batchId) => sinkBatch(target, meta, batch, stmtId, batchId)
+    }
   }
 
   /** Stream-to-snapshot INSERT (Flink's PROCESSING-TIME TEMPORAL join
@@ -758,29 +715,23 @@ final class StreamingStatementRunner(spark: SparkSession,
     * Flink's regular join, which retracts and re-emits them. */
   private def startSnapshotJoin(target: TargetBinding, meta: TableMeta, targetCols: Seq[String],
                                 select: String, driverRef: String): StreamingQuery = {
-    val stmtId = nextInsertId(target)
-    val stream = spark.table(driverRef)
     val dimRefs = tableRefs(select).filterNot(_ == driverRef)
     // per-statement execution session (round 17): shadows and analysis
     // live in this statement's OWN clone, so independent statements'
     // micro-batches no longer serialize on the runner lock; dim
     // freshness is PULLED from topic state before each analysis
     val sess = microBatchSession()
-    stream.writeStream.outputMode("append")
-      .queryName(queryDisplayName(target, stmtId))
-      .option("checkpointLocation", checkpointDir(target, stmtId))
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        refreshTableRefViews(sess, dimRefs)
-        // `batch` is bound to the stream's internal session — re-home
-        // it (distributed, no collect) onto the statement session the
-        // select resolves against; the shadow persists harmlessly
-        // between batches (nothing else reads this session)
-        org.apache.spark.sql.GraftSqlBridge.toSession(sess, batch)
-          .createOrReplaceTempView(driverRef)
-        val result = renameTo(meta, targetCols, sess.sql(select))
-        sinkBatch(target, meta, result, stmtId, batchId)
-        ()
-      }.start()
+    launch(target, spark.table(driverRef), "append") { stmtId => (batch, batchId) =>
+      refreshTableRefViews(sess, dimRefs)
+      // `batch` is bound to the stream's internal session — re-home
+      // it (distributed, no collect) onto the statement session the
+      // select resolves against; the shadow persists harmlessly
+      // between batches (nothing else reads this session)
+      org.apache.spark.sql.GraftSqlBridge.toSession(sess, batch)
+        .createOrReplaceTempView(driverRef)
+      val result = renameTo(meta, targetCols, sess.sql(select))
+      sinkBatch(target, meta, result, stmtId, batchId)
+    }
   }
 
   /** Flink REGULAR-JOIN INSERT — a non-aggregating join whose target
@@ -909,7 +860,7 @@ final class StreamingStatementRunner(spark: SparkSession,
         val v = spark.table(src)
         Some(Side(r, src, v.schema, v.withColumn(RetractAggRewrite.SignCol, lit(1)),
           appendOnly = true, restore = v))
-      } else if (synchronized { topicOf.contains(catalog.qualify(src)) }) {
+      } else if (isTopicTable(src)) {
         val m = catalog.getOrCreate(src)
         val declared = m.schema.getOrElse(throw new IllegalArgumentException(
           s"INSERT INTO ${target.qualified}: regular-join side $src has no declared schema"))
@@ -1277,8 +1228,6 @@ final class StreamingStatementRunner(spark: SparkSession,
     val compactThreshold: Int =
       meta.options.get("join.state.compact.threshold").map(_.trim.toInt)
         .getOrElse(64)
-    val stmtId = nextInsertId(target)
-    val stateRoot = s"${checkpointDir(target, stmtId)}/graft-join-state"
     // occurrences of the SAME table share ONE state directory (round
     // 18): their deltas are the same stream, so the per-occurrence
     // pre/post frames read identical content — writing per occurrence
@@ -1294,140 +1243,137 @@ final class StreamingStatementRunner(spark: SparkSession,
     // per-statement execution session (round 17): state reads, view
     // shadows, and term analysis all live in this statement's clone
     val stmtSession = microBatchSession()
-    // register the state-owning dirs for progressSummary sizing —
-    // occurrence sides share their owner's directory, so only owners
-    synchronized {
-      joinStateDirs(queryDisplayName(target, stmtId)) =
-        sides.zipWithIndex.collect {
-          case (s, i) if firstIdxOfSrc(s.src) == i =>
-            (s.src, s"$stateRoot/s$i", s.appendOnly)
-        }
-    }
-    union.writeStream.outputMode("append")
-      .queryName(queryDisplayName(target, stmtId))
-      .option("checkpointLocation", checkpointDir(target, stmtId))
-      .foreachBatch { (batch0: DataFrame, batchId: Long) =>
-        {
-          evalSession = stmtSession
-          // re-bind static synthetic occurrence views in THIS
-          // statement's session each batch: the real name and the
-          // occurrence name then always resolve the same snapshot
-          staticOccViews.foreach { case (r, src) =>
-            // fail loudly (ADVICE r19): a silent skip leaves r unbound
-            // (or stale from a prior batch) and the statement later
-            // dies with an unresolved-relation error naming the
-            // SYNTHETIC occurrence, hiding the real missing table
-            if (!stmtSession.catalog.tableExists(src))
-              throw new IllegalStateException(
-                s"static occurrence view '$r' cannot re-bind: source " +
-                s"table '$src' is missing from the statement session")
-            stmtSession.table(src).createOrReplaceTempView(r)
+    launch(target, union, "append") { stmtId =>
+      val stateRoot = s"${checkpointDir(target, stmtId)}/graft-join-state"
+      // register the state-owning dirs for progressSummary sizing —
+      // occurrence sides share their owner's directory, so only owners
+      synchronized {
+        joinStateDirs(queryDisplayName(target, stmtId)) =
+          sides.zipWithIndex.collect {
+            case (s, i) if firstIdxOfSrc(s.src) == i =>
+              (s.src, s"$stateRoot/s$i", s.appendOnly)
           }
-          val batch = GraftSqlBridge.toSession(stmtSession, batch0).persist()
-          // upsert sides' normalized deltas, computed once per batch
-          val normalized = scala.collection.mutable.Map.empty[Int, DataFrame]
-          try {
-            // one shuffle-free pass: fills the cache, returns side ids
-            val touched = StreamingStatementRunner.sideIds(batch)
-            if (touched.nonEmpty) {
-              val deltaRows = scala.collection.mutable.Map.empty[Int, DataFrame] ++
-                touched.map(i => i -> batch.where(col("__side") === i))
-              // per-side PRE/POST frames + pending state writes
-              val pre = new Array[DataFrame](sides.size)
-              val post = new Array[DataFrame](sides.size)
-              val writes = scala.collection.mutable.ArrayBuffer.empty[() => Unit]
-              // TTL cutoff fixed ONCE per micro-batch (ADVICE r18): a
-              // self-join's occurrence sides read the shared state dir
-              // through separate readLog calls — re-sampling the clock
-              // per call let pre(i)/pre(j) disagree on a row whose age
-              // crossed the boundary between them, so the folded batch
-              // state matched no single snapshot of the table
-              val ttlCutoff: Option[Long] =
-                ttlMs.map(System.currentTimeMillis() - _)
-              sides.zipWithIndex.foreach { case (s, i) =>
-                val owner = firstIdxOfSrc(s.src)
-                val dir = s"$stateRoot/s$owner"
-                val ownsState = owner == i
-                if (s.appendOnly) {
-                  if (ownsState) ttlMs.foreach(t => JoinState.pruneLog(stmtSession, dir, t))
-                  val logPre = JoinState.readLog(stmtSession, dir, batchId, ttlCutoff)
-                  pre(i) = decode(logPre, s)
-                  post(i) = deltaRows.get(i) match {
-                    case Some(d) =>
-                      if (ownsState) writes += { () =>
-                        JoinState.writeLog(d.select("__payload"), dir, batchId)
-                        graft.streaming.FaultInjection.point("log-written")
-                        // amortized: folds only every `threshold` batches
-                        JoinState.maybeCompact(stmtSession, dir, batchId, compactThreshold, ttlCutoff)
-                      }
-                      pre(i).unionByName(decode(d, s))
-                    case None => pre(i)
-                  }
-                } else {
-                  val (preExpl, preFolded, readGen) = JoinState.readSnapshot(stmtSession, dir, batchId)
-                  pre(i) = decode(preExpl, s)
-                  // an upsert side's raw revisions become its signed
-                  // delta here; occurrences of one table share it
-                  if (s.upsertKey.nonEmpty) deltaRows.get(i).foreach { rows =>
-                    deltaRows(i) = normalized.getOrElseUpdate(owner,
-                      normalizeUpsert(rows, preFolded, s).persist())
-                  }
-                  post(i) = deltaRows.get(i) match {
-                    case Some(d) =>
-                      val folded = JoinState.foldSnapshot(preFolded, d)
-                      if (ownsState)
-                        writes += (() => JoinState.writeSnapshot(folded, dir, batchId, readGen))
-                      decode(JoinState.explodeCnt(folded), s)
-                    case None => pre(i)
-                  }
+      }
+      (batch0, batchId) => {
+        evalSession = stmtSession
+        // re-bind static synthetic occurrence views in THIS
+        // statement's session each batch: the real name and the
+        // occurrence name then always resolve the same snapshot
+        staticOccViews.foreach { case (r, src) =>
+          // fail loudly (ADVICE r19): a silent skip leaves r unbound
+          // (or stale from a prior batch) and the statement later
+          // dies with an unresolved-relation error naming the
+          // SYNTHETIC occurrence, hiding the real missing table
+          if (!stmtSession.catalog.tableExists(src))
+            throw new IllegalStateException(
+              s"static occurrence view '$r' cannot re-bind: source " +
+              s"table '$src' is missing from the statement session")
+          stmtSession.table(src).createOrReplaceTempView(r)
+        }
+        val batch = GraftSqlBridge.toSession(stmtSession, batch0).persist()
+        // upsert sides' normalized deltas, computed once per batch
+        val normalized = scala.collection.mutable.Map.empty[Int, DataFrame]
+        try {
+          // one shuffle-free pass: fills the cache, returns side ids
+          val touched = StreamingStatementRunner.sideIds(batch)
+          if (touched.nonEmpty) {
+            val deltaRows = scala.collection.mutable.Map.empty[Int, DataFrame] ++
+              touched.map(i => i -> batch.where(col("__side") === i))
+            // per-side PRE/POST frames + pending state writes
+            val pre = new Array[DataFrame](sides.size)
+            val post = new Array[DataFrame](sides.size)
+            val writes = scala.collection.mutable.ArrayBuffer.empty[() => Unit]
+            // TTL cutoff fixed ONCE per micro-batch (ADVICE r18): a
+            // self-join's occurrence sides read the shared state dir
+            // through separate readLog calls — re-sampling the clock
+            // per call let pre(i)/pre(j) disagree on a row whose age
+            // crossed the boundary between them, so the folded batch
+            // state matched no single snapshot of the table
+            val ttlCutoff: Option[Long] =
+              ttlMs.map(System.currentTimeMillis() - _)
+            sides.zipWithIndex.foreach { case (s, i) =>
+              val owner = firstIdxOfSrc(s.src)
+              val dir = s"$stateRoot/s$owner"
+              val ownsState = owner == i
+              if (s.appendOnly) {
+                if (ownsState) ttlMs.foreach(t => JoinState.pruneLog(stmtSession, dir, t))
+                val logPre = JoinState.readLog(stmtSession, dir, batchId, ttlCutoff)
+                pre(i) = decode(logPre, s)
+                post(i) = deltaRows.get(i) match {
+                  case Some(d) =>
+                    if (ownsState) writes += { () =>
+                      JoinState.writeLog(d.select("__payload"), dir, batchId)
+                      graft.streaming.FaultInjection.point("log-written")
+                      // amortized: folds only every `threshold` batches
+                      JoinState.maybeCompact(stmtSession, dir, batchId, compactThreshold, ttlCutoff)
+                    }
+                    pre(i).unionByName(decode(d, s))
+                  case None => pre(i)
+                }
+              } else {
+                val (preExpl, preFolded, readGen) = JoinState.readSnapshot(stmtSession, dir, batchId)
+                pre(i) = decode(preExpl, s)
+                // an upsert side's raw revisions become its signed
+                // delta here; occurrences of one table share it
+                if (s.upsertKey.nonEmpty) deltaRows.get(i).foreach { rows =>
+                  deltaRows(i) = normalized.getOrElseUpdate(owner,
+                    normalizeUpsert(rows, preFolded, s).persist())
+                }
+                post(i) = deltaRows.get(i) match {
+                  case Some(d) =>
+                    val folded = JoinState.foldSnapshot(preFolded, d)
+                    if (ownsState)
+                      writes += (() => JoinState.writeSnapshot(folded, dir, batchId, readGen))
+                    decode(JoinState.explodeCnt(folded), s)
+                  case None => pre(i)
                 }
               }
-              // per-side BRACKET terms under the telescoping view
-              // discipline: side i's terms see sides j<i at PRE, j>i
-              // at POST, and side i itself at its signed delta (a delta
-              // term) or at pre(−1)/post(+1) (a bracket term) — the
-              // summed brackets equal S(post…) − S(pre…) exactly
-              val terms = sides.indices.filter(touched.contains).flatMap { i =>
-                def at(self: DataFrame, t: Term, sign: Option[Int]): DataFrame = {
-                  sides.zipWithIndex.foreach { case (sj, j) =>
-                    (if (j == i) self else if (j < i) pre(j) else post(j))
-                      .createOrReplaceTempView(sj.ref)
-                  }
-                  composedTerm(evalSelect(stmtSession), t, sign)
-                    .toDF((outNames :+ SG).toIndexedSeq: _*)
-                }
-                shape.plans(sides(i).ref).flatMap { t =>
-                  if (t.bracket) Seq(at(pre(i), t, Some(-1)), at(post(i), t, Some(1)))
-                  else Seq(at(decodeDelta(deltaRows(i), sides(i)), t, None))
-                }
-              }
-              val netted = terms.reduce(_ unionByName _)
-                .groupBy(outNames.map(c => col(s"`$c`")).toIndexedSeq: _*)
-                .agg(sum(col(SG)).as("__net")).where(col("__net") =!= 0L)
-              val recs = netted
-                .withColumn("__op", when(col("__net") > 0, lit("+I")).otherwise(lit("-D")))
-                .withColumn("__copy",
-                  explode(sequence(lit(1L), abs(col("__net")))))
-                .select((outNames.map(c => col(s"`$c`")) :+ col("__op")).toIndexedSeq: _*)
-              graft.streaming.FaultInjection.point("join-pre-sink")
-              sinkBatch(target, meta, recs, stmtId, batchId)
-              graft.streaming.FaultInjection.point("join-post-sink")
-              writes.foreach { w =>
-                w(); graft.streaming.FaultInjection.point("join-post-write")
-              }
-              graft.streaming.FaultInjection.point("join-pre-commit")
             }
-          } finally {
-            // every term shadows all sides before it resolves, so the
-            // views need not outlive the batch; left bound, they pin
-            // its plans (and each scan's Hadoop conf) until the next one
-            sides.foreach(s => stmtSession.catalog.dropTempView(s.ref))
-            normalized.values.foreach(_.unpersist())
-            batch.unpersist()
+            // per-side BRACKET terms under the telescoping view
+            // discipline: side i's terms see sides j<i at PRE, j>i
+            // at POST, and side i itself at its signed delta (a delta
+            // term) or at pre(−1)/post(+1) (a bracket term) — the
+            // summed brackets equal S(post…) − S(pre…) exactly
+            val terms = sides.indices.filter(touched.contains).flatMap { i =>
+              def at(self: DataFrame, t: Term, sign: Option[Int]): DataFrame = {
+                sides.zipWithIndex.foreach { case (sj, j) =>
+                  (if (j == i) self else if (j < i) pre(j) else post(j))
+                    .createOrReplaceTempView(sj.ref)
+                }
+                composedTerm(evalSelect(stmtSession), t, sign)
+                  .toDF((outNames :+ SG).toIndexedSeq: _*)
+              }
+              shape.plans(sides(i).ref).flatMap { t =>
+                if (t.bracket) Seq(at(pre(i), t, Some(-1)), at(post(i), t, Some(1)))
+                else Seq(at(decodeDelta(deltaRows(i), sides(i)), t, None))
+              }
+            }
+            val netted = terms.reduce(_ unionByName _)
+              .groupBy(outNames.map(c => col(s"`$c`")).toIndexedSeq: _*)
+              .agg(sum(col(SG)).as("__net")).where(col("__net") =!= 0L)
+            val recs = netted
+              .withColumn("__op", when(col("__net") > 0, lit("+I")).otherwise(lit("-D")))
+              .withColumn("__copy",
+                explode(sequence(lit(1L), abs(col("__net")))))
+              .select((outNames.map(c => col(s"`$c`")) :+ col("__op")).toIndexedSeq: _*)
+            graft.streaming.FaultInjection.point("join-pre-sink")
+            sinkBatch(target, meta, recs, stmtId, batchId)
+            graft.streaming.FaultInjection.point("join-post-sink")
+            writes.foreach { w =>
+              w(); graft.streaming.FaultInjection.point("join-post-write")
+            }
+            graft.streaming.FaultInjection.point("join-pre-commit")
           }
+        } finally {
+          // every term shadows all sides before it resolves, so the
+          // views need not outlive the batch; left bound, they pin
+          // its plans (and each scan's Hadoop conf) until the next one
+          sides.foreach(s => stmtSession.catalog.dropTempView(s.ref))
+          normalized.values.foreach(_.unpersist())
+          batch.unpersist()
         }
-        ()
-      }.start()
+      }
+    }
   }
 
   /** A runner-created table's topic read back as a CHANGELOG STREAM —
@@ -1454,10 +1400,9 @@ final class StreamingStatementRunner(spark: SparkSession,
                               keepOrd: Boolean = false): DataFrame = {
     val meta = catalog.getOrCreate(bare)
     val b = bind(bare)
-    val declared = meta.schema.getOrElse(throw new IllegalArgumentException(
-      s"table $bare: no declared schema to decode its changelog"))
     val decoded =
       if (meta.isUpsert) {
+        val (keySchema, valueSchema) = keyValueSchemas(bare, meta)
         // a merge-aggregate writer's __keep=false record IS a delete
         // to a changelog consumer (the group left the visible table) —
         // normalize it to a tombstone BEFORE the drop/observe
@@ -1475,13 +1420,22 @@ final class StreamingStatementRunner(spark: SparkSession,
             records.observe(s"graft_tombstones_dropped_${b.topic}",
               sum(when(col("value").isNull, 1L).otherwise(0L)).as("dropped"))
           else records
-        val keySchema = StructType(declared.fields.filter(f => meta.primaryKey.contains(f.name)))
-        val valueSchema = StructType(declared.fields.filterNot(f => meta.primaryKey.contains(f.name)))
         Topics.decodeJson(observed.where(col("value").isNotNull), valueSchema, Some(keySchema))
       } else Topics.decodeJson(
-        Topics.readStreamRecords(spark, b.topic, conf), sunkSchema(meta, declared))
+        Topics.readStreamRecords(spark, b.topic, conf), sunkSchema(meta, declaredSchema(bare, meta)))
     if (keepOrd) decoded.withColumnRenamed("__offset", RetractAggRewrite.OrdCol)
     else decoded.drop("__offset")
+  }
+
+  private def declaredSchema(bare: String, meta: TableMeta): StructType =
+    meta.schema.getOrElse(throw new IllegalArgumentException(
+      s"table $bare: no declared schema to decode its changelog"))
+
+  /** An upsert table's declared columns as its topic's key (PRIMARY
+    * KEY) and value record schemas. */
+  private def keyValueSchemas(bare: String, meta: TableMeta): (StructType, StructType) = {
+    val (key, value) = declaredSchema(bare, meta).fields.partition(f => meta.primaryKey.contains(f.name))
+    (StructType(key), StructType(value))
   }
 
   /** Merge-aggregate targets store a HAVING-failing group's STATE with
@@ -1504,10 +1458,7 @@ final class StreamingStatementRunner(spark: SparkSession,
     * `__ord` (the record offset, latest wins per key). A stateless
     * projection of the file scan. */
   private def upsertRevisionStream(bare: String, meta: TableMeta): DataFrame = {
-    val declared = meta.schema.getOrElse(throw new IllegalArgumentException(
-      s"table $bare: no declared schema to decode its changelog"))
-    val keySchema = StructType(declared.fields.filter(f => meta.primaryKey.contains(f.name)))
-    val valueSchema = StructType(declared.fields.filterNot(f => meta.primaryKey.contains(f.name)))
+    val (keySchema, valueSchema) = keyValueSchemas(bare, meta)
     withKeepAsTombstone(Topics.readStreamRecords(spark, bind(bare).topic, conf))
       .select(from_json(col("key").cast("string"), keySchema).as("__k"),
         from_json(col("value").cast("string"), valueSchema).as("__v"),
@@ -1527,10 +1478,7 @@ final class StreamingStatementRunner(spark: SparkSession,
                                     needProvenance: Boolean = false): DataFrame = {
     if (meta.isUpsert) {
       val b = bind(bare)
-      val declared = meta.schema.getOrElse(throw new IllegalArgumentException(
-        s"table $bare: no declared schema to decode its changelog"))
-      val keySchema = StructType(declared.fields.filter(f => meta.primaryKey.contains(f.name)))
-      val valueSchema = StructType(declared.fields.filterNot(f => meta.primaryKey.contains(f.name)))
+      val (keySchema, valueSchema) = keyValueSchemas(bare, meta)
       // __keep=false state records (merge-aggregate HAVING deletes)
       // normalize to tombstones: the downstream aggregate retracts the
       // group exactly as the batch view hides it (round 15 — the
@@ -1636,23 +1584,18 @@ final class StreamingStatementRunner(spark: SparkSession,
     val renamed = uniq.select(
       (visibleIdx.zipWithIndex.map { case (src, j) => col(s"__c$src").as(names(j)) } ++
         Seq(col(RetractAggRewrite.NetCol), col(RetractAggRewrite.KeepCol))): _*)
-    val stmtId = nextInsertId(target)
-    renamed.writeStream.outputMode("update")
-      .queryName(queryDisplayName(target, stmtId))
-      .option("checkpointLocation", checkpointDir(target, stmtId))
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        // net member count 0 ⇒ every row of the group was retracted;
-        // HAVING false ⇒ the group left the predicate — either way the
-        // group is deleted downstream (the upsert sink turns "-D" into
-        // a key tombstone), never left as a stale row
-        val withOp = batch
-          .withColumn("__op", when(col(RetractAggRewrite.NetCol) <= 0 ||
-              !coalesce(col(RetractAggRewrite.KeepCol), lit(false)), lit("-D"))
-            .otherwise(lit("+I")))
-          .drop(RetractAggRewrite.NetCol, RetractAggRewrite.KeepCol)
-        sinkBatch(target, meta, withOp, stmtId, batchId)
-        ()
-      }.start()
+    launch(target, renamed, "update") { stmtId => (batch, batchId) =>
+      // net member count 0 ⇒ every row of the group was retracted;
+      // HAVING false ⇒ the group left the predicate — either way the
+      // group is deleted downstream (the upsert sink turns "-D" into
+      // a key tombstone), never left as a stale row
+      val withOp = batch
+        .withColumn("__op", when(col(RetractAggRewrite.NetCol) <= 0 ||
+            !coalesce(col(RetractAggRewrite.KeepCol), lit(false)), lit("-D"))
+          .otherwise(lit("+I")))
+        .drop(RetractAggRewrite.NetCol, RetractAggRewrite.KeepCol)
+      sinkBatch(target, meta, withOp, stmtId, batchId)
+    }
   }
 
   /** Continuous aggregate over a SNAPSHOT-JOINED changelog driver —
@@ -1724,33 +1667,28 @@ final class StreamingStatementRunner(spark: SparkSession,
             s"equal the group-key columns (${keyNames.mkString(", ")})")
       } finally restoreRefView(driverRef, Option(restoreTo).getOrElse(signedStream))
     }
-    val stmtId = nextInsertId(target)
     val dimRefs = tableRefs(select).filterNot(_ == driverRef)
     // per-statement execution session (round 17): shadow + re-analysis
     // in this statement's own clone — no runner-wide serialization;
     // dim freshness pulled before each analysis
     val sess = microBatchSession()
-    signedStream.writeStream.outputMode("append")
-      .queryName(queryDisplayName(target, stmtId))
-      .option("checkpointLocation", checkpointDir(target, stmtId))
-      .foreachBatch { (batch0: DataFrame, batchId: Long) =>
-        refreshTableRefViews(sess, dimRefs)
-        val batch = org.apache.spark.sql.GraftSqlBridge.toSession(sess, batch0)
-        batch.createOrReplaceTempView(driverRef)
-        val analyzed = org.apache.spark.sql.GraftSqlBridge
-          .analyzedPlan(sess.sql(select))
-        val (agg, havingCond, visibleIdx) =
-          RetractAggRewrite.unwrapHaving(analyzed, driverRef)
-        val form = MergeAggRewrite(agg, driverRef, mayRetract)
-        // HAVING in the merge path: the emit row is rebuilt from
-        // merged raws, so the condition's attribute refs are
-        // re-bound BY POSITION to the emitted column names
-        val idxByExprId = agg.aggregateExpressions.map(_.exprId)
-          .zipWithIndex.toMap
-        mergeSink(sess, target, meta, targetCols, form, stmtId, batchId,
-          havingCond, visibleIdx, idxByExprId)
-        ()
-      }.start()
+    launch(target, signedStream, "append") { stmtId => (batch0, batchId) =>
+      refreshTableRefViews(sess, dimRefs)
+      val batch = org.apache.spark.sql.GraftSqlBridge.toSession(sess, batch0)
+      batch.createOrReplaceTempView(driverRef)
+      val analyzed = org.apache.spark.sql.GraftSqlBridge
+        .analyzedPlan(sess.sql(select))
+      val (agg, havingCond, visibleIdx) =
+        RetractAggRewrite.unwrapHaving(analyzed, driverRef)
+      val form = MergeAggRewrite(agg, driverRef, mayRetract)
+      // HAVING in the merge path: the emit row is rebuilt from
+      // merged raws, so the condition's attribute refs are
+      // re-bound BY POSITION to the emitted column names
+      val idxByExprId = agg.aggregateExpressions.map(_.exprId)
+        .zipWithIndex.toMap
+      mergeSink(sess, target, meta, targetCols, form, stmtId, batchId,
+        havingCond, visibleIdx, idxByExprId)
+    }
   }
 
   /** One micro-batch of the merge-on-write aggregate: compute deltas,
@@ -1829,7 +1767,7 @@ final class StreamingStatementRunner(spark: SparkSession,
       // state, write the TOUCHED pairs under this epoch, and recompute
       // the stats over LIVE values for the touched groups only
       val merged = form.valueSets.foldLeft(mergedRaws) { (acc, vs) =>
-        val stats = mergeValueSet(sess, target, keyFields, keyNames, vs, epoch, delta)
+        val stats = mergeValueSet(sess, target, keyFields, keyNames, vs, stmtId, batchId, delta)
         acc.as("m").join(stats.as("s"), keyCond("m", "s"), "left_outer")
           .select((acc.columns.map(c => col(s"m.`$c`")) ++
             stats.columns.filterNot(keyNames.contains)
@@ -1888,8 +1826,9 @@ final class StreamingStatementRunner(spark: SparkSession,
     * O(live values of touched groups), never the whole multiset. */
   private def mergeValueSet(sess: SparkSession, target: TargetBinding, keyFields: Seq[StructField],
                             keyNames: Seq[String], vs: MergeAggRewrite.ValueSet,
-                            epoch: Long, delta: DataFrame): DataFrame = {
+                            stmtId: Long, batchId: Long, delta: DataFrame): DataFrame = {
     import org.apache.spark.sql.GraftSqlBridge
+    val epoch = epochOf(target, stmtId, batchId)
     val vsTopic = s"${target.topic}__${vs.name}"
     Topics.ensureTopic(sess, conf, vsTopic)
     val vsDelta = GraftSqlBridge.ofRows(sess, vs.delta)
@@ -1917,8 +1856,10 @@ final class StreamingStatementRunner(spark: SparkSession,
         .withColumn("__op", when(col("__vsn") <= 0, lit("-D")).otherwise(lit("+I")))
         .select((keyNames.map(k => col(s"`$k`")) ++
           Seq(col("__v"), col("__vsn"), col("__op"))): _*)
+      val t0 = System.nanoTime()
       Topics.appendJson(toWrite, vsTopic, conf,
         keyCols = keyNames :+ "__v", epoch = epoch)
+      addSinkPhases(target, stmtId, SinkPhases(batchId, System.nanoTime() - t0, 0L))
       val live = m.where(col("__vsn") > 0)
       // discrete percentiles ("dsc<micros>" asc / "dsr<micros>" desc):
       // recomputed from the value-sorted (value, net-count) pairs in a
@@ -2058,10 +1999,25 @@ final class StreamingStatementRunner(spark: SparkSession,
     * anything else back to the given frame. */
   private def restoreRefView(ref: String, fallback: DataFrame): Unit = {
     if (sources.contains(ref)) refreshSourceView(ref)
-    else if (topicOf.contains(catalog.qualify(ref))) {
+    else if (isTopicTable(ref)) {
       val m = catalog.getOrCreate(ref)
       m.schema.foreach(sc => refreshTargetView(spark, bind(ref), m, sunkSchema(m, sc)))
     } else fallback.createOrReplaceTempView(ref)
+  }
+
+  /** Start `stream` as the target's long-running INSERT under a newly
+    * claimed statement id (its checkpoint and query name). `perBatch`
+    * sees the id once, before the query starts, and returns what each
+    * micro-batch runs. */
+  private def launch(target: TargetBinding, stream: DataFrame, outputMode: String)
+                    (perBatch: Long => (DataFrame, Long) => Unit): StreamingQuery = {
+    val stmtId = nextInsertId(target)
+    val each = perBatch(stmtId)
+    stream.writeStream.outputMode(outputMode)
+      .queryName(queryDisplayName(target, stmtId))
+      .option("checkpointLocation", checkpointDir(target, stmtId))
+      .foreachBatch(each)
+      .start()
   }
 
   /** Allocate an INSERT's restart-stable statement id. */
@@ -2130,8 +2086,7 @@ final class StreamingStatementRunner(spark: SparkSession,
     val t1 = System.nanoTime()
     synchronized { refreshTargetView(spark, target, meta, view.getOrElse(tagged.schema)) }
     val t2 = System.nanoTime()
-    sinkPhases.merge(queryDisplayName(target, stmtId), SinkPhases(batchId, t1 - t0, t2 - t1),
-      (prev, cur) => if (prev.batchId == cur.batchId) prev + cur else cur)
+    addSinkPhases(target, stmtId, SinkPhases(batchId, t1 - t0, t2 - t1))
   }
 
   /** A micro-batch's epoch: batch-major `batchId·2^4 + stmtId` (see
@@ -2146,13 +2101,18 @@ final class StreamingStatementRunner(spark: SparkSession,
   }
 
   /** The sink's own phases of a query's latest micro-batch, by query
-    * name: nanos in [[Topics.appendJson]] (encode, write, commit) and
-    * in the view refresh, summed over the batch's [[sinkBatch]] calls. */
+    * name: nanos in [[Topics.appendJson]] (encode, write, commit; the
+    * target's and a merge aggregate's value-multiset topics') and in the
+    * view refresh, summed over the batch's writes. */
   private final case class SinkPhases(batchId: Long, writeNs: Long, refreshNs: Long) {
     def +(o: SinkPhases): SinkPhases =
       SinkPhases(batchId, writeNs + o.writeNs, refreshNs + o.refreshNs)
   }
   private val sinkPhases = new java.util.concurrent.ConcurrentHashMap[String, SinkPhases]()
+
+  private def addSinkPhases(target: TargetBinding, stmtId: Long, phases: SinkPhases): Unit =
+    sinkPhases.merge(queryDisplayName(target, stmtId), phases,
+      (prev, cur) => if (prev.batchId == cur.batchId) prev + cur else cur)
 
   /** What a target's visible view is built from. `written` keeps only
     * the top-level names and types: the decode makes every column
@@ -2271,16 +2231,6 @@ final class StreamingStatementRunner(spark: SparkSession,
   def progressSummary: Seq[StatementProgress] = queries.toSeq.flatMap { q =>
     import scala.jdk.CollectionConverters._
     Option(q.lastProgress).map { p =>
-      // tombstones skipped by a promoted upsert driver THIS trigger
-      // (ADVICE r13: never silent) — the observe metric registered in
-      // changelogStream, keyed graft_tombstones_dropped_<topic>
-      val dropped = {
-        val om = p.observedMetrics
-        om.keySet().toArray.collect {
-          case n: String if n.startsWith("graft_tombstones_dropped_") =>
-            om.get(n).getLong(0)
-        }.sum
-      }
       // regular-join operator state (VERDICT r18 item 6): size each
       // state-owning side's directory — generations vs un-folded
       // batch dirs (compaction health), bytes, and exact footer row
@@ -2297,7 +2247,7 @@ final class StreamingStatementRunner(spark: SparkSession,
         inputRows = p.numInputRows,
         rowsPerSecond = p.processedRowsPerSecond,
         watermark = Option(p.eventTime.get("watermark")).getOrElse(""),
-        tombstonesDropped = dropped,
+        tombstonesDropped = droppedTombstones(p),
         joinState = js,
         phases = p.durationMs.asScala.map { case (k, v) => k -> v.longValue }.toMap ++
           Option(sinkPhases.get(Option(p.name).getOrElse(""))).filter(_.batchId == p.batchId)
@@ -2311,13 +2261,18 @@ final class StreamingStatementRunner(spark: SparkSession,
     * progress window (Spark retains ~100 batches) — the
     * "downstream is retaining deleted keys" alarm at a glance; the
     * per-batch figure rides [[progressSummary]]. */
-  def tombstonesDroppedRecent: Long = queries.toSeq.flatMap(_.recentProgress).map { p =>
+  def tombstonesDroppedRecent: Long =
+    queries.toSeq.flatMap(_.recentProgress).map(droppedTombstones).sum
+
+  /** Tombstones a promoted upsert driver skipped in one trigger (never
+    * silent, ADVICE r13): the `graft_tombstones_dropped_<topic>`
+    * metrics [[changelogStream]] observes. */
+  private def droppedTombstones(p: org.apache.spark.sql.streaming.StreamingQueryProgress): Long = {
     val om = p.observedMetrics
     om.keySet().toArray.collect {
-      case n: String if n.startsWith("graft_tombstones_dropped_") =>
-        om.get(n).getLong(0)
+      case n: String if n.startsWith("graft_tombstones_dropped_") => om.get(n).getLong(0)
     }.sum
-  }.sum
+  }
 }
 
 object StreamingStatementRunner {
@@ -2368,6 +2323,32 @@ object StreamingStatementRunner {
     def subRefs: Set[String] = plans.keySet -- sideOrder
     /** The real table behind an occurrence view name. */
     def realOf(ref: String): String = occBase.getOrElse(ref, ref)
+  }
+
+  /** Where an INSERT's micro-batches come from: `table` as registered
+    * (an external stream), or, when `promoted`, a runner-created table
+    * read back as its topic's changelog. */
+  private[graft] final case class Driver(table: String, promoted: Boolean)
+
+  /** How an INSERT runs: [[StreamingStatementRunner.route]]'s decision,
+    * made once at submission, as a value. */
+  private[graft] sealed trait Route
+  private[graft] object Route {
+    /** The select streams as is (over the driver's changelog when it is
+      * promoted; no driver when it reads several streams). */
+    final case class Direct(driver: Option[Driver]) extends Route
+    /** Per micro-batch the driver's rows shadow its view and the select
+      * re-resolves against the dims' current state. */
+    final case class SnapshotJoin(driver: Driver) extends Route
+    /** Flink's regular join over the `sides` occurrence views. */
+    final case class RegularJoin(sides: Seq[String], shape: RegularShape) extends Route
+    /** A GROUP BY folding a promoted changelog driver's signed revisions. */
+    final case class RetractAgg(driver: String) extends Route
+    /** A continuous aggregate merged onto the target's prior state per
+      * batch; `needProvenance`: a retract driver's rows keep their
+      * arrival order (first/last). */
+    final case class MergeAgg(driver: Driver, mayRetract: Boolean,
+                              needProvenance: Boolean) extends Route
   }
 
   /** The regular join's telescoped delta rule is exact ONLY for

@@ -123,13 +123,11 @@ object StreamReplay {
     * deltas in EVERY shuffle partition of every stateful operator —
     * at fixture scale (10³–10⁵ rows, 4–6 triggers) the session's 32
     * partitions are pure commit latency, not parallelism. A replay's
-    * stateful shuffles therefore run at `graft.replay.statePartitions`
-    * (default 4). This is a HARNESS setting: the partition count is
-    * captured in the (fresh, temp) checkpoint per replay, so it never
-    * constrains a production stream, where the session default / AQE
-    * sizing applies. */
-  private[graft] def statePartitions: Int =
-    sys.props.getOrElse("graft.replay.statePartitions", "4").toInt
+    * stateful shuffles therefore run at [[statePartitions]]. This is a
+    * HARNESS width: the partition count is captured in the (fresh,
+    * temp) checkpoint per replay, so it never constrains a production
+    * stream, where the session default / AQE sizing applies. */
+  private[graft] val statePartitions: Int = 4
 
   /** Run `body` — which starts streaming queries — with the
     * shuffle-partition conf narrowed to [[statePartitions]], restoring
